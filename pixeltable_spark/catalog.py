@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import builtins
 import contextlib
+import datetime
+import decimal
 import functools
 import json
 import os
@@ -49,7 +51,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import telemetry
+from . import telemetry, tinyplan
 from .commit_store import resolve_commit_store
 from .exceptions import (AlreadyExistsError, ConcurrencyError,
                          Error, NotFoundError)
@@ -70,6 +72,14 @@ _BKT = "_bkt"
 # hidden rename target for atomic namespace deletes (see Catalog._gc_tombstones)
 _TOMBSTONE_PFX = ".dropped-"
 SYSTEM_COLS = {_ROWID, _VMIN, _VMAX, _POS, _VVMIN, _VVMAX, _BKT}
+# an IN-list of at most this many values prunes files value by value;
+# a longer one prunes by its min/max band (nearly as selective, and the
+# per-file driver cost stays O(1))
+_IN_PRUNE_MAX = 64
+# a commit delta of at most this many distinct tuples (affected rowids
+# for views, group keys for rollups) reaches its dependents as literal
+# predicates; a larger delta takes the join path
+_DELTA_LITERAL_MAX = 1024
 
 
 @functools.lru_cache(maxsize=None)
@@ -97,6 +107,47 @@ def _bkt_col(chunk: int, n_buckets: int) -> Column:
     for every store read of every commit."""
     return F.pmod(F.floor(_ccol(_ROWID) / F.lit(chunk)),
                   F.lit(n_buckets)).cast("int")
+
+
+def _key_pred(cols: Sequence[str], keys: Sequence[tuple]) -> Column:
+    """Null-safe membership of a row's `cols` tuple in the literal
+    `keys`: a NULL key component matches NULL (group-by semantics),
+    which a plain equi-join or IN never does."""
+    if not keys:
+        return F.lit(False)
+    if len(cols) == 1:
+        c = F.col(cols[0])
+        vals = [k[0] for k in keys if k[0] is not None]
+        pred = c.isin(vals) if vals else F.lit(False)
+        return pred | c.isNull() if len(vals) < len(keys) else pred
+    terms = [functools.reduce(Column.__and__, [
+        F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, k)])
+        for k in keys]
+    while len(terms) > 1:  # balanced OR: no 1000-deep expression chain
+        terms = [terms[i] | terms[i + 1] if i + 1 < len(terms)
+                 else terms[i] for i in range(0, len(terms), 2)]
+    return terms[0]
+
+
+def _commit_scope(spark, width: Optional[int]):
+    """A commit action's tinyplan scope at `width`; None keeps the
+    session's confs (a user's DataFrame source query plans under AQE)."""
+    return (tinyplan.tiny_plan(spark, width) if width
+            else contextlib.nullcontext())
+
+
+def _literal_keys(rows, cols: Sequence[str]) -> Optional[list[tuple]]:
+    """Distinct `cols` tuples of collected delta rows, or None when a
+    value cannot be a plain SQL literal: nested types, and timestamps,
+    which collect as naive local-time datetimes that do not round-trip
+    to the same instant across a DST fold. Those keep the join."""
+    ok = (int, float, str, bool, bytes, datetime.date, decimal.Decimal)
+    tuples = [tuple(r[c] for c in cols) for r in rows]
+    if all(v is None or (isinstance(v, ok)
+                         and not isinstance(v, datetime.datetime))
+           for k in tuples for v in k):
+        return list(dict.fromkeys(tuples))
+    return None
 
 # -- Bloom-filter file skipping ---------------------------------------------
 # Per-file Bloom filters stored in the manifest alongside min/max stats:
@@ -607,61 +658,6 @@ class Catalog:
 from .localframe import local_df as _local_df  # noqa: E402
 
 
-@contextlib.contextmanager
-def _mutation_shuffle_conf(spark, n_buckets=None):
-    """Run a mutation's Spark work with AQE OFF and the shuffle width
-    pinned to the mutated table's own bucket count.
-
-    Round 11 only flipped `coalescePartitions.parallelismFirst=false`
-    here (byte-sized AQE coalescing instead of padding tiny commit
-    shuffles to defaultParallelism). Round 12 measured the remaining
-    cost of AQE itself on the commit path: every shuffle stage of every
-    commit action materializes as its OWN Spark job plus a driver
-    replanning pass (30-145 ms/job floor depending on boot) — for
-    mutation batteries that is the dominant term. A/B on the five
-    mutation-battery queries, warm, same boot: 23.3 s with AQE vs
-    18.6 s without (-20%), oracles unchanged EXACT.
-
-    The explicit width is NOT a local[32] constant — it is the table's
-    `n_buckets`, the engine's own write geometry (deployments size a
-    bucket ~ 1 GB): the COW rewrite, the rollup-maintain merge and the
-    bucket-partitioned write all land on bucket granularity anyway, so
-    pinning commit shuffles to that width matches the files the commit
-    must produce at ANY table size. What AQE would have added — skew
-    splits on the rewrite join (already broadcast by design) and byte
-    coalescing of tiny probes (now width-bounded) — is covered.
-    Reentrant (nested view/rollup maintenance keeps the OUTERMOST
-    table's settings) via a depth counter."""
-    depth = getattr(_mutation_shuffle_conf, "_depth", 0)
-    _mutation_shuffle_conf._depth = depth + 1
-    saved: list[tuple[str, str | None]] = []
-    if depth == 0:
-        confs = [("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                  "false")]
-        if n_buckets:
-            confs = [("spark.sql.adaptive.enabled", "false"),
-                     ("spark.sql.shuffle.partitions",
-                      str(max(1, int(n_buckets))))]
-        for key, val in confs:
-            try:
-                saved.append((key, spark.conf.get(key, None)))
-                spark.conf.set(key, val)
-            except Exception:  # noqa: BLE001 — conf is an optimization
-                pass
-    try:
-        yield
-    finally:
-        _mutation_shuffle_conf._depth = depth
-        for key, prev in saved:
-            try:
-                if prev is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, prev)
-            except Exception:  # noqa: BLE001
-                pass
-
-
 def _locked_mutation(fn):
     """Run a Table mutation inside the commit-store's mutation guard
     (see Table._write_lock): the posix backend serializes racing
@@ -677,10 +673,7 @@ def _locked_mutation(fn):
         attempt = 0
         while True:
             try:
-                with self._write_lock(), \
-                        _mutation_shuffle_conf(
-                            self.catalog.spark,
-                            getattr(self, "n_buckets", None)):
+                with self._write_lock():
                     return fn(self, *args, **kwargs)
             except ConcurrencyError:
                 if getattr(self, "_lock_depth", 0):
@@ -1398,38 +1391,69 @@ class Table:
                     return None
         return None
 
+    def _bucket_width(self, files: Sequence[str] = (),
+                      span: Optional[tuple] = None) -> int:
+        """Execution width of a commit action: the buckets it touches —
+        the `_bkt=` dirs of `files` plus the buckets the `_rowid` range
+        `span` = (lo, hi) maps to — clamped to [1, n_buckets]. One
+        bucket is one output file of ~bucket_chunk rows, so this is the
+        action's data volume in file units, known on the driver without
+        a job. Legacy flat files count as the whole table; the flat
+        schema-bearing marker of an empty snapshot holds no rows."""
+        n = max(1, int(self.n_buckets))
+        chunk = max(1, int(getattr(self, "bucket_chunk", 1)))
+        bkts = {self._bucket_of(f) for f in files
+                if not f.endswith("-empty.parquet")}
+        if None in bkts:
+            return n
+        if span is not None:
+            lo, hi = int(span[0]) // chunk, int(span[1]) // chunk
+            if hi - lo + 1 >= n:
+                return n
+            bkts.update(c % n for c in range(lo, hi + 1))
+        return max(1, min(len(bkts), n))
+
     def _write_snapshot_files(self, df: DataFrame,
                               preserve_partitioning: bool = False,
-                              skip_repartition: bool = False
+                              skip_repartition: bool = False,
+                              width: Optional[int] = None
                               ) -> list[str]:
         """Write `df` as NEW parquet files into the stable `_bkt=N/` layout
         (flat when unbucketed) and return their relative paths. Existing
         files are never touched; nothing becomes visible until
-        _commit_files."""
+        _commit_files.
+
+        Bucketed writes hash-partition on `_bkt` first: each bucket is
+        co-located in ONE task, so a commit writes exactly one file per
+        bucket it touches (without it every upstream task emits a file
+        per bucket it holds — tasks x buckets small files per commit,
+        each paying a footer-stats read at commit and a scan split
+        forever after). `width` is the commit action's execution width
+        from the caller (see _bucket_width: the buckets the commit
+        touches): the repartition and every other shuffle of `df`'s plan
+        run inside a tinyplan scope at that width — AQE off, one job,
+        one task per touched bucket. The width cannot change the files
+        written (a task holding several buckets still writes one file
+        per bucket dir); it only sizes the stages, so a small commit on
+        a table that sits in one bucket schedules single-task stages
+        instead of n_buckets or defaultParallelism no-op tasks, while a
+        commit touching hundreds of buckets gets that many tasks (and,
+        past the skew guard, AQE). width=None keeps the session's
+        confs: whole-table rewrites and a user's DataFrame source query
+        plan under AQE. optimize(zorder_by=...) passes
+        preserve_partitioning=True — its range-partition-on-z layout IS
+        the point and must reach the writer untouched."""
         df = self._to_file_cols(df)
         tmp = os.path.join(self._data_dir, ".tmp-" + _uuid.uuid4().hex[:8])
         partitioned = _BKT in df.columns
         if partitioned and not preserve_partitioning \
                 and not skip_repartition:
-            # co-locate each bucket in one task before the partitioned
-            # write: otherwise every upstream task emits a file per
-            # bucket it touches (tasks x buckets small files per commit
-            # — measured 58 view files from 4 commits at 4 buckets),
-            # and every extra file pays a footer-stats read at commit
-            # and a scan split forever after. Hash-partition on _bkt at
-            # the session's shuffle parallelism — NOT n_buckets: a task
-            # holding several buckets still writes one file per bucket
-            # dir, so file sizes stay ~bucket_chunk, while a 2-file
-            # mutation commit schedules 32 tasks instead of n_buckets
-            # (800-task no-op stages per tiny commit, measured at the
-            # x100 write battery). optimize(zorder_by=...) passes
-            # preserve_partitioning=True — its range-partition-on-z
-            # layout IS the point and must reach the writer untouched.
             df = df.repartition(_ccol(_BKT))
         w = df.write.mode("overwrite")
         if partitioned:
             w = w.partitionBy(_BKT)
-        w.parquet(tmp)
+        with _commit_scope(self.catalog.spark, width):
+            w.parquet(tmp)
         snap = _uuid.uuid4().hex[:12]
         moved: list[str] = []
         i = 0
@@ -1591,9 +1615,14 @@ class Table:
         """Drop files whose min/max stats prove no row can satisfy ALL of
         the (col, op, literal) conjuncts. Comparisons are null-rejecting
         and parquet min/max ignore nulls, so pruning on them is safe for
-        files that also hold nulls."""
+        files that also hold nulls. A None inside an IN-list stands for
+        the null-safe match `col IS NULL` (rollup group keys): only a
+        file whose null count is KNOWN to be zero drops it."""
         def _admits_eq(st: dict, col: str, v) -> bool:
             """Can a row with col == v exist in a file with these stats?"""
+            if v is None:
+                nc = st.get(_NULLS_PFX + col)
+                return not (nc and nc[0] == 0)
             bloom = st.get(_BLOOM_PFX + col)
             if bloom and not _bloom_might_contain(bloom, v):
                 return False
@@ -1611,7 +1640,7 @@ class Table:
         # min/max band check prunes nearly as well past ~64 values
         norm: list[tuple] = []
         for col, op, v in ranges:
-            if op == "in" and len(v) > 64:
+            if op == "in" and len(v) > _IN_PRUNE_MAX:
                 try:
                     norm.append((col, ">=", min(v)))
                     norm.append((col, "<=", max(v)))
@@ -1989,15 +2018,18 @@ class Table:
         return T.StructType(fields)
 
     def _append(self, df: DataFrame,
-                single_partition: bool = False) -> list[str]:
+                single_partition: bool = False,
+                width: Optional[int] = None) -> list[str]:
         """Add new rows: new files + manifest commit (current ∪ new).
         Returns the new files (the commit's delta). `single_partition`
         marks a frame known to be one narrow partition (literal insert):
         the bucket co-location shuffle is pointless there — one task
-        already writes exactly one file per touched bucket."""
+        already writes exactly one file per touched bucket. `width`: see
+        _write_snapshot_files (None for a user's DataFrame source)."""
         cur = self._current_files()
         new = self._write_snapshot_files(self._with_bkt(df),
-                                         skip_repartition=single_partition)
+                                         skip_repartition=single_partition,
+                                         width=width)
         if cur and len(new) == 1 and new[0].endswith("-empty.parquet"):
             # empty increment on a table that already has files: the
             # schema-bearing empty marker is only needed for EMPTY
@@ -2040,7 +2072,8 @@ class Table:
         therefore scales with files-holding-matches, never with bucket
         width or table size: a 1000-row keyed update on a 10^6-file
         table opens the handful of files the stats/blooms admit and
-        rewrites only those that matched.
+        rewrites only those that matched. The probe is one job at the
+        candidates' bucket width (see _bucket_width).
 
         `prepare(df)` must return df with a boolean `__m` column marking
         matched LIVE rows (it may join auxiliary inputs first, e.g.
@@ -2080,8 +2113,9 @@ class Table:
             # (bounded by the batch size) instead of a second job over
             # the matched files
             aggs.append(F.collect_set(F.struct(*probe_keys)).alias("__ks"))
-        probe_rows = (probe.filter(F.col("__m"))
-                      .groupBy("__file").agg(*aggs).collect())
+        with tinyplan.tiny_plan(spark, self._bucket_width(cand)):
+            probe_rows = (probe.filter(F.col("__m"))
+                          .groupBy("__file").agg(*aggs).collect())
         per_file = {r["__file"]: r["__n"] for r in probe_rows}
         keys: set = set()
         if probe_keys:
@@ -2099,15 +2133,18 @@ class Table:
             *[os.path.join(self.path, f) for f in matched]))))
         return sub, matched, n, keys
 
-    def _replace_files(self, df: DataFrame, matched: Sequence[str]
-                       ) -> list[str]:
+    def _replace_files(self, df: DataFrame, matched: Sequence[str],
+                       width: Optional[int] = None) -> list[str]:
         """Commit a file-granular mutation: write `df` (the rewritten
         content of the matched files, plus any appended row-versions) as
         new files, carry every other current file over untouched, swap
         the manifest. Returns the newly written files — the commit's
         delta, which is the ONLY place rows born or expired at this
-        version can live, so view propagation reads O(delta)."""
-        new = self._write_snapshot_files(self._with_bkt(df))
+        version can live, so view propagation reads O(delta). The COW
+        rewrite runs at `width`, by default the matched files' buckets
+        (re-versioned rows keep their `_rowid`, hence their bucket)."""
+        new = self._write_snapshot_files(
+            self._with_bkt(df), width=width or self._bucket_width(matched))
         drop = set(matched)
         self._commit_files(
             [f for f in self._current_files() if f not in drop] + new)
@@ -3291,6 +3328,11 @@ class Table:
                     c, F.col(c).cast(ct.spark_type()))
             rows = src_df
         lit_1p = False
+        # a driver-held row list is commit-path work end to end: its
+        # precheck and store write run at the width of the buckets its
+        # rowid range spans. A DataFrame/TableRef/file source is the
+        # user's query — it keeps the session's confs (AQE).
+        width = None
         if isinstance(rows, TableRef):
             src = rows.df()
         elif isinstance(rows, DataFrame):
@@ -3307,6 +3349,8 @@ class Table:
             # batch-side precheck job, the rowid window exchange and the
             # bucket repartition all collapse (see _precheck_local)
             lit_1p = getattr(src, "_pxt_1p", False)
+            width = self._bucket_width(
+                span=(self.next_rowid, self.next_rowid + len(rows) - 1))
         missing = [c for c in self.schema if c not in src.columns]
         for c in missing:
             if not self.schema[c].nullable:
@@ -3317,10 +3361,15 @@ class Table:
         if lit_1p:
             counts, pk_ranges = self._precheck_local(rows)
         if counts is None:
-            counts, pk_ranges = self._insert_precheck(src)
+            with _commit_scope(spark, width):
+                counts, pk_ranges = self._insert_precheck(src)
         if self.primary_key and \
                 os.environ.get("PXT_SPARK_ENFORCE_PK", "1") != "0":
-            self._enforce_pk_unique(src, pk_ranges)
+            # the collision probe also reads the table's live keys:
+            # sized by the buckets the table holds, not the batch's
+            with _commit_scope(spark, width and self._bucket_width(
+                    self._current_files())):
+                self._enforce_pk_unique(src, pk_ranges)
 
         new_version = self.version + 1
         t0 = time.time()
@@ -3359,7 +3408,8 @@ class Table:
         slice_df = slice_df.select(*[f.name for f in self._store_schema().fields])
         self._pending_version = new_version
         self._pending_next_rowid = self.next_rowid + n
-        new_files = self._append(slice_df, single_partition=lit_1p)
+        new_files = self._append(slice_df, single_partition=lit_1p,
+                                 width=width)
         if obs is not None:
             num_excs = int(sum(v or 0 for v in obs.get.values()))
         self.version = new_version
@@ -3660,6 +3710,7 @@ class Table:
                     "pass if_not_exists='ignore' or 'insert'")
         inserts = missing if if_not_exists == "insert" else []
         ins_df = None
+        ins_span = None
         n_new = 0
         if inserts:
             for i, r in enumerate(inserts):
@@ -3679,6 +3730,7 @@ class Table:
             ins_df = ins_df.select(
                 *[f.name for f in self._store_schema().fields])
             self._pending_next_rowid = self.next_rowid + n_new
+            ins_span = (self.next_rowid, self.next_rowid + n_new - 1)
         new_files: list[str] = []
         if sub is not None:
             expired = sub.withColumn(
@@ -3699,10 +3751,14 @@ class Table:
             if ins_df is not None:
                 out = out.unionByName(self._with_bkt(ins_df))
             self._pending_version = new_version
-            new_files = self._replace_files(out, matched_files)
+            # upserted rows extend the rewrite past the matched buckets
+            kw = ({"width": self._bucket_width(matched_files, ins_span)}
+                  if ins_span else {})
+            new_files = self._replace_files(out, matched_files, **kw)
         elif ins_df is not None:
             self._pending_version = new_version
-            new_files = self._append(ins_df)
+            new_files = self._append(ins_df,
+                                     width=self._bucket_width(span=ins_span))
         self.version = new_version
         self.next_rowid += n_new
         self._log("batch_update", rows=n + n_new)
@@ -4083,7 +4139,7 @@ class Table:
         read of the whole store — one less probe job per dependent."""
         if not self._views:
             return
-        src = None
+        src = rows = bounds = None
         if delta_files:
             rs = self._reader_schema()
             rd = (self.catalog.spark.read.schema(rs) if rs is not None
@@ -4092,8 +4148,10 @@ class Table:
                 *[os.path.join(self.path, f) for f in delta_files]))
             vcol = _VVMIN if isinstance(self, View) else _VMIN
             src = raw.filter(F.col(vcol) == self.version)
+            rows = self._collect_delta(src, delta_files, insert=True)
+            bounds = self._bounds_from_stats(delta_files)
         for v in self._views:
-            v._load_increment(delta_src=src)
+            v._load_increment(delta_src=src, delta_rows=rows, bounds=bounds)
 
     def _propagate_refresh(self) -> None:
         for v in self._views:
@@ -4123,6 +4181,12 @@ class Table:
         else:  # no data changed at this version: nothing to propagate,
             src = self._store_df().limit(0)  # but views still bump
         changed = src.filter((_ccol(_VMIN) == v) | (_ccol(_VMAX) == v))
+        self._fan_out_changes(changed, delta_files)
+
+    def _fan_out_changes(self, changed: DataFrame,
+                         delta_files: Optional[Sequence[str]]) -> None:
+        """Hand one commit's changed rows (born or expired at this
+        version) to every dependent's _apply_base_update."""
         affected = changed.select(_ROWID).distinct()
         # the affected-rowid BOUNDS (used by every dependent's view-file
         # probe pruning) come free from the delta files' footer stats,
@@ -4132,9 +4196,36 @@ class Table:
         # affected bounds (carried-over rows widen them), and ranges only
         # prune, so looser is still correct.
         bounds = self._bounds_from_stats(delta_files) if delta_files else None
+        # delta_files == []: nothing changed, every dependent's literal
+        # delta is empty; None (no delta files known): the join paths
+        rows = (self._collect_delta(changed, delta_files, insert=False)
+                if delta_files else None if delta_files is None else [])
         for view in self._views:
             view._apply_base_update(affected, delta_src=changed,
-                                    bounds=bounds)
+                                    bounds=bounds, delta_rows=rows)
+
+    def _collect_delta(self, delta: DataFrame, files: Sequence[str],
+                       insert: bool) -> Optional[list]:
+        """The commit delta's distinct tuples over the columns the
+        dependents key on (View: `_rowid` of changed rows; Rollup: its
+        group columns), collected ONCE per base commit for all of them,
+        in ONE bounded job at the delta files' bucket width. coalesce(1)
+        before the limit keeps the take to one task — a bare
+        limit().collect() rescans 1, then 4, then 11 partitions, a job
+        each. None when no dependent needs it, or the delta exceeds
+        _DELTA_LITERAL_MAX (dependents then take their join paths)."""
+        cols: list[str] = []
+        for v in self._views:
+            for c in v._delta_key_cols(insert):
+                if c not in cols:
+                    cols.append(c)
+        if not cols or any(c not in delta.columns for c in cols):
+            return None
+        with tinyplan.tiny_plan(self.catalog.spark,
+                                self._bucket_width(files)):
+            rows = (delta.select(*cols).distinct().coalesce(1)
+                    .limit(_DELTA_LITERAL_MAX + 1).collect())
+        return rows if len(rows) <= _DELTA_LITERAL_MAX else None
 
     def _bounds_from_stats(self, files: Sequence[str]) -> Optional[tuple]:
         """(min, max) `_rowid` across `files` from the manifest's footer
@@ -4349,14 +4440,25 @@ class View(Table):
         if self.base is not None:
             self._save_view_meta()
 
+    def _delta_key_cols(self, insert: bool) -> list[str]:
+        """Columns of the base commit's delta this dependent keys its
+        maintenance on (see Table._collect_delta): an insert appends the
+        view plan over the delta itself; an update/delete re-derives the
+        changed base rowids."""
+        return [] if insert else [_ROWID]
+
     @_locked_mutation
     def _load_increment(self,
-                        delta_src: Optional[DataFrame] = None) -> None:
+                        delta_src: Optional[DataFrame] = None,
+                        delta_rows: Optional[list] = None,
+                        bounds: Optional[tuple] = None) -> None:
         """Incremental maintenance: only base rows created at the current
         base version flow through the view plan. A VIEW base versions its
         rows with the view-local interval (_vv_min), not the table one.
         `delta_src` (the base commit's newly-written rows, passed by the
-        base's propagation) short-circuits the stats-pruned re-read."""
+        base's propagation) short-circuits the stats-pruned re-read;
+        `bounds` (their `_rowid` range, from the delta files' footer
+        stats) sizes the append: view rows keep their base rowid."""
         vcol = _VVMIN if isinstance(self.base, View) else _VMIN
         bv = self.base.version
         if delta_src is not None:
@@ -4384,7 +4486,8 @@ class View(Table):
         out = out.withColumn(_VVMIN, F.lit(new_v)).withColumn(_VVMAX, F.lit(MAXV))
         # layout-aware append (partitioned by _bkt unless legacy flat dir)
         self._pending_version = new_v
-        my_new_files = self._append(out)
+        my_new_files = self._append(
+            out, width=self._bucket_width(span=bounds) if bounds else None)
         self._loaded_base_version = self.base.version
         self.version += 1
         self._carry_schema_cache()
@@ -4394,7 +4497,8 @@ class View(Table):
     @_locked_mutation
     def _apply_base_update(self, affected_rowids: DataFrame,
                            delta_src: Optional[DataFrame] = None,
-                           bounds: Optional[tuple] = None) -> None:
+                           bounds: Optional[tuple] = None,
+                           delta_rows: Optional[list] = None) -> None:
         """Incremental update/delete propagation: expire live view rows for
         the affected base ``_rowid``s, re-run the view plan over ONLY those
         base rows (as they now stand), append the results — unaffected rows
@@ -4406,7 +4510,14 @@ class View(Table):
         the delta's born-at-bv live rows, so no base re-scan or
         semi-join is needed. `bounds` (min/max affected `_rowid`,
         derived by the caller from the delta files' footer stats) skips
-        the per-propagation bounds aggregation job."""
+        the per-propagation bounds aggregation job.
+
+        `delta_rows` (the base's collected delta, see
+        Table._collect_delta) names the affected rowids as literals: the
+        view-file probe, the COW rewrite and a view base's re-scan then
+        filter on `_rowid IN (...)` — no join, no broadcast job. Without
+        it (a delta above the literal bound, or no delta files) the
+        affected-rowid frame is joined instead."""
         raw = self._read_current_raw()
         if raw is None or _VVMIN not in raw.columns:
             # legacy pre-versioning storage: no interval columns to expire —
@@ -4419,29 +4530,50 @@ class View(Table):
         # for the affected base rowids; only those files are rewritten.
         # A one-row base update touches the one or two view files whose
         # _rowid stats admit it, not a bucket, not the whole view.
-        aff = affected_rowids.withColumn("__aff", F.lit(True))
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
+        rowids = (None if delta_rows is None
+                  else sorted({r[_ROWID] for r in delta_rows}))
+        ranges: list[tuple] = []
+        if rowids is not None:
+            hit = _ccol(_ROWID).isin(rowids)
 
-        def prepare(df):
-            return (df.join(aff, on=_ROWID, how="left")
-                    .withColumn("__m", live & F.coalesce(F.col("__aff"),
-                                                         F.lit(False))))
+            def prepare(df):
+                return df.withColumn("__m", live & hit)
 
-        # the rowid bounds prune the view-file probe: chunked bucket
+            has_affected = bool(rowids)
+            if has_affected:
+                # prunes per rowid, or by the exact min/max band when long
+                ranges.append((_ROWID, "in", rowids))
+                bounds = (rowids[0], rowids[-1])
+        else:
+            aff = affected_rowids.withColumn("__aff", F.lit(True))
+
+            def prepare(df):
+                return (df.join(aff, on=_ROWID, how="left")
+                        .withColumn("__m", live & F.coalesce(
+                            F.col("__aff"), F.lit(False)))
+                        .drop("__aff"))
+
+            # bounds normally arrive from the caller (footer stats of
+            # the base commit's delta files — no job); the aggregation
+            # is the fallback for foreign-handle refresh paths
+            if bounds is None:
+                b = affected_rowids.agg(F.min(_ROWID), F.max(_ROWID)).first()
+                if b is not None and b[0] is not None:
+                    bounds = (int(b[0]), int(b[1]))
+            has_affected = bounds is not None
+            if has_affected:
+                ranges = [(_ROWID, ">=", bounds[0]),
+                          (_ROWID, "<=", bounds[1])]
+        # the rowid ranges prune the view-file probe: chunked bucket
         # assignment makes per-file _rowid ranges near-disjoint, so a
         # narrow base change opens only the view files that can hold
-        # those rowids. Bounds normally arrive from the caller (footer
-        # stats of the base commit's delta files — no job); the
-        # aggregation is the fallback for foreign-handle refresh paths.
-        if bounds is None:
-            b = affected_rowids.agg(F.min(_ROWID), F.max(_ROWID)).first()
-            if b is not None and b[0] is not None:
-                bounds = (int(b[0]), int(b[1]))
-        has_affected = bounds is not None
-        ranges = ([(_ROWID, ">=", bounds[0]),
-                   (_ROWID, "<=", bounds[1])] if has_affected else [])
-        sub, matched_files, _n, _pk = self._mutation_subset(
-            prepare, ranges, live_col=_VVMAX)
+        # those rowids
+        sub = None
+        matched_files: list[str] = []
+        if has_affected:
+            sub, matched_files, _n, _pk = self._mutation_subset(
+                prepare, ranges, live_col=_VVMAX)
         # deleted base rows simply produce no replacement view rows
         if has_affected and delta_src is not None \
                 and not isinstance(self.base, View):
@@ -4453,18 +4585,21 @@ class View(Table):
             base_rows = delta_src.filter(
                 (_ccol(_VMIN) == bv) & (_ccol(_VMAX) > bv))
         else:
-            # fallback: stats-pruned base re-scan semi-joined on the
-            # affected rowids (foreign refresh / view bases)
+            # fallback: base re-scan restricted to the affected rowids
+            # (foreign refresh / view bases)
             base_live = self.base.df()
-            if has_affected and not isinstance(self.base, View):
+            if has_affected and bounds is not None \
+                    and not isinstance(self.base, View):
                 bv = self.base.version
                 base_live = self.base._store_df(
                     [(_VMIN, "<=", bv), (_VMAX, ">", bv),
                      (_ROWID, ">=", bounds[0]),
                      (_ROWID, "<=", bounds[1])]).filter(
                     _vis_pred(bv))
-            base_rows = base_live.join(affected_rowids, on=_ROWID,
-                                       how="left_semi")
+            base_rows = (base_live.filter(_ccol(_ROWID).isin(rowids))
+                         if rowids is not None else
+                         base_live.join(affected_rowids, on=_ROWID,
+                                        how="left_semi"))
         out = (self._view_plan(base_rows)
                .withColumn(_VVMIN, F.lit(new_v))
                .withColumn(_VVMAX, F.lit(MAXV)))
@@ -4473,25 +4608,30 @@ class View(Table):
         if sub is not None:
             expired = self._with_bkt(sub.withColumn(
                 _VVMAX, F.when(F.col("__m"), F.lit(new_v))
-                         .otherwise(_ccol(_VVMAX))).drop("__aff", "__m"))
+                         .otherwise(_ccol(_VVMAX))).drop("__m"))
             my_new_files = self._replace_files(
-                expired.unionByName(self._with_bkt(out)), matched_files)
+                expired.unionByName(self._with_bkt(out)), matched_files,
+                width=self._bucket_width(matched_files, bounds))
         elif has_affected:
             # no existing view rows to expire, but affected base rows may
             # newly satisfy the view predicate: pure append
-            my_new_files = self._append(out)
+            my_new_files = self._append(
+                out, width=self._bucket_width(span=bounds)
+                if bounds is not None else None)
         self._loaded_base_version = self.base.version
         self.version = new_v
         self._carry_schema_cache()
         self._save_view_meta()
         if self._views:
+            # this view's commit is the base commit of its children: its
+            # own delta files hold every view row born or expired here
             my_delta = self._delta_scan(my_new_files)
-            for child in self._views:
-                # children key on the SAME base rowid space, so the
-                # caller's bounds stay valid for their probes
-                child._apply_base_update(affected_rowids,
-                                         delta_src=my_delta,
-                                         bounds=bounds)
+            if my_delta is not None:
+                self._fan_out_changes(my_delta, my_new_files)
+            else:
+                for child in self._views:
+                    child._apply_base_update(affected_rowids,
+                                             bounds=bounds)
 
     def _delta_scan(self, new_files: Sequence[str]
                     ) -> Optional[DataFrame]:
@@ -4710,16 +4850,22 @@ class Rollup(View):
             return out
         return out.withColumn(_ROWID, self._group_rowid())
 
+    def _delta_key_cols(self, insert: bool) -> list[str]:
+        return list(self.group_cols)
+
     @_locked_mutation
     def _load_increment(self,
-                        delta_src: Optional[DataFrame] = None) -> None:
+                        delta_src: Optional[DataFrame] = None,
+                        delta_rows: Optional[list] = None,
+                        bounds: Optional[tuple] = None) -> None:
         """Insert propagation: the new base slice's group keys select
-        the groups to recompute — O(delta) key discovery. `delta_src`
-        (the base commit's born rows, passed by the base) makes that
-        literal: one scan of the commit's new files. Without it, the
-        born rows re-derive through a stats-pruned read of the base
-        store. A VIEW base versions its rows with the view-local
-        interval."""
+        the groups to recompute — O(delta) key discovery. `delta_rows`
+        (the base commit's collected delta) already holds them as
+        literals; `delta_src` (the base commit's born rows, passed by
+        the base) makes discovery one scan of the commit's new files.
+        Without either, the born rows re-derive through a stats-pruned
+        read of the base store. A VIEW base versions its rows with the
+        view-local interval."""
         bv = self.base.version
         if delta_src is not None:
             new_rows = delta_src
@@ -4733,18 +4879,20 @@ class Rollup(View):
             new_rows = self.base._store_df(
                 [(_VMIN, "==", bv), (_VMAX, ">", bv)]).filter(
                 _vis_pred(bv))
-        keys = new_rows.select(*self.group_cols).distinct()
-        self._maintain(keys)
+        self._maintain(new_rows.select(*self.group_cols).distinct(),
+                       delta_rows)
 
     @_locked_mutation
     def _apply_base_update(self, affected_rowids: DataFrame,
                            delta_src: Optional[DataFrame] = None,
-                           bounds: Optional[tuple] = None) -> None:
+                           bounds: Optional[tuple] = None,
+                           delta_rows: Optional[list] = None) -> None:
         """Update/delete propagation: affected groups are the union of
         the changed rows' PRE-mutation keys (rows expired at bv — their
         old column values ride the expired row-versions) and POST-
-        mutation keys (rows born at bv). With `delta_src` (the base
-        commit's newly-written rows — the only place rows born or
+        mutation keys (rows born at bv). `delta_rows` (the base commit's
+        collected delta) holds both as literals. With `delta_src` (the
+        base commit's newly-written rows — the only place rows born or
         expired at bv can live) both key sets come from ONE O(delta)
         scan: no semi-joins against the full base, no bv−1 read.
         Without it, fall back to the two-sided semi-join (now ∪ prev
@@ -4753,8 +4901,8 @@ class Rollup(View):
         just not incremental)."""
         bv = self.base.version
         if delta_src is not None:
-            keys = delta_src.select(*self.group_cols).distinct()
-            self._maintain(keys)
+            self._maintain(delta_src.select(*self.group_cols).distinct(),
+                           delta_rows)
             return
         if isinstance(self.base, View):
             try:
@@ -4779,36 +4927,54 @@ class Rollup(View):
                 .distinct())
         self._maintain(keys)
 
-    def _maintain(self, keys_df: DataFrame) -> None:
+    def _maintain(self, keys_df: DataFrame,
+                  delta_rows: Optional[list] = None) -> None:
         """Shared incremental step: expire the affected groups' live
         rollup rows (file-granular COW via the same two-pass probe as
         table mutations), re-aggregate exactly those groups from the
         base's live rows, append the fresh rows at the new version.
 
-        Scale shape: a small delta (≤ 64 affected groups — the common
-        point/range mutation) collects its keys driver-side and prunes
-        BOTH sides with them — the rollup-file probe by per-group
-        in-list admission and the base re-scan by the keys' min/max
-        band (effective when the group column correlates with insert
-        order, e.g. time buckets; the stats can only admit more, never
-        lie). Wider deltas fall back to the probe's column-pruned scan
-        of the rollup (O(groups), not O(base)) and a full base
-        live-scan filtered by the semi-join."""
+        Scale shape: a small delta (≤ _DELTA_LITERAL_MAX affected groups
+        — the common point/range mutation) is read as literal keys:
+        from `delta_rows` when the base already collected its delta,
+        else from `keys_df` in one bounded job. Both sides then filter on a
+        null-safe key predicate — no join, no broadcast job — and prune
+        with the keys: the rollup-file probe by per-group in-list
+        admission, the base re-scan by the keys' min/max band
+        (effective when the group column correlates with insert order,
+        e.g. time buckets; the stats can only admit more, never lie).
+        The rewrite and write run at the key count's width. Wider
+        deltas fall back to a null-safe join of the keys frame: the
+        probe's column-pruned scan of the rollup (O(groups), not
+        O(base)) and a full base live-scan filtered by the semi-join.
+
+        A NULL group key is a group like any other: both paths match it
+        null-safely, so its rollup row is refreshed like the rest."""
         raw = self._read_current_raw()
         if raw is None or _VVMIN not in raw.columns:
             self._full_refresh()
             self._propagate_refresh()
             return
         new_v = self.version + 1
-        key_rows = keys_df.limit(65).collect()
-        few = len(key_rows) <= 64
+        rows = delta_rows
+        if rows is None:
+            rows = (keys_df.coalesce(1).limit(_DELTA_LITERAL_MAX + 1)
+                    .collect())
+        key_rows = (_literal_keys(rows, self.group_cols)
+                    if len(rows) <= _DELTA_LITERAL_MAX else None)
+        live = _vis_pred(self.version, _VVMIN, _VVMAX)
         ranges: list[tuple] = []
         base_ranges: list[tuple] = []
-        if few and key_rows:
-            keys_df = _local_df(self.catalog.spark,
-                                key_rows, keys_df.schema)
-            for g in self.group_cols:
-                vals = [r[g] for r in key_rows]
+        width = None
+        if key_rows is not None:
+            pred = _key_pred(self.group_cols, key_rows)
+            # the collected key count = the rollup rows recomputed, in
+            # bucket files' worth of rows (1 for any literal delta of a
+            # chunked rollup)
+            chunk = max(1, int(self.bucket_chunk))
+            width = max(1, min(self.n_buckets, -(-len(key_rows) // chunk)))
+            for i, g in enumerate(self.group_cols):
+                vals = list(dict.fromkeys(k[i] for k in key_rows))
                 ranges.append((g, "in", vals))
                 try:
                     if vals and None not in vals:
@@ -4816,16 +4982,34 @@ class Rollup(View):
                                         (g, "<=", builtins.max(vals))]
                 except TypeError:
                     pass  # unorderable group values: no band pruning
-        aff = keys_df.withColumn("__aff", F.lit(True))
-        live = _vis_pred(self.version, _VVMIN, _VVMAX)
 
-        def prepare(df):
-            return (df.join(aff, on=self.group_cols, how="left")
-                    .withColumn("__m", live & F.coalesce(F.col("__aff"),
-                                                         F.lit(False))))
+            def prepare(df):
+                return df.withColumn("__m", live & pred)
 
-        sub, matched_files, _n, _pk = self._mutation_subset(
-            prepare, ranges, live_col=_VVMAX)
+            def affected(df):
+                return df.filter(pred)
+        else:
+            k = keys_df.select(*[F.col(g).alias(f"__k{i}")
+                                 for i, g in enumerate(self.group_cols)])
+            on = functools.reduce(Column.__and__, [
+                F.col(g).eqNullSafe(F.col(f"__k{i}"))
+                for i, g in enumerate(self.group_cols)])
+            aff = k.withColumn("__aff", F.lit(True))
+
+            def prepare(df):
+                return (df.join(aff, on=on, how="left")
+                        .withColumn("__m", live & F.coalesce(
+                            F.col("__aff"), F.lit(False)))
+                        .drop("__aff", *k.columns))
+
+            def affected(df):
+                return df.join(k, on=on, how="left_semi")
+
+        sub = None
+        matched_files: list[str] = []
+        if key_rows != []:
+            sub, matched_files, _n, _pk = self._mutation_subset(
+                prepare, ranges, live_col=_VVMAX)
         if base_ranges and not isinstance(self.base, View):
             bv = self.base.version
             base_live = self.base._store_df(
@@ -4833,23 +5017,22 @@ class Rollup(View):
             ).filter(_vis_pred(bv))
         else:
             base_live = self.base.df()
-        base_rows = base_live.join(
-            keys_df, on=self.group_cols, how="left_semi")
-        out = (self._view_plan(base_rows)
+        out = (self._view_plan(affected(base_live))
                .withColumn(_VVMIN, F.lit(new_v))
                .withColumn(_VVMAX, F.lit(MAXV)))
         self._pending_version = new_v
         if sub is not None:
             expired = self._with_bkt(sub.withColumn(
                 _VVMAX, F.when(F.col("__m"), F.lit(new_v))
-                         .otherwise(_ccol(_VVMAX))).drop("__aff", "__m"))
+                         .otherwise(_ccol(_VVMAX))).drop("__m"))
             self._replace_files(
-                expired.unionByName(self._with_bkt(out)), matched_files)
+                expired.unionByName(self._with_bkt(out)), matched_files,
+                width=width)
         else:
             # no existing rollup rows for these groups: pure append
             # (brand-new groups); an empty key set still bumps the
             # version (a no-op propagation is a commit, view parity)
-            self._append(out)
+            self._append(out, width=width)
         self._loaded_base_version = self.base.version
         self.version = new_v
         self._carry_schema_cache()

@@ -228,3 +228,136 @@ class TestRollupOverView:
         assert state() == scratch()
         t.delete(t.ref().g == "g2")
         assert state() == scratch()
+
+
+def _nulls_last(row):
+    return tuple((v is None, v if v is not None else 0) for v in row)
+
+
+class TestNullGroupKeys:
+    """A NULL group key is one group (SQL GROUP BY semantics). Its
+    rollup row must be refreshed like any other: an equi-join never
+    matches NULL = NULL, so maintenance has to match keys null-safely."""
+
+    def _scratch(self, t, version=None):
+        df = t.df(version) if version is not None else t.df()
+        return sorted(((row["g"], row["n"], row["s"]) for row in
+                       df.groupBy("g").agg(F.count(F.lit(1)).alias("n"),
+                                           F.sum("v").alias("s"))
+                       .collect()), key=_nulls_last)
+
+    def _state(self, r, version=None):
+        df = r.df(version) if version is not None else r.df()
+        return sorted(((row["g"], row["n"], row["s"])
+                       for row in df.collect()), key=_nulls_last)
+
+    def test_null_group_matches_scratch_at_every_version(self, cat):
+        t = cat.create_table("tn", {"g": pxt.String(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"g": "a", "v": 1.0}, {"g": None, "v": 2.0},
+                  {"g": "b", "v": 3.0}])
+        r = cat.create_rollup("rn", t, ["g"], {"n": ("count", None),
+                                               "s": ("sum", "v")})
+        versions = [(t.version, r.version)]
+
+        def step():
+            assert self._state(r) == self._scratch(t)
+            versions.append((t.version, r.version))
+
+        t.insert([{"g": None, "v": 10.0}, {"g": "a", "v": 1.5}])
+        step()
+        t.update({"v": 4.0}, where=t.ref().v == 2.0)      # inside NULL
+        step()
+        t.update({"g": None}, where=t.ref().g == "b")     # into NULL
+        step()
+        t.update({"g": "c"}, where=t.ref().v == 4.0)      # out of NULL
+        step()
+        t.delete(t.ref().v == 3.0)                        # NULL shrinks
+        step()
+        assert (None, 1, 10.0) in self._state(r)
+        # the rollup time-travels: each of its versions equals the
+        # from-scratch aggregation of the base at the matching version
+        for tv, rv in versions:
+            assert self._state(r, rv) == self._scratch(t, tv)
+
+    def test_null_group_above_literal_bound(self, cat, monkeypatch):
+        """Deltas above the literal bound take the join path, which
+        must match NULL keys null-safely too."""
+        from pixeltable_spark import catalog as catmod
+        monkeypatch.setattr(catmod, "_DELTA_LITERAL_MAX", 1)
+        t = cat.create_table("tj", {"g": pxt.String(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"g": None if i % 3 == 0 else f"g{i % 3}",
+                   "v": float(i)} for i in range(30)])
+        r = cat.create_rollup("rj", t, ["g"], {"n": ("count", None),
+                                               "s": ("sum", "v")})
+        t.insert([{"g": None, "v": 100.0}, {"g": "g1", "v": 1.0}])
+        assert self._state(r) == self._scratch(t)
+        t.update({"g": None}, where=t.ref().g == "g2")
+        assert self._state(r) == self._scratch(t)
+        t.delete(t.ref().v < 12.0)
+        assert self._state(r) == self._scratch(t)
+
+    def test_timestamp_and_null_groups(self, cat):
+        """Timestamp keys are not literal-safe (naive local-time
+        datetimes), so their groups take the null-safe join path."""
+        import datetime as dt
+        day = dt.datetime(2024, 3, 10, 2, 30)
+        t = cat.create_table("tt", {"ts": pxt.Timestamp(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"ts": day, "v": 1.0}, {"ts": None, "v": 2.0}])
+        r = cat.create_rollup("rt", t, ["ts"], {"n": ("count", None),
+                                                "s": ("sum", "v")})
+
+        def scratch():
+            return sorted(((row["ts"], row["n"], row["s"]) for row in
+                           t.df().groupBy("ts").agg(
+                               F.count(F.lit(1)).alias("n"),
+                               F.sum("v").alias("s")).collect()),
+                          key=_nulls_last)
+
+        def state():
+            return sorted(((row["ts"], row["n"], row["s"])
+                           for row in r.df().collect()), key=_nulls_last)
+
+        t.insert([{"ts": None, "v": 3.0},
+                  {"ts": day + dt.timedelta(hours=1), "v": 4.0}])
+        assert state() == scratch()
+        t.update({"ts": None}, where=t.ref().v == 1.0)
+        assert state() == scratch()
+        t.delete(t.ref().v == 2.0)
+        assert state() == scratch()
+
+    def test_null_keys_never_prune_null_holding_files(self, cat):
+        """The probe's (g, "in", keys) conjunct with a NULL key keeps
+        every file that may hold NULLs — including a file holding ONLY
+        NULL keys (no min/max stats at all) — and drops only files
+        whose null count is known to be zero."""
+        prune = pxt.Table._prune_files
+        stats = {
+            "only_null": {"__nulls__g": [3, 3]},
+            "mixed": {"g": ["a", "b"], "__nulls__g": [1, 4]},
+            "no_null": {"g": ["a", "b"], "__nulls__g": [0, 4]},
+            "unknown": {},
+        }
+        files = sorted(stats)
+        assert prune(files, stats, [("g", "in", [None])]) == \
+            ["mixed", "only_null", "unknown"]
+        assert prune(files, stats, [("g", "in", ["z", None])]) == \
+            ["mixed", "only_null", "unknown"]
+        assert prune(files, stats, [("g", "in", ["a", None])]) == files
+        assert prune(files, stats, [("g", "in", ["z"])]) == \
+            ["only_null", "unknown"]
+        # on a live rollup: every file holding a NULL key survives
+        t = cat.create_table("tp", {"g": pxt.String(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"g": None, "v": 1.0}, {"g": "a", "v": 2.0}])
+        r = cat.create_rollup("rp", t, ["g"], {"n": ("count", None)})
+        t.insert([{"g": None, "v": 3.0}])
+        st = r._current_stats()
+        with_null = [f for f in r._current_files()
+                     if (st.get(f, {}).get("__nulls__g") or [1])[0] > 0]
+        assert with_null
+        kept = prune(r._current_files(), st,
+                     r._translate_ranges([("g", "in", [None])]))
+        assert set(with_null) <= set(kept)

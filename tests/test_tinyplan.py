@@ -1,14 +1,18 @@
-"""Focused battery for the round-12 tiny-plan execution mode
+"""Focused battery for the tiny-plan execution mode
 (pixeltable_spark/tinyplan.py) and its three application sites:
 connected_components' star rounds, train_kn_bigram's post-vocab
-section, and the mutation commit path (catalog._mutation_shuffle_conf).
+section, and the commit path's actions (probe, COW rewrite, view and
+rollup maintenance, store write).
 
 Pins: (1) session confs are restored after each scope, including on
-error and under nesting; (2) the scoped sections produce identical
-results to the session-default plans; (3) the mutation scope pins the
-shuffle width to the mutated table's n_buckets while active."""
+error, under nesting and with scopes racing on two threads; (2) the
+scoped sections produce identical results to the session-default
+plans; (3) commit actions run at the width of the buckets they touch;
+(4) a scope wider than the skew guard keeps AQE."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,27 +115,92 @@ def test_kn_trainer_restores_confs(spark):
     assert spark.conf.get(SHUF) == "8"
 
 
-def test_mutation_scope_uses_n_buckets_and_restores(spark, tmp_path):
+def _spy_scopes(monkeypatch, spark):
+    """Record every tiny_plan scope the engine enters (callers reach it
+    through the module attribute): (requested width, AQE and shuffle
+    width observed inside the scope)."""
+    from pixeltable_spark import tinyplan
+
+    orig = tinyplan.tiny_plan
+    seen = []
+
+    @contextmanager
+    def spy(s, nparts):
+        with orig(s, nparts):
+            seen.append((nparts, s.conf.get(AQE), s.conf.get(SHUF)))
+            yield
+
+    monkeypatch.setattr(tinyplan, "tiny_plan", spy)
+    return seen
+
+
+def test_mutation_scope_uses_bucket_width_and_restores(spark, tmp_path,
+                                                       monkeypatch):
+    """A 10-row insert into a 3-bucket table touches one bucket, so
+    every commit action (precheck, store write) runs at width 1 with
+    AQE off; the session confs come back afterwards."""
     cat = pxt.Catalog(spark, str(tmp_path))
     t = cat.create_table("t", {"k": pxt.Int(False),
                                "v": pxt.Float(True)}, n_buckets=3)
-    seen = {}
-    orig = type(t).insert.__wrapped__   # the undecorated mutation body
-
-    def spy(self, *a, **kw):
-        seen["aqe"] = spark.conf.get(AQE)
-        seen["shuf"] = spark.conf.get(SHUF)
-        return orig(self, *a, **kw)
-
-    import pixeltable_spark.catalog as catmod
-    wrapped_spy = catmod._locked_mutation(spy)
-    try:
-        type(t).insert = wrapped_spy
-        t.insert([{"k": i, "v": float(i)} for i in range(10)])
-    finally:
-        type(t).insert = catmod._locked_mutation(orig)
-    assert seen["aqe"] == "false"
-    assert seen["shuf"] == "3"          # the table's n_buckets
+    seen = _spy_scopes(monkeypatch, spark)
+    t.insert([{"k": i, "v": float(i)} for i in range(10)])
+    assert seen
+    assert all(s == (1, "false", "1") for s in seen), seen
     assert spark.conf.get(AQE) == "true"
     assert spark.conf.get(SHUF) == "8"
     assert t.df().count() == 10
+
+
+def test_skew_guard_keeps_aqe(spark):
+    wide = 2 * spark.sparkContext.defaultParallelism + 1
+    with tiny_plan(spark, wide):
+        assert spark.conf.get(AQE) == "true"
+        assert spark.conf.get(SHUF) == "8"
+
+
+def test_concurrent_stream_and_update_commits(spark, tmp_path, monkeypatch):
+    """An availableNow insert_stream (micro-batch thread) and batch
+    updates on another table (main thread) commit at the same time:
+    both land correctly, every scope ran under its own settings, and
+    the session confs end where they started."""
+    import os
+
+    from pyspark.sql import types as T
+
+    cat = pxt.Catalog(spark, str(tmp_path / "wh"))
+    a = cat.create_table("a", {"k": pxt.Int(False), "g": pxt.String(True)})
+    a.insert([{"k": 0, "g": "x"}])
+    cat.create_rollup("ra", a, ["g"], {"n": ("count", None)})
+    b = cat.create_table("b", {"k": pxt.Int(False), "v": pxt.Float(True)})
+    b.insert([{"k": i, "v": 0.0} for i in range(40)])
+    cat.create_view("vb", b, predicate=b.ref().v > 0.5)
+    src = str(tmp_path / "src")
+    schema = T.StructType([T.StructField("k", T.LongType(), False),
+                           T.StructField("g", T.StringType())])
+    for i in range(3):
+        spark.createDataFrame([(1 + 10 * i + j, "xyz"[j % 3])
+                               for j in range(10)], schema) \
+            .coalesce(1).write.mode("append").parquet(src)
+    aqe0, shuf0 = spark.conf.get(AQE), spark.conf.get(SHUF)
+    seen = _spy_scopes(monkeypatch, spark)
+    q = a.insert_stream(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(src), os.path.join(str(tmp_path), "ckpt"))
+    for i in range(4):
+        b.update({"v": float(i + 1)},
+                 where=(b.ref().k >= 10 * i) & (b.ref().k < 10 * (i + 1)))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert a.df().count() == 31
+    got = {r["g"]: r["n"] for r in cat.get_table("ra").df().collect()}
+    assert got == {"x": 13, "y": 9, "z": 9}
+    assert sorted(r["v"] for r in b.df().collect()) == \
+        [1.0] * 10 + [2.0] * 10 + [3.0] * 10 + [4.0] * 10
+    assert cat.get_table("vb").count() == 40
+    assert seen
+    guard = 2 * spark.sparkContext.defaultParallelism
+    assert all((aqe, shuf) == (("false", str(n)) if n <= guard
+                               else (aqe0, shuf0))
+               for n, aqe, shuf in seen), seen
+    assert spark.conf.get(AQE) == aqe0
+    assert spark.conf.get(SHUF) == shuf0
