@@ -78,8 +78,11 @@ SYSTEM_COLS = {_ROWID, _VMIN, _VMAX, _POS, _VVMIN, _VVMAX, _BKT}
 _IN_PRUNE_MAX = 64
 # a commit delta of at most this many distinct tuples (affected rowids
 # for views, group keys for rollups) reaches its dependents as literal
-# predicates; a larger delta takes the join path
-_DELTA_LITERAL_MAX = 1024
+# predicates; a larger delta takes the join path. Measured on one
+# update's maintenance (local Spark, 4 cores, 12k- and 120k-row bases):
+# the literal IN beats the join by 5-19% up to 384 keys and is level or
+# slower from 512 (the driver builds one literal per key)
+_DELTA_LITERAL_MAX = 256
 
 
 @functools.lru_cache(maxsize=None)
@@ -109,24 +112,25 @@ def _bkt_col(chunk: int, n_buckets: int) -> Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def _key_pred(cols: Sequence[str], keys: Sequence[tuple]) -> Column:
-    """Null-safe membership of a row's `cols` tuple in the literal
-    `keys`: a NULL key component matches NULL (group-by semantics),
-    which a plain equi-join or IN never does."""
-    if not keys:
-        return F.lit(False)
-    if len(cols) == 1:
-        c = F.col(cols[0])
-        vals = [k[0] for k in keys if k[0] is not None]
-        pred = c.isin(vals) if vals else F.lit(False)
-        return pred | c.isNull() if len(vals) < len(keys) else pred
-    terms = [functools.reduce(Column.__and__, [
-        F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, k)])
-        for k in keys]
-    while len(terms) > 1:  # balanced OR: no 1000-deep expression chain
-        terms = [terms[i] | terms[i + 1] if i + 1 < len(terms)
-                 else terms[i] for i in range(0, len(terms), 2)]
-    return terms[0]
+def _key_pred(col: str, keys: Sequence) -> Column:
+    """Null-safe membership of `col` in the literal `keys`: a NULL key
+    matches NULL (group-by semantics), which a plain equi-join or IN
+    never does."""
+    c = F.col(col)
+    vals = [k for k in keys if k is not None]
+    pred = c.isin(vals) if vals else F.lit(False)
+    return pred | c.isNull() if len(vals) < len(keys) else pred
+
+
+def _collect_bounded(spark, df: DataFrame, width: int) -> list:
+    """`df`'s distinct rows, at most _DELTA_LITERAL_MAX + 1 of them (the
+    extra row says the delta is over the literal bound), in ONE job at
+    `width`. coalesce(1) before the limit keeps the take to one task —
+    a bare limit().collect() rescans 1, then 4, then 11 partitions, a
+    job each."""
+    with tinyplan.tiny_plan(spark, width):
+        return (df.distinct().coalesce(1)
+                .limit(_DELTA_LITERAL_MAX + 1).collect())
 
 
 def _commit_scope(spark, width: Optional[int]):
@@ -148,6 +152,19 @@ def _literal_keys(rows, cols: Sequence[str]) -> Optional[list[tuple]]:
            for k in tuples for v in k):
         return list(dict.fromkeys(tuples))
     return None
+
+
+def _has_exchange(df: DataFrame) -> bool:
+    """True when `df`'s physical plan shuffles. Such a plan's output
+    partitioning is decided per action: AQE coalesces each shuffle read
+    by its map outputs' byte sizes (which column pruning changes from
+    one consumer to the next), and another thread's tinyplan scope can
+    set the width while an unscoped action plans."""
+    try:
+        return "Exchange" in df._jdf.queryExecution().executedPlan() \
+            .toString()
+    except Exception:  # noqa: BLE001 — unknown plan: assume it shuffles
+        return True
 
 # -- Bloom-filter file skipping ---------------------------------------------
 # Per-file Bloom filters stored in the manifest alongside min/max stats:
@@ -3357,6 +3374,12 @@ class Table:
                 raise ValueError(f"missing required column {c!r}")
             src = src.withColumn(c, F.lit(None).cast(self.schema[c].spark_type()))
         src = src.select(*[F.col(c).cast(self.schema[c].spark_type()) for c in self.schema])
+        if width is None and _has_exchange(src):
+            # the precheck counts rows per source partition and the write
+            # hands out _rowid offsets from those counts, in two jobs:
+            # both must read the same partitions, so a shuffled source
+            # is materialized once (a scan's partitioning is fixed)
+            src = src.localCheckpoint(eager=True)
         counts = pk_ranges = None
         if lit_1p:
             counts, pk_ranges = self._precheck_local(rows)
@@ -4208,12 +4231,10 @@ class Table:
                        insert: bool) -> Optional[list]:
         """The commit delta's distinct tuples over the columns the
         dependents key on (View: `_rowid` of changed rows; Rollup: its
-        group columns), collected ONCE per base commit for all of them,
-        in ONE bounded job at the delta files' bucket width. coalesce(1)
-        before the limit keeps the take to one task — a bare
-        limit().collect() rescans 1, then 4, then 11 partitions, a job
-        each. None when no dependent needs it, or the delta exceeds
-        _DELTA_LITERAL_MAX (dependents then take their join paths)."""
+        group columns), collected ONCE per base commit for all of them
+        (see _collect_bounded) at the delta files' bucket width. None
+        when no dependent keys on the delta; a list longer than
+        _DELTA_LITERAL_MAX sends the dependents to their join paths."""
         cols: list[str] = []
         for v in self._views:
             for c in v._delta_key_cols(insert):
@@ -4221,11 +4242,8 @@ class Table:
                     cols.append(c)
         if not cols or any(c not in delta.columns for c in cols):
             return None
-        with tinyplan.tiny_plan(self.catalog.spark,
-                                self._bucket_width(files)):
-            rows = (delta.select(*cols).distinct().coalesce(1)
-                    .limit(_DELTA_LITERAL_MAX + 1).collect())
-        return rows if len(rows) <= _DELTA_LITERAL_MAX else None
+        return _collect_bounded(self.catalog.spark, delta.select(*cols),
+                                self._bucket_width(files))
 
     def _bounds_from_stats(self, files: Sequence[str]) -> Optional[tuple]:
         """(min, max) `_rowid` across `files` from the manifest's footer
@@ -4532,6 +4550,7 @@ class View(Table):
         # _rowid stats admit it, not a bucket, not the whole view.
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
         rowids = (None if delta_rows is None
+                  or len(delta_rows) > _DELTA_LITERAL_MAX
                   else sorted({r[_ROWID] for r in delta_rows}))
         ranges: list[tuple] = []
         if rowids is not None:
@@ -4937,16 +4956,20 @@ class Rollup(View):
         Scale shape: a small delta (≤ _DELTA_LITERAL_MAX affected groups
         — the common point/range mutation) is read as literal keys:
         from `delta_rows` when the base already collected its delta,
-        else from `keys_df` in one bounded job. Both sides then filter on a
-        null-safe key predicate — no join, no broadcast job — and prune
-        with the keys: the rollup-file probe by per-group in-list
-        admission, the base re-scan by the keys' min/max band
+        else from `keys_df` in one bounded job (_collect_bounded). The
+        keys prune both sides: the rollup-file probe by per-group
+        in-list admission, the base re-scan by the keys' min/max band
         (effective when the group column correlates with insert order,
         e.g. time buckets; the stats can only admit more, never lie).
-        The rewrite and write run at the key count's width. Wider
-        deltas fall back to a null-safe join of the keys frame: the
-        probe's column-pruned scan of the rollup (O(groups), not
-        O(base)) and a full base live-scan filtered by the semi-join.
+        A single group column then matches on a null-safe IN — no join,
+        no broadcast job. Several group columns keep the null-safe join
+        of the keys frame: an OR of per-key conjunctions costs every
+        base row one comparison per key, and measured slower than the
+        join from 64 keys up. The rewrite and write run at the width of
+        the base files re-aggregated. Wider deltas take the join path
+        with no pruning: the probe's column-pruned scan of the rollup
+        (O(groups), not O(base)) and a full base live-scan filtered by
+        the semi-join, at the session's confs.
 
         A NULL group key is a group like any other: both paths match it
         null-safely, so its rollup row is refreshed like the rest."""
@@ -4958,30 +4981,26 @@ class Rollup(View):
         new_v = self.version + 1
         rows = delta_rows
         if rows is None:
-            rows = (keys_df.coalesce(1).limit(_DELTA_LITERAL_MAX + 1)
-                    .collect())
+            rows = _collect_bounded(
+                self.catalog.spark, keys_df,
+                self.base._bucket_width(self.base._current_files()))
         key_rows = (_literal_keys(rows, self.group_cols)
                     if len(rows) <= _DELTA_LITERAL_MAX else None)
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
         ranges: list[tuple] = []
         base_ranges: list[tuple] = []
-        width = None
-        if key_rows is not None:
-            pred = _key_pred(self.group_cols, key_rows)
-            # the collected key count = the rollup rows recomputed, in
-            # bucket files' worth of rows (1 for any literal delta of a
-            # chunked rollup)
-            chunk = max(1, int(self.bucket_chunk))
-            width = max(1, min(self.n_buckets, -(-len(key_rows) // chunk)))
-            for i, g in enumerate(self.group_cols):
-                vals = list(dict.fromkeys(k[i] for k in key_rows))
-                ranges.append((g, "in", vals))
-                try:
-                    if vals and None not in vals:
-                        base_ranges += [(g, ">=", builtins.min(vals)),
-                                        (g, "<=", builtins.max(vals))]
-                except TypeError:
-                    pass  # unorderable group values: no band pruning
+        for i, g in enumerate(self.group_cols if key_rows else ()):
+            vals = list(dict.fromkeys(k[i] for k in key_rows))
+            ranges.append((g, "in", vals))
+            try:
+                if None not in vals:
+                    base_ranges += [(g, ">=", builtins.min(vals)),
+                                    (g, "<=", builtins.max(vals))]
+            except TypeError:
+                pass  # unorderable group values: no band pruning
+        if key_rows is not None and (len(self.group_cols) == 1
+                                     or not key_rows):
+            pred = _key_pred(self.group_cols[0], [k[0] for k in key_rows])
 
             def prepare(df):
                 return df.withColumn("__m", live & pred)
@@ -5017,6 +5036,11 @@ class Rollup(View):
             ).filter(_vis_pred(bv))
         else:
             base_live = self.base.df()
+        # the base rows re-aggregated are the action's volume (one rollup
+        # row per group is far less); a delta over the bound keeps the
+        # session's confs
+        width = (self.base._bucket_width(base_live.inputFiles())
+                 if key_rows is not None else None)
         out = (self._view_plan(affected(base_live))
                .withColumn(_VVMIN, F.lit(new_v))
                .withColumn(_VVMAX, F.lit(MAXV)))

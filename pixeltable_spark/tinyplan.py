@@ -18,10 +18,11 @@ The width is NEVER a constant: callers derive it from facts they
 already hold, e.g. the materialized partition count of an eagerly-
 checkpointed frame (itself byte-coalesced by AQE when it materialized),
 or, on the commit path, the number of buckets the commit's files touch
-(one bucket = one output file, ~``bucket_chunk`` rows) or the number of
-rollup groups it recomputes. A commit that touches one bucket of a
-12k-row table runs its probe, rewrite and write as single-task stages;
-one touching hundreds of buckets gets that many tasks.
+(one bucket = one output file, ~``bucket_chunk`` rows), for a rollup
+the buckets of the base files it re-aggregates. A commit that touches
+one bucket of a 12k-row table runs its probe, rewrite and write as
+single-task stages; one touching hundreds of buckets gets that many
+tasks.
 
 Skew guard: a scope whose width exceeds 2x the cluster's default
 parallelism is not small, so it keeps the session's confs (AQE and its
@@ -35,7 +36,10 @@ threads (an ``insert_stream`` micro-batch thread committing while the
 main thread updates another table, serving threads) serialize; a scope
 nested on the same thread keeps the outermost settings. Work outside
 any scope on another thread still sees the scope's confs while it is
-active — only scoped sections are isolated from each other.
+active — only scoped sections are isolated from each other. Unscoped
+work that runs two jobs over one shuffled plan and needs both to see the
+same partitions must fix them first (``Table.insert`` materializes a
+shuffled DataFrame source before its precheck for this reason).
 
 Partitioning cannot change results for the sections this is applied to
 (exact-key groupBy/join/distinct pipelines, global aggregates, and

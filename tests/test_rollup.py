@@ -298,6 +298,42 @@ class TestNullGroupKeys:
         t.delete(t.ref().v < 12.0)
         assert self._state(r) == self._scratch(t)
 
+    def test_multi_column_null_groups(self, cat):
+        """Several group columns match the literal keys through the
+        null-safe join (pruned by the keys' in-lists); a NULL in either
+        column is a group of its own."""
+        t = cat.create_table("tm", {"g": pxt.String(True),
+                                    "h": pxt.Int(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"g": None if i % 4 == 0 else f"g{i % 3}",
+                   "h": None if i % 5 == 0 else i % 2, "v": float(i)}
+                  for i in range(40)])
+        r = cat.create_rollup("rm", t, ["g", "h"], {"n": ("count", None),
+                                                    "s": ("sum", "v")})
+
+        def key(x):
+            return tuple((e is None, e) for e in x)
+
+        def scratch():
+            return sorted(((row["g"], row["h"], row["n"], row["s"])
+                           for row in t.df().groupBy("g", "h").agg(
+                               F.count(F.lit(1)).alias("n"),
+                               F.sum("v").alias("s")).collect()), key=key)
+
+        def state():
+            return sorted(((row["g"], row["h"], row["n"], row["s"])
+                           for row in r.df().collect()), key=key)
+
+        t.insert([{"g": None, "h": None, "v": 100.0},
+                  {"g": "g1", "h": None, "v": 1.0}])
+        assert state() == scratch()
+        t.update({"h": None}, where=t.ref().v == 7.0)
+        assert state() == scratch()
+        t.update({"g": None}, where=t.ref().g == "g2")
+        assert state() == scratch()
+        t.delete(t.ref().v < 12.0)
+        assert state() == scratch()
+
     def test_timestamp_and_null_groups(self, cat):
         """Timestamp keys are not literal-safe (naive local-time
         datetimes), so their groups take the null-safe join path."""

@@ -204,3 +204,85 @@ def test_concurrent_stream_and_update_commits(spark, tmp_path, monkeypatch):
                for n, aqe, shuf in seen), seen
     assert spark.conf.get(AQE) == aqe0
     assert spark.conf.get(SHUF) == shuf0
+
+
+def _shuffled_source(spark, n):
+    """A join followed by a groupBy: two levels of shuffle, so its
+    output partitioning is decided per action."""
+    left = spark.range(0, n).withColumn("g", F.col("id") % 37)
+    right = (spark.range(0, 37).withColumnRenamed("id", "g")
+             .withColumn("w", F.col("g") * 2).hint("shuffle_merge"))
+    return (left.join(right, "g").groupBy("id")
+            .agg(F.sum("w").alias("w"))
+            .select(F.col("id").alias("k"), F.col("w").cast("double")
+                    .alias("v")))
+
+
+def _assert_rowids_contiguous(t, start, n):
+    ids = sorted(r["_rowid"] for r in t._store_df().filter(
+        F.col("_rowid") >= start).select("_rowid").collect())
+    assert ids == list(range(start, start + n)), ids[:20]
+
+
+def test_shuffled_source_rowids_survive_foreign_scope(spark, tmp_path,
+                                                      monkeypatch):
+    """insert(df) counts rows per source partition in its precheck and
+    hands out _rowid offsets from those counts in the write. A scope
+    another thread holds while the (unscoped) write plans changes the
+    source's shuffle width; the rowids must still be distinct and
+    contiguous."""
+    from pixeltable_spark import tinyplan
+    from pixeltable_spark.catalog import Table
+
+    cat = pxt.Catalog(spark, str(tmp_path))
+    t = cat.create_table("t", {"k": pxt.Int(False), "v": pxt.Float(True)})
+    t.insert([{"k": -1, "v": 0.0}])
+    orig = Table._append
+
+    def foreign_scope_append(self, *a, **k):
+        with tinyplan.tiny_plan(spark, 3):
+            return orig(self, *a, **k)
+
+    monkeypatch.setattr(Table, "_append", foreign_scope_append)
+    t.insert(_shuffled_source(spark, 300))
+    monkeypatch.setattr(Table, "_append", orig)
+    assert t.df().count() == 301
+    _assert_rowids_contiguous(t, 0, 301)
+
+
+def test_shuffled_source_insert_while_other_thread_commits(spark,
+                                                           tmp_path):
+    """The same source inserted while another thread commits list
+    inserts and updates to a second table: every _rowid is distinct
+    and contiguous, and both tables hold what was committed."""
+    import threading
+
+    cat = pxt.Catalog(spark, str(tmp_path))
+    t = cat.create_table("t", {"k": pxt.Int(False), "v": pxt.Float(True)})
+    o = cat.create_table("o", {"k": pxt.Int(False), "v": pxt.Float(True)})
+    stop = threading.Event()
+    errors: list = []
+
+    def other():
+        i = 0
+        try:
+            while not stop.is_set() and i < 40:
+                o.insert([{"k": i, "v": 0.0}])
+                o.update({"v": 1.0}, where=o.ref().k == i)
+                i += 1
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    th = threading.Thread(target=other)
+    th.start()
+    try:
+        for _ in range(3):
+            t.insert(_shuffled_source(spark, 300))
+    finally:
+        stop.set()
+        th.join()
+    assert not errors, errors
+    assert t.df().count() == 900
+    _assert_rowids_contiguous(t, 0, 900)
+    n = o.df().count()
+    assert n > 0 and o.df().filter(F.col("v") == 1.0).count() == n
