@@ -1948,6 +1948,20 @@ class Table:
                     except OSError:
                         pass
 
+    def _read_files(self, files: Sequence[str]) -> DataFrame:
+        """These files of this table, raw (system + user columns, no
+        visibility filter), through the read waist. Read under an
+        explicit schema whenever it is knowable: footer inference burns
+        one Spark job (~0.1 s) per read construction — measured ~30 such
+        jobs across a mutation battery. Explicit schemas are also what
+        lets retired/renamed columns read correctly (pre-drop files keep
+        their values, post-drop files surface NULLs)."""
+        rs = self._reader_schema()
+        rd = (self.catalog.spark.read.schema(rs) if rs is not None
+              else self.catalog.spark.read)
+        return self._waist_rename(
+            rd.parquet(*[os.path.join(self.path, f) for f in files]))
+
     def _read_current_raw(self, ranges: Optional[Sequence[tuple]] = None
                           ) -> Optional[DataFrame]:
         """The current snapshot as a raw DataFrame (system + user columns,
@@ -1955,15 +1969,6 @@ class Table:
         `ranges` = (col, op, literal) conjuncts for manifest-stats file
         skipping; pruning everything still returns an empty-but-typed
         scan over one file so the schema survives."""
-        spark = self.catalog.spark
-        # read under an explicit schema whenever it is knowable: footer
-        # inference burns one Spark job (~0.1 s) per read construction —
-        # measured ~30 such jobs across a mutation battery. Explicit
-        # schemas are also what lets retired/renamed columns read
-        # correctly (pre-drop files keep their values, post-drop files
-        # surface NULLs).
-        rs = self._reader_schema()
-        reader = spark.read.schema(rs) if rs is not None else spark.read
         if ranges:
             tr = self._translate_ranges(ranges)
             # segment-range pruning first: a selective scan replays only
@@ -1982,18 +1987,19 @@ class Table:
                     return None
                 # keep one file for schema; no row can match, but the
                 # caller still applies the row-level predicate
-                return self._waist_rename(
-                    reader.parquet(os.path.join(self.path, files[0]))
-                    .limit(0))
+                return self._read_files(files[:1]).limit(0)
             files = pruned
         else:
             files = self._current_files()
             if not files:
                 return None
-        out = reader.parquet(*[os.path.join(self.path, f) for f in files])
-        if rs is None:
+        inferred = self._reader_schema() is None
+        out = self._read_files(files)
+        if inferred:
+            # only views infer, and a view's columns are never renamed:
+            # the read schema is the file schema
             self._note_file_schema(out.schema)
-        return self._waist_rename(out)
+        return out
 
     def _has_data(self) -> bool:
         return bool(self._current_files())
@@ -2114,16 +2120,8 @@ class Table:
             self._translate_ranges([(live_col, ">", floor), *ranges]))
         if not cand:
             return None, [], 0, set()
-        # explicit reader schema when knowable: skips the
-        # footer-inference Spark job per read, and a COW rewrite must
-        # carry retired columns (time travel) and renamed file columns
-        # through the waist, whatever mix of pre-/post-drop files the
-        # matched set holds
-        rs = self._reader_schema()
-        reader = spark.read.schema(rs) if rs is not None else spark.read
-        probe = prepare(self._waist_rename(
-            reader.parquet(*[os.path.join(self.path, f) for f in cand])
-            .withColumn("__file", F.col("_metadata.file_path"))))
+        probe = prepare(self._read_files(cand).withColumn(
+            "__file", F.col("_metadata.file_path")))
         aggs = [F.count(F.lit(1)).alias("__n")]
         if probe_keys:
             # batch_update folds its matched-keys collect into THIS probe
@@ -2146,8 +2144,7 @@ class Table:
             matched = sorted(
                 os.path.relpath(unquote(urlparse(u).path), self.path)
                 for u in per_file)
-        sub = prepare(self._with_bkt(self._waist_rename(reader.parquet(
-            *[os.path.join(self.path, f) for f in matched]))))
+        sub = prepare(self._with_bkt(self._read_files(matched)))
         return sub, matched, n, keys
 
     def _replace_files(self, df: DataFrame, matched: Sequence[str],
@@ -3442,10 +3439,7 @@ class Table:
         self._propagate_insert(new_files)
         out_rows = None
         if return_rows and new_files:
-            _rs = self._reader_schema()
-            _rd = spark.read.schema(_rs) if _rs is not None else spark.read
-            nf = self._waist_rename(_rd.parquet(
-                *[os.path.join(self.path, f) for f in new_files]))
+            nf = self._read_files(new_files)
             keep = [c for c in self.column_names() if c in nf.columns]
             out_rows = [r.asDict(recursive=True)
                         for r in nf.orderBy(_ROWID).select(*keep).collect()]
@@ -3606,12 +3600,8 @@ class Table:
         if return_rows:
             out_rows = []
             if new_files:
-                _rs = self._reader_schema()
-                _rd = (self.catalog.spark.read.schema(_rs)
-                       if _rs is not None else self.catalog.spark.read)
-                nf = self._waist_rename(_rd.parquet(
-                    *[os.path.join(self.path, f) for f in new_files]
-                )).filter(_ccol(_VMIN) == new_version)
+                nf = self._read_files(new_files).filter(
+                    _ccol(_VMIN) == new_version)
                 keep = [c for c in self.column_names() if c in nf.columns]
                 out_rows = [r.asDict(recursive=True)
                             for r in nf.orderBy(_ROWID).select(*keep)
@@ -4153,95 +4143,71 @@ class Table:
         return [r.asDict(recursive=True) for r in df.collect()]
 
     # -- view propagation --------------------------------------------------
-    def _propagate_insert(self,
-                          delta_files: Optional[Sequence[str]] = None
-                          ) -> None:
-        """Insert propagation. With `delta_files` (the commit's newly
-        written files) dependents receive the born rows as an explicit
-        O(delta) scan instead of re-deriving them through a stats-pruned
-        read of the whole store — one less probe job per dependent."""
+    # Every commit hands each dependent its delta: the rows of the files
+    # it just wrote, the ONLY place rows born or expired at this version
+    # can live (reference plan.py:717-836 create_view_update_plan /
+    # create_view_load_plan). A commit that wrote no files hands over an
+    # empty delta; its dependents still commit a version.
+    def _delta_scan(self, files: Sequence[str]) -> DataFrame:
+        """Rows of `files` (this commit's new files) born or expired at
+        the current version — O(delta) at any table size. Views version
+        their rows with the view-local interval."""
+        lo, hi = (_VVMIN, _VVMAX) if isinstance(self, View) else (_VMIN,
+                                                                   _VMAX)
+        src = self._read_files(files) if files else self._store_df().limit(0)
+        v = self.version
+        return src.filter((_ccol(lo) == v) | (_ccol(hi) == v))
+
+    def _propagate_insert(self, delta_files: Sequence[str]) -> None:
+        """Insert propagation: dependents receive the born rows of the
+        commit's new files, and their `_rowid` bounds from the files'
+        footer stats."""
         if not self._views:
             return
-        src = rows = bounds = None
-        if delta_files:
-            rs = self._reader_schema()
-            rd = (self.catalog.spark.read.schema(rs) if rs is not None
-                  else self.catalog.spark.read)
-            raw = self._waist_rename(rd.parquet(
-                *[os.path.join(self.path, f) for f in delta_files]))
-            vcol = _VVMIN if isinstance(self, View) else _VMIN
-            src = raw.filter(F.col(vcol) == self.version)
-            rows = self._collect_delta(src, delta_files, insert=True)
-            bounds = self._bounds_from_stats(delta_files)
+        src = self._delta_scan(delta_files)
+        rows = self._collect_delta(src, delta_files, insert=True)
+        bounds = self._bounds_from_stats(delta_files)
         for v in self._views:
-            v._load_increment(delta_src=src, delta_rows=rows, bounds=bounds)
+            v._load_increment(src, rows, bounds)
 
     def _propagate_refresh(self) -> None:
         for v in self._views:
             v._full_refresh()
 
-    def _propagate_changes(self,
-                           delta_files: Optional[Sequence[str]] = None
-                           ) -> None:
-        """Incremental update/delete propagation: dependent views expire and
-        recompute ONLY the rows whose base `_rowid` changed at the current
-        version (reference plan.py:717-760 create_view_update_plan), instead
-        of a full re-materialization. With `delta_files` (the commit's
-        newly written files — the only place rows born or expired at this
-        version can live) the affected-rowid scan reads O(delta), not the
-        table."""
+    def _propagate_changes(self, delta_files: Sequence[str]) -> None:
+        """Update/delete propagation: dependents expire and recompute ONLY
+        the rows the commit's delta names, instead of a full
+        re-materialization. The affected-rowid BOUNDS (used by every
+        dependent's view-file probe pruning) come free from the delta
+        files' footer stats. Delta-file bounds can only be LOOSER than
+        the true affected bounds (carried-over rows widen them), and
+        ranges only prune, so looser is still correct."""
         if not self._views:
             return
-        v = self.version
-        if delta_files is None:
-            src = self._store_df()
-        elif delta_files:
-            _rs = self._reader_schema()
-            _rd = (self.catalog.spark.read.schema(_rs)
-                   if _rs is not None else self.catalog.spark.read)
-            src = self._waist_rename(_rd.parquet(
-                *[os.path.join(self.path, f) for f in delta_files]))
-        else:  # no data changed at this version: nothing to propagate,
-            src = self._store_df().limit(0)  # but views still bump
-        changed = src.filter((_ccol(_VMIN) == v) | (_ccol(_VMAX) == v))
-        self._fan_out_changes(changed, delta_files)
-
-    def _fan_out_changes(self, changed: DataFrame,
-                         delta_files: Optional[Sequence[str]]) -> None:
-        """Hand one commit's changed rows (born or expired at this
-        version) to every dependent's _apply_base_update."""
-        affected = changed.select(_ROWID).distinct()
-        # the affected-rowid BOUNDS (used by every dependent's view-file
-        # probe pruning) come free from the delta files' footer stats,
-        # which this commit just wrote into the manifest — the per-view
-        # min/max Spark job they replace was ~0.25 s of every propagated
-        # commit. Delta-file bounds can only be LOOSER than the true
-        # affected bounds (carried-over rows widen them), and ranges only
-        # prune, so looser is still correct.
-        bounds = self._bounds_from_stats(delta_files) if delta_files else None
-        # delta_files == []: nothing changed, every dependent's literal
-        # delta is empty; None (no delta files known): the join paths
-        rows = (self._collect_delta(changed, delta_files, insert=False)
-                if delta_files else None if delta_files is None else [])
+        changed = self._delta_scan(delta_files)
+        rows = self._collect_delta(changed, delta_files, insert=False)
+        bounds = self._bounds_from_stats(delta_files)
         for view in self._views:
-            view._apply_base_update(affected, delta_src=changed,
-                                    bounds=bounds, delta_rows=rows)
+            view._apply_base_update(changed, rows, bounds)
 
     def _collect_delta(self, delta: DataFrame, files: Sequence[str],
                        insert: bool) -> Optional[list]:
         """The commit delta's distinct tuples over the columns the
         dependents key on (View: `_rowid` of changed rows; Rollup: its
         group columns), collected ONCE per base commit for all of them
-        (see _collect_bounded) at the delta files' bucket width. None
-        when no dependent keys on the delta; a list longer than
-        _DELTA_LITERAL_MAX sends the dependents to their join paths."""
+        (see _collect_bounded) at the delta files' bucket width: [] with
+        no files, None when no dependent keys on the delta; a list
+        longer than _DELTA_LITERAL_MAX sends the dependents to their
+        join paths."""
         cols: list[str] = []
         for v in self._views:
             for c in v._delta_key_cols(insert):
                 if c not in cols:
                     cols.append(c)
-        if not cols or any(c not in delta.columns for c in cols):
+        if not cols:
             return None
+        if not files:
+            return []
         return _collect_bounded(self.catalog.spark, delta.select(*cols),
                                 self._bucket_width(files))
 
@@ -4262,10 +4228,16 @@ class View(Table):
     columns, optionally exploded by an iterator (component view)
     (reference catalog/view.py:38-146).
 
-    Rows are keyed by the base's _rowid (+_pos when an iterator explodes);
-    insert-propagation evaluates the view plan over ONLY base rows created
-    at the latest base version (reference plan.py:761-836
-    create_view_load_plan(propagates_insert=True))."""
+    Rows are keyed by the base's _rowid (+_pos when an iterator explodes).
+    Every base commit — insert, update or delete, from a table, a view
+    or a rollup — reaches the view as that commit's delta (see
+    Table._propagate_insert / _propagate_changes): insert-propagation
+    evaluates the view plan over ONLY the base rows born at the latest
+    base version (reference plan.py:761-836
+    create_view_load_plan(propagates_insert=True)), update/delete
+    propagation over only the rowids the delta names. The view's own
+    commit is then the delta of its children, so every level of a chain
+    is maintained from its base's delta."""
 
     def __init__(self, catalog: Catalog, name: str, path: str):
         super().__init__(catalog, name, path)
@@ -4466,40 +4438,15 @@ class View(Table):
         return [] if insert else [_ROWID]
 
     @_locked_mutation
-    def _load_increment(self,
-                        delta_src: Optional[DataFrame] = None,
+    def _load_increment(self, delta_src: DataFrame,
                         delta_rows: Optional[list] = None,
                         bounds: Optional[tuple] = None) -> None:
-        """Incremental maintenance: only base rows created at the current
-        base version flow through the view plan. A VIEW base versions its
-        rows with the view-local interval (_vv_min), not the table one.
-        `delta_src` (the base commit's newly-written rows, passed by the
-        base's propagation) short-circuits the stats-pruned re-read;
-        `bounds` (their `_rowid` range, from the delta files' footer
-        stats) sizes the append: view rows keep their base rowid."""
-        vcol = _VVMIN if isinstance(self.base, View) else _VMIN
-        bv = self.base.version
-        if delta_src is not None:
-            new_rows = delta_src
-            if _BKT in new_rows.columns:
-                new_rows = new_rows.drop(_BKT)
-        # manifest-stats pruning: rows born at bv can only live in files
-        # whose vcol range admits bv — the base's latest commit delta,
-        # not the whole base table
-        elif isinstance(self.base, View):
-            braw = self.base._read_current_raw([(vcol, "==", bv),
-                                                (_VVMAX, ">", bv)])
-            if braw is not None and _BKT in braw.columns:
-                braw = braw.drop(_BKT)
-            new_rows = (braw.filter(_vis_pred(bv, _VVMIN, _VVMAX))
-                        if braw is not None
-                        else self.base.df())
-        else:
-            new_rows = self.base._store_df(
-                [(vcol, "==", bv), (_VMAX, ">", bv)]).filter(
-                _vis_pred(bv))
-        new_rows = new_rows.filter(F.col(vcol) == bv)
-        out = self._view_plan(new_rows)
+        """Insert propagation: only the base commit's born rows
+        (`delta_src`) flow through the view plan, and the result is
+        appended; `bounds` (their `_rowid` range, from the delta files'
+        footer stats) sizes the append: view rows keep their base
+        rowid."""
+        out = self._view_plan(delta_src)
         new_v = self.version + 1
         out = out.withColumn(_VVMIN, F.lit(new_v)).withColumn(_VVMAX, F.lit(MAXV))
         # layout-aware append (partitioned by _bkt unless legacy flat dir)
@@ -4513,29 +4460,30 @@ class View(Table):
         self._propagate_insert(my_new_files)
 
     @_locked_mutation
-    def _apply_base_update(self, affected_rowids: DataFrame,
-                           delta_src: Optional[DataFrame] = None,
-                           bounds: Optional[tuple] = None,
-                           delta_rows: Optional[list] = None) -> None:
+    def _apply_base_update(self, delta_src: DataFrame, delta_rows: list,
+                           bounds: Optional[tuple] = None) -> None:
         """Incremental update/delete propagation: expire live view rows for
         the affected base ``_rowid``s, re-run the view plan over ONLY those
         base rows (as they now stand), append the results — unaffected rows
         are never rescanned by the plan (reference plan.py:717-760
-        create_view_update_plan). `delta_src` (the immediate base's
-        newly-written rows — the ONLY place rows born at the new base
-        version can live) directly supplies the replacement rows for
-        Table bases: the affected rowids' current live rows are exactly
-        the delta's born-at-bv live rows, so no base re-scan or
-        semi-join is needed. `bounds` (min/max affected `_rowid`,
-        derived by the caller from the delta files' footer stats) skips
-        the per-propagation bounds aggregation job.
+        create_view_update_plan).
+
+        `delta_src` (the base commit's rows born or expired at the new
+        base version bv) names the affected rowids AND supplies their
+        replacement rows: the base commit re-derived every live row of
+        each rowid it touched, so those rowids' current live rows are
+        exactly the delta's born-at-bv live rows (update replacements,
+        upsert inserts; carried-over rewrites keep their old version and
+        are excluded). That holds for a table base and for a view or
+        rollup base alike — no base re-scan, no semi-join. `bounds`
+        (min/max affected `_rowid`, from the delta files' footer stats)
+        skips the bounds aggregation job.
 
         `delta_rows` (the base's collected delta, see
         Table._collect_delta) names the affected rowids as literals: the
-        view-file probe, the COW rewrite and a view base's re-scan then
-        filter on `_rowid IN (...)` — no join, no broadcast job. Without
-        it (a delta above the literal bound, or no delta files) the
-        affected-rowid frame is joined instead."""
+        view-file probe and the COW rewrite then filter on
+        `_rowid IN (...)` — no join, no broadcast job. A delta above the
+        literal bound joins the affected-rowid frame instead."""
         raw = self._read_current_raw()
         if raw is None or _VVMIN not in raw.columns:
             # legacy pre-versioning storage: no interval columns to expire —
@@ -4549,11 +4497,9 @@ class View(Table):
         # A one-row base update touches the one or two view files whose
         # _rowid stats admit it, not a bucket, not the whole view.
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
-        rowids = (None if delta_rows is None
-                  or len(delta_rows) > _DELTA_LITERAL_MAX
-                  else sorted({r[_ROWID] for r in delta_rows}))
         ranges: list[tuple] = []
-        if rowids is not None:
+        if len(delta_rows) <= _DELTA_LITERAL_MAX:
+            rowids = sorted({r[_ROWID] for r in delta_rows})
             hit = _ccol(_ROWID).isin(rowids)
 
             def prepare(df):
@@ -4565,7 +4511,8 @@ class View(Table):
                 ranges.append((_ROWID, "in", rowids))
                 bounds = (rowids[0], rowids[-1])
         else:
-            aff = affected_rowids.withColumn("__aff", F.lit(True))
+            affected = delta_src.select(_ROWID).distinct()
+            aff = affected.withColumn("__aff", F.lit(True))
 
             def prepare(df):
                 return (df.join(aff, on=_ROWID, how="left")
@@ -4573,11 +4520,9 @@ class View(Table):
                             F.col("__aff"), F.lit(False)))
                         .drop("__aff"))
 
-            # bounds normally arrive from the caller (footer stats of
-            # the base commit's delta files — no job); the aggregation
-            # is the fallback for foreign-handle refresh paths
+            # the aggregation serves delta files without footer stats
             if bounds is None:
-                b = affected_rowids.agg(F.min(_ROWID), F.max(_ROWID)).first()
+                b = affected.agg(F.min(_ROWID), F.max(_ROWID)).first()
                 if b is not None and b[0] is not None:
                     bounds = (int(b[0]), int(b[1]))
             has_affected = bounds is not None
@@ -4594,31 +4539,10 @@ class View(Table):
             sub, matched_files, _n, _pk = self._mutation_subset(
                 prepare, ranges, live_col=_VVMAX)
         # deleted base rows simply produce no replacement view rows
-        if has_affected and delta_src is not None \
-                and not isinstance(self.base, View):
-            # the affected rowids' CURRENT live rows are exactly the
-            # delta's born-at-bv live rows (update replacements + upsert
-            # inserts; carried-over rewrites keep their old _v_min and
-            # are excluded) — zero base re-scan, no semi-join
-            bv = self.base.version
-            base_rows = delta_src.filter(
-                (_ccol(_VMIN) == bv) & (_ccol(_VMAX) > bv))
-        else:
-            # fallback: base re-scan restricted to the affected rowids
-            # (foreign refresh / view bases)
-            base_live = self.base.df()
-            if has_affected and bounds is not None \
-                    and not isinstance(self.base, View):
-                bv = self.base.version
-                base_live = self.base._store_df(
-                    [(_VMIN, "<=", bv), (_VMAX, ">", bv),
-                     (_ROWID, ">=", bounds[0]),
-                     (_ROWID, "<=", bounds[1])]).filter(
-                    _vis_pred(bv))
-            base_rows = (base_live.filter(_ccol(_ROWID).isin(rowids))
-                         if rowids is not None else
-                         base_live.join(affected_rowids, on=_ROWID,
-                                        how="left_semi"))
+        lo, hi = ((_VVMIN, _VVMAX) if isinstance(self.base, View)
+                  else (_VMIN, _VMAX))
+        bv = self.base.version
+        base_rows = delta_src.filter((_ccol(lo) == bv) & (_ccol(hi) > bv))
         out = (self._view_plan(base_rows)
                .withColumn(_VVMIN, F.lit(new_v))
                .withColumn(_VVMAX, F.lit(MAXV)))
@@ -4635,39 +4559,13 @@ class View(Table):
             # no existing view rows to expire, but affected base rows may
             # newly satisfy the view predicate: pure append
             my_new_files = self._append(
-                out, width=self._bucket_width(span=bounds)
-                if bounds is not None else None)
+                out, width=self._bucket_width(span=bounds))
         self._loaded_base_version = self.base.version
         self.version = new_v
         self._carry_schema_cache()
         self._save_view_meta()
-        if self._views:
-            # this view's commit is the base commit of its children: its
-            # own delta files hold every view row born or expired here
-            my_delta = self._delta_scan(my_new_files)
-            if my_delta is not None:
-                self._fan_out_changes(my_delta, my_new_files)
-            else:
-                for child in self._views:
-                    child._apply_base_update(affected_rowids,
-                                             bounds=bounds)
-
-    def _delta_scan(self, new_files: Sequence[str]
-                    ) -> Optional[DataFrame]:
-        """Rows changed by this view's LATEST commit (born or expired at
-        `self.version`), read from exactly the commit's new files — the
-        only place such rows can live. O(delta) at any view size; feeds
-        aggregate dependents' group-key discovery."""
-        v = self.version
-        if not new_files:
-            raw = self._read_current_raw()
-            return None if raw is None else raw.limit(0)
-        rs = self._reader_schema()
-        rd = (self.catalog.spark.read.schema(rs) if rs is not None
-              else self.catalog.spark.read)
-        raw = self._waist_rename(rd.parquet(
-            *[os.path.join(self.path, f) for f in new_files]))
-        return raw.filter((_ccol(_VVMIN) == v) | (_ccol(_VVMAX) == v))
+        # this view's commit is the base commit of its children
+        self._propagate_changes(my_new_files)
 
     def _component_identity_cols(self) -> list[str]:
         """Base identity + one ordinal per iterator level along the view
@@ -4779,9 +4677,9 @@ class Rollup(View):
     GROUPS are recomputed and swapped file-granularly.
 
     Maintenance model — recompute-affected-groups, not partial-merge:
-    the delta's group keys (including the PRE-update values of moved
-    rows and the keys of deleted rows, read O(delta) from the base's
-    newest row-versions) select the groups to refresh; those groups'
+    the base commit's delta (its new files' rows born or expired at the
+    new base version, so the PRE-update values of moved rows and the
+    keys of deleted rows too) names the groups to refresh; those groups'
     aggregates re-derive from the base's live rows (a semi-join the
     base's stats/bloom pruning narrows), so ANY aggregate works —
     min/max/count_distinct/stddev need no retraction algebra and
@@ -4873,101 +4771,32 @@ class Rollup(View):
         return list(self.group_cols)
 
     @_locked_mutation
-    def _load_increment(self,
-                        delta_src: Optional[DataFrame] = None,
-                        delta_rows: Optional[list] = None,
-                        bounds: Optional[tuple] = None) -> None:
-        """Insert propagation: the new base slice's group keys select
-        the groups to recompute — O(delta) key discovery. `delta_rows`
-        (the base commit's collected delta) already holds them as
-        literals; `delta_src` (the base commit's born rows, passed by
-        the base) makes discovery one scan of the commit's new files.
-        Without either, the born rows re-derive through a stats-pruned
-        read of the base store. A VIEW base versions its rows with the
-        view-local interval."""
-        bv = self.base.version
-        if delta_src is not None:
-            new_rows = delta_src
-        elif isinstance(self.base, View):
-            braw = self.base._read_current_raw([(_VVMIN, "==", bv),
-                                                (_VVMAX, ">", bv)])
-            new_rows = (braw.filter((_ccol(_VVMIN) == bv)
-                                    & (_ccol(_VVMAX) > bv))
-                        if braw is not None else self.base.df().limit(0))
-        else:
-            new_rows = self.base._store_df(
-                [(_VMIN, "==", bv), (_VMAX, ">", bv)]).filter(
-                _vis_pred(bv))
-        self._maintain(new_rows.select(*self.group_cols).distinct(),
-                       delta_rows)
-
-    @_locked_mutation
-    def _apply_base_update(self, affected_rowids: DataFrame,
-                           delta_src: Optional[DataFrame] = None,
-                           bounds: Optional[tuple] = None,
-                           delta_rows: Optional[list] = None) -> None:
-        """Update/delete propagation: affected groups are the union of
-        the changed rows' PRE-mutation keys (rows expired at bv — their
-        old column values ride the expired row-versions) and POST-
-        mutation keys (rows born at bv). `delta_rows` (the base commit's
-        collected delta) holds both as literals. With `delta_src` (the
-        base commit's newly-written rows — the only place rows born or
-        expired at bv can live) both key sets come from ONE O(delta)
-        scan: no semi-joins against the full base, no bv−1 read.
-        Without it, fall back to the two-sided semi-join (now ∪ prev
-        against the affected rowids). A view base whose version floor
-        forbids the bv−1 read falls back to a full refresh (correct,
-        just not incremental)."""
-        bv = self.base.version
-        if delta_src is not None:
-            self._maintain(delta_src.select(*self.group_cols).distinct(),
-                           delta_rows)
-            return
-        if isinstance(self.base, View):
-            try:
-                now = self.base.df()
-                prev = self.base.df(version=bv - 1)
-            except (NotFoundError, ValueError):
-                self._full_refresh()
-                self._propagate_refresh()
-                return
-        else:
-            now = self.base._store_df(
-                [(_VMIN, "<=", bv), (_VMAX, ">", bv)]).filter(
-                _vis_pred(bv))
-            prev = self.base._store_df(
-                [(_VMIN, "<=", bv - 1), (_VMAX, ">", bv - 1)]).filter(
-                _vis_pred(bv - 1))
-        keys = (now.join(affected_rowids, on=_ROWID, how="left_semi")
-                .select(*self.group_cols)
-                .unionByName(
-                    prev.join(affected_rowids, on=_ROWID, how="left_semi")
-                    .select(*self.group_cols))
-                .distinct())
-        self._maintain(keys)
-
-    def _maintain(self, keys_df: DataFrame,
-                  delta_rows: Optional[list] = None) -> None:
-        """Shared incremental step: expire the affected groups' live
-        rollup rows (file-granular COW via the same two-pass probe as
-        table mutations), re-aggregate exactly those groups from the
-        base's live rows, append the fresh rows at the new version.
+    def _apply_base_update(self, delta_src: DataFrame, delta_rows: list,
+                           bounds: Optional[tuple] = None) -> None:
+        """The one maintenance step, for insert, update and delete alike:
+        the affected groups are the keys of the base commit's delta
+        (`delta_src`, its rows born or expired at the new base version:
+        born rows carry the POST-mutation keys, expired row-versions the
+        PRE-mutation keys of moved and deleted rows). Expire those
+        groups' live rollup rows (file-granular COW via the same
+        two-pass probe as table mutations), re-aggregate exactly those
+        groups from the base's live rows, append the fresh rows at the
+        new version.
 
         Scale shape: a small delta (≤ _DELTA_LITERAL_MAX affected groups
-        — the common point/range mutation) is read as literal keys:
-        from `delta_rows` when the base already collected its delta,
-        else from `keys_df` in one bounded job (_collect_bounded). The
-        keys prune both sides: the rollup-file probe by per-group
-        in-list admission, the base re-scan by the keys' min/max band
-        (effective when the group column correlates with insert order,
-        e.g. time buckets; the stats can only admit more, never lie).
-        A single group column then matches on a null-safe IN — no join,
-        no broadcast job. Several group columns keep the null-safe join
-        of the keys frame: an OR of per-key conjunctions costs every
-        base row one comparison per key, and measured slower than the
-        join from 64 keys up. The rewrite and write run at the width of
-        the base files re-aggregated. Wider deltas take the join path
-        with no pruning: the probe's column-pruned scan of the rollup
+        — the common point/range mutation) is read as literal keys from
+        `delta_rows`, the base's collected delta. The keys prune both
+        sides: the rollup-file probe by per-group in-list admission, the
+        base re-scan by the keys' min/max band (effective when the group
+        column correlates with insert order, e.g. time buckets; the
+        stats can only admit more, never lie). A single group column
+        then matches on a null-safe IN — no join, no broadcast job.
+        Several group columns keep the null-safe join of the keys frame:
+        an OR of per-key conjunctions costs every base row one
+        comparison per key, and measured slower than the join from 64
+        keys up. The rewrite and write run at the width of the base
+        files re-aggregated. Wider deltas take the join path with no
+        pruning: the probe's column-pruned scan of the rollup
         (O(groups), not O(base)) and a full base live-scan filtered by
         the semi-join, at the session's confs.
 
@@ -4979,13 +4808,8 @@ class Rollup(View):
             self._propagate_refresh()
             return
         new_v = self.version + 1
-        rows = delta_rows
-        if rows is None:
-            rows = _collect_bounded(
-                self.catalog.spark, keys_df,
-                self.base._bucket_width(self.base._current_files()))
-        key_rows = (_literal_keys(rows, self.group_cols)
-                    if len(rows) <= _DELTA_LITERAL_MAX else None)
+        key_rows = (_literal_keys(delta_rows, self.group_cols)
+                    if len(delta_rows) <= _DELTA_LITERAL_MAX else None)
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
         ranges: list[tuple] = []
         base_ranges: list[tuple] = []
@@ -5008,8 +4832,9 @@ class Rollup(View):
             def affected(df):
                 return df.filter(pred)
         else:
-            k = keys_df.select(*[F.col(g).alias(f"__k{i}")
-                                 for i, g in enumerate(self.group_cols)])
+            k = delta_src.select(*[F.col(g).alias(f"__k{i}")
+                                   for i, g in enumerate(self.group_cols)]
+                                 ).distinct()
             on = functools.reduce(Column.__and__, [
                 F.col(g).eqNullSafe(F.col(f"__k{i}"))
                 for i, g in enumerate(self.group_cols)])
@@ -5049,24 +4874,23 @@ class Rollup(View):
             expired = self._with_bkt(sub.withColumn(
                 _VVMAX, F.when(F.col("__m"), F.lit(new_v))
                          .otherwise(_ccol(_VVMAX))).drop("__m"))
-            self._replace_files(
+            new_files = self._replace_files(
                 expired.unionByName(self._with_bkt(out)), matched_files,
                 width=width)
         else:
             # no existing rollup rows for these groups: pure append
             # (brand-new groups); an empty key set still bumps the
             # version (a no-op propagation is a commit, view parity)
-            self._append(out, width=width)
+            new_files = self._append(out, width=width)
         self._loaded_base_version = self.base.version
         self.version = new_v
         self._carry_schema_cache()
         self._save_view_meta()
-        # dependents keyed by this rollup's group-hash rowids
-        if self._views:
-            changed = keys_df.select(
-                self._group_rowid().alias(_ROWID)).distinct()
-            for child in self._views:
-                child._apply_base_update(changed)
+        # dependents are keyed by this rollup's group-hash rowids
+        self._propagate_changes(new_files)
+
+    # an insert's delta holds only born rows: the same step
+    _load_increment = _apply_base_update
 
 
 class Snapshot:

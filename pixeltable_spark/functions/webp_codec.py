@@ -314,10 +314,6 @@ def _apply_inverse_transforms(argb: np.ndarray, transforms: list,
     return argb
 
 
-def _avg2(a: int, b: int) -> int:
-    return (a + b) >> 1
-
-
 def _pred_clamp_add_sub_full(a, b, c):
     out = 0
     for shift in (24, 16, 8, 0):

@@ -239,17 +239,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return sums.select(F.col(id_col), val.alias("simhash"))
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Docs whose full SimHash collides (Hamming distance 0 buckets)."""
-    sh = simhash(df, text_col, id_col, bits)
-    return (
-        sh.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("rep_id"))
-        .filter(F.col("n") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # n-gram Jaccard similarity join
 # ---------------------------------------------------------------------------

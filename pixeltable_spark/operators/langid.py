@@ -203,25 +203,6 @@ def _weight_array(w) -> Column:
                   + ") AS ARRAY<BIGINT>)")
 
 
-def langid_scores(text: Column,
-                  n_buckets: int = N_BUCKETS) -> dict[str, Column]:
-    """Per-language model score as pure-JVM columns: mean bucket weight
-    over the text's char trigrams + bias. One shared bucket-array
-    subexpression; K array-fold lookups into broadcast literals."""
-    langs, IW = _int_weights(n_buckets)
-    _, _, B = langid_model(n_buckets)
-    bks = _ngram_buckets(text, n_buckets)
-    cnt = F.size(bks)
-    out: dict[str, Column] = {}
-    for lg, w, bias in zip(langs, IW, B):
-        w_arr = _weight_array(w)
-        tot = F.aggregate(bks, F.lit(0).cast("long"),
-                          lambda acc, b: acc + F.element_at(w_arr, b + 1))
-        out[lg] = F.when(cnt > 0,
-                         tot / F.lit(1e6) / cnt + F.lit(bias))
-    return out
-
-
 def lang_id(text: Column, n_buckets: int = N_BUCKETS) -> Column:
     """Model-based language id: argmax over the per-language NB scores
     (alphabetically-first language wins exact ties, matching the oracle's

@@ -144,22 +144,6 @@ def ann_topk_cosine(df: DataFrame, query: Sequence[float], k: int = 10,
     return topk_cosine(cand, query, k, vec_col, id_col)
 
 
-def ivf_centroids(df: DataFrame, vec_col: str = "embedding",
-                  n_planes: int = 4) -> DataFrame:
-    """IVF-style coarse index: bucket -> centroid + population. Centroid =
-    element-wise mean via posexplode + groupBy (fully distributed)."""
-    b = df.withColumn("bkt", hyperplane_bucket(F.col(vec_col), n_planes,
-                                               dim=_infer_dim(df, vec_col)))
-    exploded = b.select("bkt", F.posexplode(vec_col).alias("dim", "val"))
-    cent = (
-        exploded.groupBy("bkt", "dim").agg(F.avg("val").alias("c"))
-        .groupBy("bkt").agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("dc"))
-        .select("bkt", F.transform("dc", lambda s: s["c"]).alias("centroid"))
-    )
-    pops = b.groupBy("bkt").agg(F.count(F.lit(1)).alias("n_vectors"))
-    return cent.join(pops, "bkt")
-
-
 def knn_join(left: DataFrame, right: DataFrame, k: int = 5,
              vec_col: str = "embedding", left_id: str = "vec_id",
              right_id: str = "vec_id", n_planes: int = 0,

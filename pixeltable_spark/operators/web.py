@@ -119,14 +119,6 @@ def registered_domain(host: Column) -> Column:
             .otherwise(last2))
 
 
-def with_url_columns(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Attach `canonical_url`, `host`, `domain` — one projection, one scan."""
-    u = F.col(url_col)
-    return (df.withColumn("canonical_url", canonicalize_url(u))
-              .withColumn("host", url_host(u))
-              .withColumn("domain", registered_domain(url_host(u))))
-
-
 def domain_counts(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Documents per registrable domain — the input to per-domain caps
     (RefinedWeb caps docs/domain to bound SEO-farm influence). One

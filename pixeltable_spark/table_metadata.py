@@ -108,8 +108,3 @@ class UpdateStatus(int):
                 f"updated_cols={list(self.updated_cols)}, "
                 f"num_excs={self.num_excs})")
 
-
-def insert_msg(status: "UpdateStatus") -> str:
-    """Human message like the reference's insert status line."""
-    noun = "row" if int(status) == 1 else "rows"
-    return f"Inserted {int(status)} {noun} with {status.num_excs} errors."

@@ -3,7 +3,8 @@
 A base table with a computed column, a filtered view and a count/sum
 rollup, at the default bucket count. A 1,000-row list insert, a ~1%
 predicate update and a point delete each commit the base AND maintain
-both dependents; each must stay within its job and task budget. Job
+both dependents; each must stay within its job and task budget, as
+must a ~1% update once a child view sits on the filtered view. Job
 counts are machine-independent, so a plan-shape regression (a commit
 action back under AQE, a broadcast join back in view or rollup
 maintenance, a multi-job take) fails here on any machine.
@@ -75,7 +76,7 @@ def world(spark, tmp_path_factory):
     t.insert([_row(k) for k in range(N_BASE, N_BASE + 10)])
     t.update({"q": 2.0}, where=t.ref().part == 0)
     t.delete(t.ref().k == 1)
-    return {"t": t, "view": view, "roll": roll,
+    return {"cat": cat, "t": t, "view": view, "roll": roll,
             "next": N_BASE + 10}
 
 
@@ -138,3 +139,21 @@ def test_delta_above_literal_bound_matches_scratch(spark, world,
     _check_dependents(world)
     t.delete(t.ref().part == 34)
     _check_dependents(world)
+
+
+def test_chain_update_budget(spark, world):
+    """A child view on `big`: a ~1% update reaches it as `big`'s commit
+    delta, at a pinned cost for the whole three-level commit."""
+    t, view = world["t"], world["view"]
+    child = world["cat"].create_view(
+        "big_child", view, predicate=view.ref().half >= 600.0)
+    t.update({"q": 44.0}, where=t.ref().part == 5)   # steady state
+    n, jobs, tasks = _cost(spark, lambda: t.update(
+        {"q": 46.0, "price": 1300.0}, where=t.ref().part == 23))
+    assert 0 < int(n) < 2 * (N_BASE // N_PARTS)
+    assert jobs <= 10, jobs
+    assert tasks <= 35, tasks
+    _check_dependents(world)
+    b = view.df().filter(F.col("half") >= 600.0).select("k", "half")
+    c = child.df().select("k", "half")
+    assert c.exceptAll(b).count() == 0 and b.exceptAll(c).count() == 0

@@ -126,6 +126,16 @@ class TestIO:
         back = pio.import_pandas(spark, pdf)
         assert back.count() == 10
 
+    def test_import_rows(self, spark):
+        """Mirrors the reference's pxt.io.import_rows: a list of dicts,
+        typed by a pixeltable schema."""
+        rows = [{"k": 1, "s": "a"}, {"k": 2, "s": None}]
+        back = pio.import_rows(spark, rows, schema={
+            "k": pxt.Int(False), "s": pxt.String(True)})
+        assert back.schema.simpleString() == "struct<k:bigint,s:string>"
+        assert sorted(tuple(r) for r in back.collect()) == \
+            [(1, "a"), (2, None)]
+
 
 class TestHfFiftyoneRoundtrip:
     def test_hf_arrow_roundtrip(self, spark, tmp_path):

@@ -152,16 +152,48 @@ class TestNestedComponentViews:
                        (1, 0, 1, "three."), (1, 1, 0, "Four five.")]
 
     def test_mutations_propagate_through_chain(self, chain):
+        """Every mutation reaches both levels as its base's commit delta;
+        the leaf equals the two view plans re-run over the base, at
+        every version, for deltas on both sides of the literal bound."""
+        from pixeltable_spark import catalog as catmod
         _cat, t, v, v2 = chain
-        from pixeltable_spark.exprs import ColumnRef
-        t.insert([{"doc_id": 3, "text": "Six seven eight nine."}])
+        doc_id = t.ref().doc_id
+
+        def leaf(df):
+            return sorted((r["_rowid"], r["_pos"], r["_pos_2"], r["text"])
+                          for r in df.collect())
+
+        versions = []
+
+        def step(mutate):
+            before = (t.version, v.version, v2.version)
+            mutate()
+            assert (t.version, v.version, v2.version) == \
+                tuple(x + 1 for x in before)
+            versions.append((t.version, v2.version))
+            assert leaf(v2.df()) == \
+                leaf(v2._view_plan(v._view_plan(t.df())))
+
+        step(lambda: t.insert([{"doc_id": 3,
+                                "text": "Six seven eight nine."}]))
         assert v.count() == 5 and v2.count() == 8   # incremental insert
-        t.update({"text": "Zip zap."},
-                 where=ColumnRef("doc_id", t.schema["doc_id"]) == 1)
+        step(lambda: t.update({"text": "Zip zap."}, where=doc_id == 1))
         texts = {r["text"] for r in v2.df().collect()}
         assert "Zip zap." in texts and "Alpha beta." not in texts
-        t.delete(where=ColumnRef("doc_id", t.schema["doc_id"]) == 2)
+        step(lambda: t.delete(where=doc_id == 2))
         assert v2.count() == 3                       # doc2's chunks gone
+        n = catmod._DELTA_LITERAL_MAX + 20
+        step(lambda: t.insert([{"doc_id": 10 + i,
+                                "text": f"W{i} a b. C d."}
+                               for i in range(n)]))
+        # more base rows than the literal bound: the join path
+        step(lambda: t.update({"text": "Re do mi. Fa."},
+                              where=doc_id >= 10))
+        step(lambda: t.update({"text": "x."}, where=doc_id < 0))
+        assert v2.count() == 3 + 3 * n
+        for tv, lv in versions:
+            assert leaf(v2.df(lv)) == \
+                leaf(v2._view_plan(v._view_plan(t.df(tv))))
 
     def test_group_by_table_handle(self, chain):
         from pixeltable_spark import functions as pxtf

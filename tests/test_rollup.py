@@ -230,6 +230,51 @@ class TestRollupOverView:
         assert state() == scratch()
 
 
+class TestViewOverRollup:
+    @pytest.mark.parametrize("literal_max", [None, 1])
+    def test_filtered_view_tracks_rollup(self, cat, monkeypatch,
+                                         literal_max):
+        """A filtered view over a rollup is maintained from the rollup's
+        commit delta (rows keyed by the group hash): after every base
+        commit it equals a from-scratch filter of the rollup, and every
+        level of the chain commits a version. `literal_max=1` sends
+        every non-trivial delta down the join path."""
+        from pixeltable_spark import catalog as catmod
+        if literal_max is not None:
+            monkeypatch.setattr(catmod, "_DELTA_LITERAL_MAX", literal_max)
+        t = cat.create_table("tr", {"g": pxt.String(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"g": f"g{i % 4}", "v": float(i)} for i in range(40)])
+        r = cat.create_rollup("rr", t, ["g"], {"n": ("count", None),
+                                               "s": ("sum", "v")})
+        view = cat.create_view("hot", r, predicate=r.ref().n >= 10)
+
+        def check():
+            want = sorted((row["g"], row["n"], row["s"]) for row in
+                          r.df().filter(F.col("n") >= 10).collect())
+            got = sorted((row["g"], row["n"], row["s"])
+                         for row in view.df().collect())
+            assert got == want
+
+        check()
+        steps = [
+            lambda: t.insert([{"g": "g0", "v": 1.0}, {"g": "g5", "v": 2.0}]),
+            # moves g1's rows into g2: g1 leaves the view, g2 grows
+            lambda: t.update({"g": "g2"}, where=t.ref().g == "g1"),
+            # empties g3: its rollup row expires with no successor
+            lambda: t.delete(t.ref().g == "g3"),
+            lambda: t.update({"v": 0.0}, where=t.ref().g == "none"),
+        ]
+        for step in steps:
+            before = (t.version, r.version, view.version)
+            step()
+            assert (t.version, r.version, view.version) == \
+                tuple(x + 1 for x in before)
+            check()
+        assert sorted(row["g"] for row in view.df().collect()) == \
+            ["g0", "g2"]
+
+
 def _nulls_last(row):
     return tuple((v is None, v if v is not None else 0) for v in row)
 
