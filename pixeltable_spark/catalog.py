@@ -574,12 +574,8 @@ class Catalog:
                     kind = json.load(f).get("kind", "table")
             except FileNotFoundError as e:
                 raise NotFoundError(f"no such table: {name!r}") from e
-            if kind == "view":
-                self._tables[name] = View._load_view(self, name, d)
-            elif kind == "rollup":
-                self._tables[name] = Rollup._load_rollup(self, name, d)
-            else:
-                self._tables[name] = Table._load(self, name, d)
+            cls = {"view": View, "rollup": Rollup}.get(kind, Table)
+            self._tables[name] = cls._load(self, name, d)
         return self._tables[name]
 
     def _atomic_drop(self, d: str) -> None:
@@ -617,8 +613,9 @@ class Catalog:
                     n_buckets: Optional[int] = None,
                     bucket_chunk: Optional[int] = None,
                     ) -> "View":
-        v = View._create(self, name, self._tbl_dir(name), base, predicate,
-                         extra_columns or {}, iterator,
+        v = View._create(self, name, self._tbl_dir(name), base,
+                         {"predicate": predicate,
+                          "extra": extra_columns or {}, "iterator": iterator},
                          n_buckets=n_buckets, bucket_chunk=bucket_chunk)
         base._views.append(v)
         self._tables[name] = v
@@ -664,9 +661,9 @@ class Catalog:
         norm = {out: (spec if isinstance(spec, (tuple, list))
                       else (spec, None))
                 for out, spec in aggs.items()}
-        r = Rollup._create_rollup(self, name, self._tbl_dir(name), base,
-                                  group_by, norm, n_buckets=n_buckets,
-                                  bucket_chunk=bucket_chunk)
+        r = Rollup._create(self, name, self._tbl_dir(name), base,
+                           {"group_cols": group_by, "aggs": norm},
+                           n_buckets=n_buckets, bucket_chunk=bucket_chunk)
         base._views.append(r)
         self._tables[name] = r
         return r
@@ -744,23 +741,14 @@ class Table:
         # below v would silently miss rows — raise instead (see
         # _validate_version)
         self.version_floor = 0
-        # post-commit logical state stamped into the next manifest (see
-        # _commit_files): set by version-bumping mutations pre-write
-        self._pending_version: Optional[int] = None
-        self._pending_next_rowid: Optional[int] = None
         # streaming-ingest idempotency ledger: stream_id -> last ingested
         # micro-batch id, made durable IN the manifest commit itself
         # (Delta's txnAppId/txnVersion design) so foreachBatch replays
         # after a crash are detected even when the crash landed between
-        # the commit swap and the meta save
+        # the commit swap and the meta save. insert_stream's callback
+        # arms the stamp around its insert; the next commit carries it.
         self.stream_batches: dict[str, int] = {}
         self._pending_stream_stamp: Optional[tuple[str, int]] = None
-        # post-rename schema state stamped into the NEXT manifest commit
-        # (exhume / revert-restore rename physical columns in the same
-        # rewrite; a crash between that commit and the meta save must not
-        # leave the retired map pointing at physical names that no longer
-        # exist — same durability pattern as _pending_version)
-        self._pending_schema_stamp: Optional[dict] = None
         # versioned schema: one snapshot per schema-changing version, so
         # time travel and revert see the columns AS OF that version
         # (reference: schema_version in catalog metadata,
@@ -804,16 +792,17 @@ class Table:
         return t
 
     # -- versioned schema ---------------------------------------------------
-    def _snapshot_schema(self) -> None:
-        """Record the current logical schema under the current version
-        (one entry per schema-changing version; same-version re-snapshot
-        replaces)."""
+    def _snapshot_schema(self, version: Optional[int] = None) -> None:
+        """Record the current logical schema under `version` (default:
+        the current one; one entry per schema-changing version;
+        same-version re-snapshot replaces)."""
+        v = self.version if version is None else version
         cols = [[n, n, ct.as_dict(), False] for n, ct in self.schema.items()]
         cols += [[cc.name, cc.name, cc.col_type.as_dict(), True]
                  for cc in self.computed.values()]
         self.schema_history = [s for s in self.schema_history
-                               if s["version"] != self.version]
-        self.schema_history.append({"version": self.version, "cols": cols})
+                               if s["version"] != v]
+        self.schema_history.append({"version": v, "cols": cols})
 
     def _schema_at(self, version: int) -> Optional[dict]:
         """The schema snapshot in effect at `version` (latest snapshot
@@ -1006,13 +995,11 @@ class Table:
         # reconcile with the COMMITTED state: when CURRENT points past
         # the manifest this meta was saved against (a crash between the
         # commit swap and the meta save), the manifest's version stamp
-        # is the durable truth and wins — otherwise meta stands (it may
-        # legitimately record no-commit version bumps and reverts)
-        cur_path = os.path.join(self.path, "CURRENT")
-        if os.path.exists(cur_path):
+        # is the durable truth and wins — otherwise meta stands (every
+        # version bump is a commit, so meta is the cache of this one)
+        cur_manifest = self._current_token()
+        if cur_manifest:
             try:
-                with open(cur_path) as f:
-                    cur_manifest = json.load(f)["manifest"]
                 if meta.get("manifest") != cur_manifest:
                     m = self._load_manifest(cur_manifest)
                     if "version" in m:
@@ -1099,22 +1086,26 @@ class Table:
                                                self._LOCK_TIMEOUT_S):
             self._lock_depth = 1
             try:
-                self._refresh_from_disk()
                 # pin this mutation's base snapshot + conflict token:
-                # all in-mutation reads resolve the manifest observed
+                # all in-mutation reads resolve the manifest pinned
                 # HERE, and the commit's conditional swap verifies
                 # against it. Without the pin, an optimistic racer's
                 # commit landing mid-mutation would be silently merged
-                # under a stale version stamp (duplicate versions).
-                # "" = no CURRENT yet (the If-None-Match case).
-                self._manifest_at_read = self._current_token()
-                # a prior mutation that bumped state but never
-                # committed (matched-nothing update/delete) may have
-                # left a stale pending stamp — clear it so it cannot
-                # ride a later, unrelated commit
-                self._pending_version = None
-                self._pending_next_rowid = None
+                # under a stale version stamp (duplicate versions). The
+                # token is read BEFORE the rebase: state loaded after it
+                # can only be newer (the CAS fails and the mutation
+                # retries), never older. "" = no CURRENT yet (the
+                # If-None-Match case).
+                token = self._current_token()
+                self._refresh_from_disk()
+                self._manifest_at_read = token
                 yield
+            except BaseException:
+                # a mutation that raised may leave changes it never
+                # committed on this handle (a schema edit before its
+                # write failed): the next rebase reloads from disk
+                self._manifest_at_read = None
+                raise
             finally:
                 self._lock_depth = 0
 
@@ -1133,47 +1124,20 @@ class Table:
         """Rebase this handle on the latest committed state (another
         process may have committed since this object loaded, or a
         crashed writer may have committed a manifest without saving
-        meta.json). Called under the write lock, so what it reads
-        cannot move again before this writer's own commit. The
-        manifest's version stamp is the committed truth; meta.json is
-        the cache (see _commit_files)."""
-        mpath = os.path.join(self.path, "meta.json")
-        if not os.path.exists(mpath):
+        meta.json — _load_meta reconciles from the manifest stamp, the
+        committed truth; meta.json is the cache).
+
+        `_manifest_at_read` is the CURRENT token the handle's state
+        reflects: set by the load and by each commit, never by a read.
+        Every version bump moves CURRENT, so the token alone says
+        whether the handle is behind. The handle then takes the token
+        read BEFORE the reload, as _write_lock does."""
+        token = self._current_token()
+        if token == getattr(self, "_manifest_at_read", None):
             return
-        with open(mpath) as f:
-            disk = json.load(f)
-        disk_v = disk.get("version", 0)
-        disk_r = disk.get("next_rowid", 0)
-        cur_path = self._current_path
-        if os.path.exists(cur_path):
-            try:
-                with open(cur_path) as f:
-                    cur_manifest = json.load(f)["manifest"]
-                if disk.get("manifest") != cur_manifest:
-                    # meta predates the latest commit (crashed writer):
-                    # the manifest stamp is the committed truth
-                    m = self._load_manifest(cur_manifest)
-                    if "version" in m:
-                        disk_v = m["version"]
-                        disk_r = m.get("next_rowid", disk_r)
-            except (OSError, KeyError, json.JSONDecodeError):
-                pass
-        cur_manifest = None
-        if os.path.exists(cur_path):
-            try:
-                with open(cur_path) as f:
-                    cur_manifest = json.load(f)["manifest"]
-            except (OSError, KeyError, json.JSONDecodeError):
-                pass
-        if (disk_v != self.version or disk_r != self.next_rowid
-                or (cur_manifest is not None
-                    and cur_manifest != getattr(self, "_manifest_at_read",
-                                                None))):
-            # the manifest-identity clause catches storage-only commits
-            # (optimize, exhume renames): same version, different files
+        if os.path.exists(os.path.join(self.path, "meta.json")):
             self._load_meta()
-            # base snapshot moved -> any remembered manifest is stale
-            self._manifest_at_read = None
+        self._manifest_at_read = token
 
     # -- manifest commit protocol ------------------------------------------
     # Every mutation writes NEW parquet files only, then atomically commits
@@ -1296,22 +1260,15 @@ class Table:
 
     def _current_manifest_rel(self) -> Optional[str]:
         """The manifest relpath reads should resolve right now (the pin
-        inside mutations, CURRENT outside — same bookkeeping contract as
-        _current_files), or None when the table has no manifest
-        (legacy/new)."""
+        inside mutations, CURRENT outside — as _current_files), or None
+        when the table has no manifest (legacy/new)."""
         depth = getattr(self, "_lock_depth", 0)
         if depth:
             pinned = getattr(self, "_manifest_at_read", None)
             if pinned:
                 return pinned
             return None  # "" = no CURRENT at rebase -> legacy scan
-        if os.path.exists(self._current_path):
-            with open(self._current_path) as f:
-                cur = json.load(f)
-            self._manifest_at_read = cur["manifest"]
-            return cur["manifest"]
-        self._manifest_at_read = None
-        return None
+        return self._current_token() or None
 
     def _pruned_files(self, ranges: Sequence[tuple]) -> Optional[list]:
         """Candidate files for `ranges` (FILE column names), replaying
@@ -1371,8 +1328,7 @@ class Table:
         (see _write_lock) so the whole mutation sees one consistent
         snapshot even if an optimistic racer commits mid-flight — the
         stale pin then fails this mutation's conditional swap and it
-        retries. Outside mutations, records the manifest observed as
-        the conflict token."""
+        retries. Outside mutations, reads resolve CURRENT."""
         depth = getattr(self, "_lock_depth", 0)
         if depth:
             pinned = getattr(self, "_manifest_at_read", None)
@@ -1386,14 +1342,9 @@ class Table:
             elif pinned == "":  # no CURRENT at rebase (new/legacy table)
                 return (self._scan_parquet(self._data_dir)
                         if os.path.isdir(self._data_dir) else [])
-        if os.path.exists(self._current_path):
-            with open(self._current_path) as f:
-                cur = json.load(f)
-            if not depth:
-                self._manifest_at_read = cur["manifest"]
-            return self._resolve_manifest(cur["manifest"])["files"]
-        if not depth:
-            self._manifest_at_read = None
+        cur = self._current_token()
+        if cur:
+            return self._resolve_manifest(cur)["files"]
         if os.path.isdir(self._data_dir):
             return self._scan_parquet(self._data_dir)
         return []
@@ -1435,10 +1386,12 @@ class Table:
                               skip_repartition: bool = False,
                               width: Optional[int] = None
                               ) -> list[str]:
-        """Write `df` as NEW parquet files into the stable `_bkt=N/` layout
-        (flat when unbucketed) and return their relative paths. Existing
-        files are never touched; nothing becomes visible until
-        _commit_files.
+        """Write `df` (given `_bkt`, see _with_bkt) as NEW parquet files
+        into the stable `_bkt=N/` layout (flat when unbucketed) and
+        return their relative paths. Existing files are never touched;
+        nothing becomes visible until _commit_files. `skip_repartition`
+        marks a frame known to be one narrow partition (literal insert):
+        one task already writes exactly one file per touched bucket.
 
         Bucketed writes hash-partition on `_bkt` first: each bucket is
         co-located in ONE task, so a commit writes exactly one file per
@@ -1460,7 +1413,7 @@ class Table:
         plan under AQE. optimize(zorder_by=...) passes
         preserve_partitioning=True — its range-partition-on-z layout IS
         the point and must reach the writer untouched."""
-        df = self._to_file_cols(df)
+        df = self._to_file_cols(self._with_bkt(df))
         tmp = os.path.join(self._data_dir, ".tmp-" + _uuid.uuid4().hex[:8])
         partitioned = _BKT in df.columns
         if partitioned and not preserve_partitioning \
@@ -1620,11 +1573,8 @@ class Table:
                     pass
             elif pinned == "":
                 return {}
-        if not os.path.exists(self._current_path):
-            return {}
-        with open(self._current_path) as f:
-            cur = json.load(f)
-        return self._resolve_manifest(cur["manifest"]).get("stats", {})
+        cur = self._current_token()
+        return self._resolve_manifest(cur).get("stats", {}) if cur else {}
 
     @staticmethod
     def _prune_files(files: Sequence[str], stats: dict,
@@ -1713,7 +1663,10 @@ class Table:
     _CHECKPOINT_SEGMENTS = int(os.environ.get(
         "PXT_SPARK_MANIFEST_CHECKPOINT", "24"))
 
-    def _commit_files(self, files: Sequence[str]) -> None:
+    def _commit_files(self, files: Sequence[str], *,
+                      version: Optional[int] = None,
+                      next_rowid: Optional[int] = None,
+                      schema_state: Optional[dict] = None) -> None:
         """The commit point, log-structured: write ONE immutable segment
         holding only this commit's delta (files added with their footer
         stats + files removed), write a small manifest that lists the
@@ -1729,16 +1682,22 @@ class Table:
         Every _CHECKPOINT_SEGMENTS commits the chain collapses into one
         checkpoint segment (full file map), bounding replay cost (same
         contract as Delta's _delta_log checkpoints / Iceberg's manifest
-        list)."""
+        list).
+
+        The keyword arguments are the commit's stamp: the POST-commit
+        `version`, `next_rowid` and, for a schema change, the complete
+        `schema_state` (see _schema_stamp). Left out, the commit is
+        storage-only (optimize, add_bloom_filter): it stamps the
+        handle's unchanged version and next_rowid. Version bumps come
+        through _commit_version."""
         os.makedirs(os.path.join(self.path, "manifests"), exist_ok=True)
         # optimistic concurrency pre-check: if CURRENT already moved since
         # this mutation read its base snapshot, abort cheaply before the
         # stats collection; the AUTHORITATIVE check is the commit store's
         # conditional swap below (atomic with the publish)
         expected = getattr(self, "_manifest_at_read", None)
-        if os.path.exists(self._current_path):
-            with open(self._current_path) as f:
-                now = json.load(f)["manifest"]
+        now = self._current_token()
+        if now:
             # expected == "" means this mutation rebased on a table with
             # NO CURRENT — one appearing since is a racer's first commit
             if expected is not None and now != expected:
@@ -1791,17 +1750,12 @@ class Table:
         # committed version number (duplicate live row-versions) or
         # recycle committed rowids (key collisions). Loaders reconcile:
         # the manifest stamp, when present, wins over meta.json.
-        # Mutations set _pending_version/_pending_next_rowid just
-        # before their write; storage-only commits (optimize,
-        # add_bloom_filter) stamp the unchanged current values.
-        pending_v = getattr(self, "_pending_version", None)
-        pending_r = getattr(self, "_pending_next_rowid", None)
         manifest = {"format_version": MANIFEST_FORMAT_VERSION,
                     "segments": segments,
-                    "version": (pending_v if pending_v is not None
-                                else self.version),
-                    "next_rowid": (pending_r if pending_r is not None
-                                   else self.next_rowid)}
+                    "version": (self.version if version is None
+                                else version),
+                    "next_rowid": (self.next_rowid if next_rowid is None
+                                   else next_rowid)}
         # streaming-ingest ledger: durable WITH the data commit, so a
         # foreachBatch replay after any crash sees the batch as done
         pending_s = getattr(self, "_pending_stream_stamp", None)
@@ -1811,16 +1765,13 @@ class Table:
             stream_map[sid] = max(int(bid), stream_map.get(sid, -1))
         if stream_map:
             manifest["stream_batches"] = stream_map
-        pending_sch = getattr(self, "_pending_schema_stamp", None)
-        if pending_sch is not None:
+        if schema_state is not None:
             # physical-rename durability: the retired map + snapshots
             # that match the files THIS commit writes travel WITH it
-            manifest["schema_state"] = pending_sch
+            manifest["schema_state"] = schema_state
         # NOTE: the pending stream stamp and in-memory ledger advance
         # only after the swap succeeds (below) — a failed conditional
         # swap must leave the stamp armed for the mutation retry
-        self._pending_version = None
-        self._pending_next_rowid = None
         # segments before the manifest, manifest before the swap: every
         # referenced object is durable by the time CURRENT can reach it
         self._atomic_write(os.path.join(self.path, srel),
@@ -1834,10 +1785,12 @@ class Table:
             json.dumps({"format_version": MANIFEST_FORMAT_VERSION,
                         "manifest": mrel}),
             expected, self.name)
+        # the handle moves with the commit point
         self._manifest_at_read = mrel
+        self.version = manifest["version"]
+        self.next_rowid = manifest["next_rowid"]
         self.stream_batches = stream_map
         self._pending_stream_stamp = None
-        self._pending_schema_stamp = None
         # prime the resolver cache with the state just committed
         stats = {f: prev_stats[f] for f in files if _fresh(f)}
         stats.update(new_stats)
@@ -2040,41 +1993,77 @@ class Table:
                 fields.append(T.StructField(_cellmd_col(cc.name), _CELLMD_TYPE))
         return T.StructType(fields)
 
-    def _append(self, df: DataFrame,
-                single_partition: bool = False,
-                width: Optional[int] = None) -> list[str]:
-        """Add new rows: new files + manifest commit (current ∪ new).
-        Returns the new files (the commit's delta). `single_partition`
-        marks a frame known to be one narrow partition (literal insert):
-        the bucket co-location shuffle is pointless there — one task
-        already writes exactly one file per touched bucket. `width`: see
-        _write_snapshot_files (None for a user's DataFrame source)."""
-        cur = self._current_files()
-        new = self._write_snapshot_files(self._with_bkt(df),
-                                         skip_repartition=single_partition,
-                                         width=width)
-        if cur and len(new) == 1 and new[0].endswith("-empty.parquet"):
-            # empty increment on a table that already has files: the
-            # schema-bearing empty marker is only needed for EMPTY
-            # tables, and its flat (unbucketed) path would otherwise
-            # flip a bucketed store into the legacy whole-table-rewrite
-            # mode and mix dir structures under partition discovery
+    def _commit_version(self, new_v: int, written: Sequence[str] = (),
+                        replaced: Sequence[str] = (), *,
+                        next_rowid: Optional[int] = None,
+                        schema_state: Optional[dict] = None,
+                        propagate: Optional[Callable] = None,
+                        op: Optional[str] = None, **log_kw: Any
+                        ) -> list[str]:
+        """The one commit step of every version bump: publish the current
+        files minus `replaced` plus `written` as version `new_v` in ONE
+        CAS commit stamped from these arguments (see _commit_files),
+        move the handle to it, persist (_persist, which logs `op`), and
+        hand the written files to the dependents through `propagate`
+        (_propagate_insert or _propagate_changes). A mutation that
+        matched nothing and a dependent handed an empty delta commit
+        with nothing written: the unchanged file list is published
+        under the new version, so every bump moves CURRENT exactly
+        once. Returns the files the commit added."""
+        written = list(written)
+        # a table without CURRENT lists its data dir, which already
+        # holds the written files
+        drop = set(replaced) | set(written)
+        keep = [f for f in self._current_files() if f not in drop]
+        if keep and len(written) == 1 \
+                and written[0].endswith("-empty.parquet"):
+            # the schema-bearing empty marker is only needed for an
+            # EMPTY snapshot, and its flat (unbucketed) path would
+            # otherwise flip a bucketed store into the legacy
+            # whole-table-rewrite mode and mix dir structures under
+            # partition discovery
             try:
-                os.remove(os.path.join(self.path, new[0]))
+                os.remove(os.path.join(self.path, written[0]))
             except OSError:
                 pass
-            new = []
-        self._commit_files(list(cur) + new)
-        return new
+            written = []
+        self._commit_files(keep + written, version=new_v,
+                           next_rowid=next_rowid, schema_state=schema_state)
+        self._persist(op, **log_kw)
+        if propagate is not None:
+            propagate(written)
+        return written
 
-    def _rewrite(self, df: DataFrame,
-                 preserve_partitioning: bool = False) -> None:
-        """Copy-on-write snapshot swap of the WHOLE table (schema changes
-        and full refreshes). Row-level mutations go through
-        _mutation_subset + _replace_files instead — file-granular COW."""
-        new = self._write_snapshot_files(
-            self._with_bkt(df), preserve_partitioning=preserve_partitioning)
-        self._commit_files(new)
+    def _persist(self, op: Optional[str], **log_kw: Any) -> None:
+        """Save the handle's state after a commit (the cache of it; the
+        manifest stamp is the durable truth), logging `op` if given."""
+        if op is not None:
+            self._log(op, **log_kw)
+        self._save_meta()
+
+    @property
+    def _interval(self) -> tuple[str, str]:
+        """The row-version interval columns: views and rollups version
+        their rows with the view-local pair."""
+        return (_VVMIN, _VVMAX) if isinstance(self, View) else (_VMIN, _VMAX)
+
+    def _new_row_versions(self, new_v: int,
+                          sub: Optional[DataFrame] = None,
+                          born: Optional[DataFrame] = None) -> DataFrame:
+        """A commit's rewrite at `new_v`: the rows of `sub` (the matched
+        files, see _mutation_subset) with its `__m` rows expired at
+        `new_v`, plus the `born` rows stamped live over [new_v, MAXV).
+        At least one of the two is given."""
+        lo, hi = self._interval
+        parts = []
+        if sub is not None:
+            parts.append(sub.withColumn(
+                hi, F.when(F.col("__m"), F.lit(new_v)).otherwise(_ccol(hi))))
+        if born is not None:
+            parts.append(born.withColumn(lo, F.lit(new_v))
+                         .withColumn(hi, F.lit(MAXV)))
+        return functools.reduce(DataFrame.unionByName, [
+            self._with_bkt(p.drop("__m")) for p in parts])
 
     def _mutation_subset(self, prepare, ranges: Sequence[tuple] = (),
                          live_col: str = _VMAX,
@@ -2146,23 +2135,6 @@ class Table:
                 for u in per_file)
         sub = prepare(self._with_bkt(self._read_files(matched)))
         return sub, matched, n, keys
-
-    def _replace_files(self, df: DataFrame, matched: Sequence[str],
-                       width: Optional[int] = None) -> list[str]:
-        """Commit a file-granular mutation: write `df` (the rewritten
-        content of the matched files, plus any appended row-versions) as
-        new files, carry every other current file over untouched, swap
-        the manifest. Returns the newly written files — the commit's
-        delta, which is the ONLY place rows born or expired at this
-        version can live, so view propagation reads O(delta). The COW
-        rewrite runs at `width`, by default the matched files' buckets
-        (re-versioned rows keep their `_rowid`, hence their bucket)."""
-        new = self._write_snapshot_files(
-            self._with_bkt(df), width=width or self._bucket_width(matched))
-        drop = set(matched)
-        self._commit_files(
-            [f for f in self._current_files() if f not in drop] + new)
-        return new
 
     @_locked_mutation
     def add_bloom_filter(self, col: str, fpp: float = 0.01) -> None:
@@ -2424,7 +2396,8 @@ class Table:
             # occupied buckets — size target_files so file ~ 128 MB.
             staged = (staged.repartitionByRange(max(n_out, 1), F.col("__z"))
                       .sortWithinPartitions(_BKT, "__z").drop("__z"))
-            self._rewrite(staged, preserve_partitioning=True)
+            self._commit_files(self._write_snapshot_files(
+                staged, preserve_partitioning=True))
             after = self._current_files()
             self._log("optimize", zorder_by=list(zorder_by),
                       files_before=len(cur), files_after=len(after))
@@ -2444,7 +2417,7 @@ class Table:
             store = self._store_df()
             if purge_before is not None:
                 store = store.filter(_ccol(_VMAX) > purge_before)
-            self._rewrite(store)
+            self._commit_files(self._write_snapshot_files(store))
             after = self._current_files()
             self._log("optimize", files_before=len(cur), files_after=len(after))
             self._record_optimize(purge_before)
@@ -2502,12 +2475,8 @@ class Table:
         silently returns 0 rows). Pinned-version reads and in-mutation
         reads (write lock held) never sync — their snapshot is the
         point."""
-        if getattr(self, "_lock_depth", 0):
-            return
-        token = self._current_token()
-        if token != getattr(self, "_manifest_at_read", None):
+        if not getattr(self, "_lock_depth", 0):
             self._refresh_from_disk()
-            self._manifest_at_read = token
 
     def df(self, version: Optional[int] = None) -> DataFrame:
         """Live rows at a version (default: current) — the version-interval
@@ -2819,18 +2788,10 @@ class Table:
         self._exhume_if_retired(name)
         cc = ComputedColumn(name, expr, col_type or expr.col_type, on_error)
         self.computed[name] = cc
-        self.version += 1
-        self._log("add_computed_column", column=name)
-        self._snapshot_schema()
-        if self._has_data():
-            store = self._store_df()
-            store = self._eval_computed(store, [cc])
-            self._pending_version = self.version
-            self._pending_schema_stamp = self._schema_stamp()
-            self._rewrite(store)
-        else:
-            self._commit_schema_change()
-        self._save_meta()
+        store = (self._eval_computed(self._store_df(), [cc])
+                 if self._has_data() else None)
+        self._commit_schema_change("add_computed_column", store,
+                                   column=name)
 
     def _eval_computed(self, df: DataFrame, ccs: Sequence[ComputedColumn]) -> DataFrame:
         """Evaluate computed columns in declaration (topo) order — each may
@@ -2906,23 +2867,30 @@ class Table:
             "ndv_cols": dict(self.ndv_cols),
         }
 
-    def _commit_schema_change(self) -> None:
-        """Commit a METADATA-ONLY schema change through the commit store:
-        same file list, a new manifest stamped with the bumped version
-        AND the full schema state, published by the conditional swap.
-        This is what makes schema ops safe under OPTIMISTIC concurrency:
-        a racer's data commit landing mid-change fails this CAS and the
-        whole op retries against the rebased state (before round 10
-        these ops only rewrote meta.json — two optimistic writers could
-        claim the same version number for different changes). Cost is
-        one tiny segment + manifest JSON + the swap; no data file is
-        touched at any table size."""
-        self._pending_version = self.version
-        self._pending_schema_stamp = self._schema_stamp()
-        try:
-            self._commit_files(self._current_files())
-        finally:
-            self._pending_schema_stamp = None
+    def _commit_schema_change(self, op: str,
+                              store: Optional[DataFrame] = None,
+                              **log_kw: Any) -> None:
+        """Commit a schema change (already applied to this handle) at the
+        next version: snapshot the schema, then one commit stamped with
+        the full schema state. `store`, when given, is the whole table
+        under the new schema (a backfill) and replaces every current
+        file; without it the change is METADATA-ONLY and publishes the
+        same file list — one tiny segment + manifest JSON + the swap,
+        no data file touched at any table size. Either way the change
+        goes through the conditional swap, so a racer's commit landing
+        mid-change fails this CAS and the whole op retries against the
+        rebased state (two optimistic writers can never claim the same
+        version number for different changes)."""
+        new_v = self.version + 1
+        self._snapshot_schema(new_v)
+        written: list[str] = []
+        replaced: Sequence[str] = ()
+        if store is not None:
+            replaced = self._current_files()
+            written = self._write_snapshot_files(store)
+        self._commit_version(new_v, written, replaced,
+                             schema_state=self._schema_stamp(), op=op,
+                             **log_kw)
 
     @_locked_mutation
     def add_column(self, name: str, col_type: ColumnType,
@@ -2938,29 +2906,18 @@ class Table:
             raise ValueError("non-nullable add_column requires a default")
         self._exhume_if_retired(name)
         self.schema[name] = col_type
-        backfill = self._has_data() and default is not None
+        store = None
         if self._has_data() and default is None:
             # existing files lack the new column: from now on reads go
             # through the explicit reader schema so it surfaces as NULL
             self._explicit_read_schema = True
-        self.version += 1
-        self._log("add_column", column=name)
-        self._snapshot_schema()
-        if backfill:
+        elif self._has_data():
             store = self._store_df().withColumn(
                 name, F.lit(default).cast(col_type.spark_type()))
-            keep = [f.name for f in self._store_schema().fields] \
-                + [p for p in self.retired if p in store.columns]
-            self._pending_version = self.version
-            # the backfill commit carries the schema change too
-            self._pending_schema_stamp = self._schema_stamp()
-            self._rewrite(store.select(*keep))
-        else:
-            # metadata-only: the schema change still COMMITS through the
-            # store (CAS) so optimistic racers conflict instead of
-            # colliding on version numbers
-            self._commit_schema_change()
-        self._save_meta()
+            store = store.select(
+                *[f.name for f in self._store_schema().fields],
+                *[p for p in self.retired if p in store.columns])
+        self._commit_schema_change("add_column", store, column=name)
 
     def _check_view_deps(self, name: str) -> None:
         """Refuse to drop a column a dependent view reads (reference
@@ -3058,11 +3015,7 @@ class Table:
         for iname in [k for k, ix in getattr(self, "_indexes", {}).items()
                       if ix.column == name or ix.embed_col == name]:
             del self._indexes[iname]
-        self.version += 1
-        self._log("drop_column", column=name)
-        self._snapshot_schema()
-        self._commit_schema_change()
-        self._save_meta()
+        self._commit_schema_change("drop_column", column=name)
 
     @_locked_mutation
     def alter_column(self, name: str, col_type: ColumnType) -> None:
@@ -3080,18 +3033,11 @@ class Table:
         # schema (built from self.schema) must describe what is on disk
         store = self._store_df() if self._has_data() else None
         self.schema[name] = col_type
-        self.version += 1
-        self._log("alter_column", column=name, new_type=col_type.kind.name)
-        self._snapshot_schema()
         if store is not None:
             store = store.withColumn(
                 name, F.col(name).cast(col_type.spark_type()))
-            self._pending_version = self.version
-            self._pending_schema_stamp = self._schema_stamp()
-            self._rewrite(store)
-        else:
-            self._commit_schema_change()
-        self._save_meta()
+        self._commit_schema_change("alter_column", store, column=name,
+                                   new_type=col_type.kind.name)
 
     @_locked_mutation
     def rename_column(self, old: str, new: str) -> None:
@@ -3163,11 +3109,7 @@ class Table:
                 ix.column = new
             if ix.embed_col == old:
                 ix.embed_col = new
-        self.version += 1
-        self._log("rename_column", old=old, new=new)
-        self._snapshot_schema()
-        self._commit_schema_change()
-        self._save_meta()
+        self._commit_schema_change("rename_column", old=old, new=new)
 
     # -- mutations ---------------------------------------------------------
     def _insert_precheck(self, src: DataFrame) -> tuple[dict, list]:
@@ -3426,17 +3368,13 @@ class Table:
         else:
             slice_df = self._eval_computed(slice_df, ccs)
         slice_df = slice_df.select(*[f.name for f in self._store_schema().fields])
-        self._pending_version = new_version
-        self._pending_next_rowid = self.next_rowid + n
-        new_files = self._append(slice_df, single_partition=lit_1p,
-                                 width=width)
+        new_files = self._write_snapshot_files(
+            slice_df, skip_repartition=lit_1p, width=width)
         if obs is not None:
             num_excs = int(sum(v or 0 for v in obs.get.values()))
-        self.version = new_version
-        self.next_rowid += n
-        self._log("insert", rows=n)
-        self._save_meta()
-        self._propagate_insert(new_files)
+        new_files = self._commit_version(
+            new_version, new_files, next_rowid=self.next_rowid + n,
+            propagate=self._propagate_insert, op="insert", rows=n)
         out_rows = None
         if return_rows and new_files:
             nf = self._read_files(new_files)
@@ -3574,28 +3512,21 @@ class Table:
             lambda df: df.withColumn("__m", live & pred), ranges)
         new_files: list[str] = []
         if sub is not None:
-            # old row-versions: expire at new_version
-            expired = sub.withColumn(
-                _VMAX, F.when(F.col("__m"), F.lit(new_version))
-                        .otherwise(_ccol(_VMAX)))
             # new row-versions for matched rows
             updated = sub.filter(F.col("__m"))
             for col, val in value_spec.items():
                 val_col = val.compile() if isinstance(val, Expr) else F.lit(val)
                 updated = updated.withColumn(
                     col, val_col.cast(self.schema[col].spark_type()))
-            updated = (updated.withColumn(_VMIN, F.lit(new_version))
-                       .withColumn(_VMAX, F.lit(MAXV)))
             if cascade:
                 updated = self._eval_computed(
                     updated, list(self.computed.values()))
-            self._pending_version = new_version
-            new_files = self._replace_files(
-                expired.unionByName(updated).drop("__m"), matched_files)
-        self.version = new_version
-        self._log("update", rows=n)
-        self._save_meta()
-        self._propagate_changes(new_files)
+            new_files = self._write_snapshot_files(
+                self._new_row_versions(new_version, sub, updated),
+                width=self._bucket_width(matched_files))
+        new_files = self._commit_version(
+            new_version, new_files, matched_files,
+            propagate=self._propagate_changes, op="update", rows=n)
         out_rows = None
         if return_rows:
             out_rows = []
@@ -3742,41 +3673,32 @@ class Table:
                                          list(self.computed.values()))
             ins_df = ins_df.select(
                 *[f.name for f in self._store_schema().fields])
-            self._pending_next_rowid = self.next_rowid + n_new
             ins_span = (self.next_rowid, self.next_rowid + n_new - 1)
-        new_files: list[str] = []
+        out = ins_df
         if sub is not None:
-            expired = sub.withColumn(
-                _VMAX, F.when(F.col("__m"), F.lit(new_version))
-                        .otherwise(_ccol(_VMAX))).drop(*helper_cols)
             updated = sub.filter(F.col("__m"))
             for c in upd_cols:
                 updated = updated.withColumn(
                     c, F.when(F.col(f"__has_{c}"), F.col(f"__upd_{c}"))
                         .otherwise(F.col(c)).cast(self.schema[c].spark_type()))
-            updated = (updated.drop(*helper_cols)
-                       .withColumn(_VMIN, F.lit(new_version))
-                       .withColumn(_VMAX, F.lit(MAXV)))
+            updated = updated.drop(*helper_cols)
             if cascade:
                 updated = self._eval_computed(
                     updated, list(self.computed.values()))
-            out = self._with_bkt(expired.unionByName(updated).drop("__m"))
+            out = self._new_row_versions(
+                new_version, sub.drop(*helper_cols), updated)
             if ins_df is not None:
                 out = out.unionByName(self._with_bkt(ins_df))
-            self._pending_version = new_version
+        new_files: list[str] = []
+        if out is not None:
             # upserted rows extend the rewrite past the matched buckets
-            kw = ({"width": self._bucket_width(matched_files, ins_span)}
-                  if ins_span else {})
-            new_files = self._replace_files(out, matched_files, **kw)
-        elif ins_df is not None:
-            self._pending_version = new_version
-            new_files = self._append(ins_df,
-                                     width=self._bucket_width(span=ins_span))
-        self.version = new_version
-        self.next_rowid += n_new
-        self._log("batch_update", rows=n + n_new)
-        self._save_meta()
-        self._propagate_changes(new_files)
+            new_files = self._write_snapshot_files(
+                out, width=self._bucket_width(matched_files, ins_span))
+        new_files = self._commit_version(
+            new_version, new_files, matched_files,
+            next_rowid=self.next_rowid + n_new,
+            propagate=self._propagate_changes, op="batch_update",
+            rows=n + n_new)
         out_rows = None
         if return_rows:
             affected = [_key(row) for row in rows
@@ -3807,15 +3729,12 @@ class Table:
             lambda df: df.withColumn("__m", live & pred), ranges)
         new_files: list[str] = []
         if sub is not None:
-            out = sub.withColumn(
-                _VMAX, F.when(F.col("__m"), F.lit(new_version))
-                        .otherwise(_ccol(_VMAX))).drop("__m")
-            self._pending_version = new_version
-            new_files = self._replace_files(out, matched_files)
-        self.version = new_version
-        self._log("delete", rows=n)
-        self._save_meta()
-        self._propagate_changes(new_files)
+            new_files = self._write_snapshot_files(
+                self._new_row_versions(new_version, sub),
+                width=self._bucket_width(matched_files))
+        self._commit_version(new_version, new_files, matched_files,
+                             propagate=self._propagate_changes, op="delete",
+                             rows=n)
         return UpdateStatus(n, op="delete")
 
     @telemetry.traced("table.recompute_columns", attrs_fn=lambda self, *a, **k: {"table": self.name, "version": self.version})
@@ -3868,19 +3787,13 @@ class Table:
             lambda df: df.withColumn("__m", live & pred), ranges)
         new_files: list[str] = []
         if sub is not None:
-            expired = sub.withColumn(
-                _VMAX, F.when(F.col("__m"), F.lit(new_version))
-                        .otherwise(_ccol(_VMAX)))
             recomputed = self._eval_computed(sub.filter(F.col("__m")), ccs)
-            recomputed = (recomputed.withColumn(_VMIN, F.lit(new_version))
-                          .withColumn(_VMAX, F.lit(MAXV)))
-            self._pending_version = new_version
-            new_files = self._replace_files(
-                expired.unionByName(recomputed).drop("__m"), matched_files)
-        self.version = new_version
-        self._log("recompute", rows=n, columns=list(cols))
-        self._save_meta()
-        self._propagate_changes(new_files)
+            new_files = self._write_snapshot_files(
+                self._new_row_versions(new_version, sub, recomputed),
+                width=self._bucket_width(matched_files))
+        self._commit_version(new_version, new_files, matched_files,
+                             propagate=self._propagate_changes,
+                             op="recompute", rows=n, columns=list(cols))
         return UpdateStatus(n, op="recompute")
 
     @telemetry.traced("table.revert", attrs_fn=lambda self, *a, **k: {"table": self.name, "version": self.version})
@@ -3898,23 +3811,22 @@ class Table:
             lambda df: df.withColumn(
                 "__m", (_ccol(_VMIN) == v) | (_ccol(_VMAX) == v)),
             live_floor=v - 1)
+        new_files: list[str] = []
         if sub is not None:
-            out = (
+            # written before the schema rewinds: the files are written
+            # under the column mapping the rows were read with
+            new_files = self._write_snapshot_files(
                 sub.drop("__m").filter(_ccol(_VMIN) < v)
                 .withColumn(_VMAX, F.when(_ccol(_VMAX) == v, F.lit(MAXV))
-                            .otherwise(_ccol(_VMAX)))
-            )
-            self._pending_version = v - 1
-            self._replace_files(out, matched_files)
-        self.version = v - 1
+                            .otherwise(_ccol(_VMAX))),
+                width=self._bucket_width(matched_files))
         self._history = [h for h in self._history if h["version"] < v]
-        schema_changed = self._restore_schema_at(v - 1)
-        if sub is None and schema_changed:
-            # schema-only revert: commit it through the store like the
-            # forward schema ops (CAS vs optimistic racers; the commit
-            # point carries the rewound version + schema state)
-            self._commit_schema_change()
-        self._save_meta()
+        # the commit point carries the rewound version + schema state
+        # (CAS vs optimistic racers, like the forward schema ops)
+        schema_state = (self._schema_stamp()
+                        if self._restore_schema_at(v - 1) else None)
+        self._commit_version(v - 1, new_files, matched_files,
+                             schema_state=schema_state)
         self._propagate_refresh()
 
     def _restore_schema_at(self, target_version: int) -> bool:
@@ -4147,16 +4059,18 @@ class Table:
     # it just wrote, the ONLY place rows born or expired at this version
     # can live (reference plan.py:717-836 create_view_update_plan /
     # create_view_load_plan). A commit that wrote no files hands over an
-    # empty delta; its dependents still commit a version.
-    def _delta_scan(self, files: Sequence[str]) -> DataFrame:
+    # empty delta (no frame, no delta rows); its dependents still commit
+    # a version, with nothing written.
+    def _delta_scan(self, files: Sequence[str]) -> Optional[DataFrame]:
         """Rows of `files` (this commit's new files) born or expired at
-        the current version — O(delta) at any table size. Views version
-        their rows with the view-local interval."""
-        lo, hi = (_VVMIN, _VVMAX) if isinstance(self, View) else (_VMIN,
-                                                                   _VMAX)
-        src = self._read_files(files) if files else self._store_df().limit(0)
+        the current version — O(delta) at any table size — or None
+        without files."""
+        if not files:
+            return None
+        lo, hi = self._interval
         v = self.version
-        return src.filter((_ccol(lo) == v) | (_ccol(hi) == v))
+        return self._read_files(files).filter(
+            (_ccol(lo) == v) | (_ccol(hi) == v))
 
     def _propagate_insert(self, delta_files: Sequence[str]) -> None:
         """Insert propagation: dependents receive the born rows of the
@@ -4196,9 +4110,11 @@ class Table:
         dependents key on (View: `_rowid` of changed rows; Rollup: its
         group columns), collected ONCE per base commit for all of them
         (see _collect_bounded) at the delta files' bucket width: [] with
-        no files, None when no dependent keys on the delta; a list
-        longer than _DELTA_LITERAL_MAX sends the dependents to their
-        join paths."""
+        no files (the empty delta), None when no dependent keys on the
+        delta; a list longer than _DELTA_LITERAL_MAX sends the
+        dependents to their join paths."""
+        if not files:
+            return []
         cols: list[str] = []
         for v in self._views:
             for c in v._delta_key_cols(insert):
@@ -4206,8 +4122,6 @@ class Table:
                     cols.append(c)
         if not cols:
             return None
-        if not files:
-            return []
         return _collect_bounded(self.catalog.spark, delta.select(*cols),
                                 self._bucket_width(files))
 
@@ -4279,23 +4193,19 @@ class View(Table):
 
     @classmethod
     def _create(cls, catalog: Catalog, name: str, path: str, base: Table,
-                predicate: Optional[Expr],
-                extra: dict[str, tuple[Expr, ColumnType]],
-                iterator: Optional[Callable[[DataFrame], DataFrame]],
-                n_buckets: Optional[int] = None,
+                spec: dict, n_buckets: Optional[int] = None,
                 bucket_chunk: Optional[int] = None) -> "View":
+        """A new view (or rollup, through `cls`) of `base` with `spec`
+        (see _spec_dict), materialized by a full refresh."""
         v = cls(catalog, name, path)
         v.base = base
-        v.predicate = predicate
-        v.extra = extra
-        v.iterator = iterator
+        v._apply_spec(spec)
         if n_buckets is not None:
             v.n_buckets = int(n_buckets)
         if bucket_chunk is not None:
             v.bucket_chunk = max(1, int(bucket_chunk))
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         v._full_refresh()
-        v._save_view_meta()
         return v
 
     _meta_kind = "view"
@@ -4323,16 +4233,30 @@ class View(Table):
         return {"predicate": self.predicate, "extra": self.extra,
                 "iterator": self.iterator}
 
+    def _apply_spec(self, spec: dict) -> None:
+        """Set the definition persisted by _spec_dict."""
+        self.predicate = spec["predicate"]
+        self.extra = spec["extra"]
+        self.iterator = spec["iterator"]
+
+    def _persist(self, op: Optional[str], **log_kw: Any) -> None:
+        """A view's commit is always maintenance from its base: record
+        the base version it caught up to, keep the file-schema cache
+        (maintenance writes the same plan output schema) and save the
+        view meta. Views keep no op log."""
+        self._loaded_base_version = self.base.version
+        self._carry_schema_cache()
+        self._save_view_meta()
+
     def _manifest_version_stamp(self) -> Optional[int]:
         """The version stamped into the CURRENT manifest, or None. Pre-
         round-9 view manifests were stamped with the PRE-mutation version,
         so callers must treat the stamp as a lower bound (take max with
         meta) rather than the unconditional truth."""
-        if not os.path.exists(self._current_path):
+        cur_manifest = self._current_token()
+        if not cur_manifest:
             return None
         try:
-            with open(self._current_path) as f:
-                cur_manifest = json.load(f)["manifest"]
             return self._load_manifest(cur_manifest).get("version")
         except (OSError, KeyError, json.JSONDecodeError):
             return None
@@ -4343,24 +4267,26 @@ class View(Table):
         Table loader. The committed manifest's version stamp wins over
         meta.json when it is AHEAD (a writer that crashed between the
         CURRENT swap and the meta save), so a reloaded handle never
-        reuses a committed version number for its next mutation."""
-        mpath = os.path.join(self.path, "meta.json")
-        if not os.path.exists(mpath):
+        reuses a committed version number for its next mutation. The
+        token rule is Table._refresh_from_disk's."""
+        token = self._current_token()
+        if token == getattr(self, "_manifest_at_read", None):
             return
-        with open(mpath) as f:
-            meta = json.load(f)
-        disk_v = meta.get("version", self.version)
-        stamp = self._manifest_version_stamp()
-        if stamp is not None and stamp > disk_v:
-            disk_v = stamp
-        if disk_v != self.version:
-            self.version = disk_v
+        mpath = os.path.join(self.path, "meta.json")
+        if os.path.exists(mpath):
+            with open(mpath) as f:
+                meta = json.load(f)
+            self.version = meta.get("version", self.version)
+            stamp = self._manifest_version_stamp()
+            if stamp is not None and stamp > self.version:
+                self.version = stamp
             self._version_floor = meta.get("version_floor", self.version)
             self._loaded_base_version = meta.get("loaded_base_version", -1)
-            self._manifest_at_read = None
+        self._manifest_at_read = token
 
     @classmethod
-    def _load_view(cls, catalog: Catalog, name: str, path: str) -> "View":
+    def _load(cls, catalog: Catalog, name: str, path: str) -> "View":
+        """Open a persisted view (or rollup, through `cls`)."""
         from pyspark import cloudpickle
         v = cls(catalog, name, path)
         with open(os.path.join(path, "meta.json")) as f:
@@ -4382,14 +4308,11 @@ class View(Table):
         # their files with the pure-mod assignment: keep chunk=1 so the
         # recomputed _bkt stays consistent with the stored dirs
         v.bucket_chunk = meta.get("bucket_chunk", 1)
-        v.predicate = spec["predicate"]
-        v.extra = spec["extra"]
-        v.iterator = spec["iterator"]
+        v._apply_spec(spec)
         v.base._views.append(v)
         # catch up on base versions inserted while this view was not loaded
         if v._loaded_base_version < v.base.version:
             v._full_refresh()
-            v._save_view_meta()
         return v
 
     def _view_plan(self, base_df: DataFrame) -> DataFrame:
@@ -4411,24 +4334,20 @@ class View(Table):
 
     @_locked_mutation
     def _full_refresh(self) -> None:
-        base_live = self.base.df()
-        out = self._view_plan(base_live)
+        """Re-materialize the whole view from the base's live rows. Views
+        use the same bucketed layout and commit step as base tables, so
+        the POST-mutation version stamp closes the crash-between-commit-
+        and-meta-save window for views exactly as for tables (loaders
+        reconcile against it — see _refresh_from_disk)."""
         new_v = self.version + 1
-        out = out.withColumn(_VVMIN, F.lit(new_v)).withColumn(_VVMAX, F.lit(MAXV))
-        # views use the same bucketed layout + manifest commit as base
-        # tables, so ALL writers (_load_increment append, _apply_base_update
-        # bucket swap) agree on one protocol; stamping the POST-mutation
-        # version into the manifest closes the crash-between-commit-and-
-        # meta-save window for views exactly as for tables (loaders
-        # reconcile against the stamp — see _refresh_from_disk)
-        self._pending_version = new_v
-        self._rewrite(self._with_bkt(out))
-        self._loaded_base_version = self.base.version
-        self.version += 1
-        # a rewrite truncates reconstructible history at the new version
-        self._version_floor = self.version
-        if self.base is not None:
-            self._save_view_meta()
+        replaced = self._current_files()
+        written = self._write_snapshot_files(self._new_row_versions(
+            new_v, born=self._view_plan(self.base.df())))
+        # the rewrite may change the store layout (the base's columns
+        # moved) and truncates reconstructible history at the new version
+        self._file_schema_cache = None
+        self._version_floor = new_v
+        self._commit_version(new_v, written, replaced)
 
     def _delta_key_cols(self, insert: bool) -> list[str]:
         """Columns of the base commit's delta this dependent keys its
@@ -4445,19 +4364,16 @@ class View(Table):
         (`delta_src`) flow through the view plan, and the result is
         appended; `bounds` (their `_rowid` range, from the delta files'
         footer stats) sizes the append: view rows keep their base
-        rowid."""
-        out = self._view_plan(delta_src)
+        rowid. An empty delta (`delta_rows == []`) writes nothing."""
         new_v = self.version + 1
-        out = out.withColumn(_VVMIN, F.lit(new_v)).withColumn(_VVMAX, F.lit(MAXV))
-        # layout-aware append (partitioned by _bkt unless legacy flat dir)
-        self._pending_version = new_v
-        my_new_files = self._append(
-            out, width=self._bucket_width(span=bounds) if bounds else None)
-        self._loaded_base_version = self.base.version
-        self.version += 1
-        self._carry_schema_cache()
-        self._save_view_meta()
-        self._propagate_insert(my_new_files)
+        written: list[str] = []
+        if delta_rows != []:
+            written = self._write_snapshot_files(
+                self._new_row_versions(new_v,
+                                       born=self._view_plan(delta_src)),
+                width=self._bucket_width(span=bounds) if bounds else None)
+        self._commit_version(new_v, written,
+                             propagate=self._propagate_insert)
 
     @_locked_mutation
     def _apply_base_update(self, delta_src: DataFrame, delta_rows: list,
@@ -4483,7 +4399,12 @@ class View(Table):
         Table._collect_delta) names the affected rowids as literals: the
         view-file probe and the COW rewrite then filter on
         `_rowid IN (...)` — no join, no broadcast job. A delta above the
-        literal bound joins the affected-rowid frame instead."""
+        literal bound joins the affected-rowid frame instead. An empty
+        delta (`delta_rows == []`) writes nothing."""
+        new_v = self.version + 1
+        if delta_rows == []:
+            self._commit_version(new_v, propagate=self._propagate_changes)
+            return
         raw = self._read_current_raw()
         if raw is None or _VVMIN not in raw.columns:
             # legacy pre-versioning storage: no interval columns to expire —
@@ -4491,13 +4412,11 @@ class View(Table):
             self._full_refresh()
             self._propagate_refresh()
             return
-        new_v = self.version + 1
         # file-granular: probe which VIEW files actually hold live rows
         # for the affected base rowids; only those files are rewritten.
         # A one-row base update touches the one or two view files whose
         # _rowid stats admit it, not a bucket, not the whole view.
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
-        ranges: list[tuple] = []
         if len(delta_rows) <= _DELTA_LITERAL_MAX:
             rowids = sorted({r[_ROWID] for r in delta_rows})
             hit = _ccol(_ROWID).isin(rowids)
@@ -4505,11 +4424,9 @@ class View(Table):
             def prepare(df):
                 return df.withColumn("__m", live & hit)
 
-            has_affected = bool(rowids)
-            if has_affected:
-                # prunes per rowid, or by the exact min/max band when long
-                ranges.append((_ROWID, "in", rowids))
-                bounds = (rowids[0], rowids[-1])
+            # prunes per rowid, or by the exact min/max band when long
+            ranges = [(_ROWID, "in", rowids)]
+            bounds = (rowids[0], rowids[-1])
         else:
             affected = delta_src.select(_ROWID).distinct()
             aff = affected.withColumn("__aff", F.lit(True))
@@ -4523,49 +4440,26 @@ class View(Table):
             # the aggregation serves delta files without footer stats
             if bounds is None:
                 b = affected.agg(F.min(_ROWID), F.max(_ROWID)).first()
-                if b is not None and b[0] is not None:
-                    bounds = (int(b[0]), int(b[1]))
-            has_affected = bounds is not None
-            if has_affected:
-                ranges = [(_ROWID, ">=", bounds[0]),
-                          (_ROWID, "<=", bounds[1])]
+                bounds = (int(b[0]), int(b[1]))
+            ranges = [(_ROWID, ">=", bounds[0]), (_ROWID, "<=", bounds[1])]
         # the rowid ranges prune the view-file probe: chunked bucket
         # assignment makes per-file _rowid ranges near-disjoint, so a
         # narrow base change opens only the view files that can hold
         # those rowids
-        sub = None
-        matched_files: list[str] = []
-        if has_affected:
-            sub, matched_files, _n, _pk = self._mutation_subset(
-                prepare, ranges, live_col=_VVMAX)
-        # deleted base rows simply produce no replacement view rows
-        lo, hi = ((_VVMIN, _VVMAX) if isinstance(self.base, View)
-                  else (_VMIN, _VMAX))
+        sub, matched_files, _n, _pk = self._mutation_subset(
+            prepare, ranges, live_col=_VVMAX)
+        # deleted base rows simply produce no replacement view rows; with
+        # no existing view rows to expire (sub None), affected base rows
+        # may still newly satisfy the view predicate
+        lo, hi = self.base._interval
         bv = self.base.version
         base_rows = delta_src.filter((_ccol(lo) == bv) & (_ccol(hi) > bv))
-        out = (self._view_plan(base_rows)
-               .withColumn(_VVMIN, F.lit(new_v))
-               .withColumn(_VVMAX, F.lit(MAXV)))
-        self._pending_version = new_v
-        my_new_files: list[str] = []
-        if sub is not None:
-            expired = self._with_bkt(sub.withColumn(
-                _VVMAX, F.when(F.col("__m"), F.lit(new_v))
-                         .otherwise(_ccol(_VVMAX))).drop("__m"))
-            my_new_files = self._replace_files(
-                expired.unionByName(self._with_bkt(out)), matched_files,
-                width=self._bucket_width(matched_files, bounds))
-        elif has_affected:
-            # no existing view rows to expire, but affected base rows may
-            # newly satisfy the view predicate: pure append
-            my_new_files = self._append(
-                out, width=self._bucket_width(span=bounds))
-        self._loaded_base_version = self.base.version
-        self.version = new_v
-        self._carry_schema_cache()
-        self._save_view_meta()
+        written = self._write_snapshot_files(
+            self._new_row_versions(new_v, sub, self._view_plan(base_rows)),
+            width=self._bucket_width(matched_files, bounds))
         # this view's commit is the base commit of its children
-        self._propagate_changes(my_new_files)
+        self._commit_version(new_v, written, matched_files,
+                             propagate=self._propagate_changes)
 
     def _component_identity_cols(self) -> list[str]:
         """Base identity + one ordinal per iterator level along the view
@@ -4583,7 +4477,7 @@ class View(Table):
         mutated the base through its own handles may never have seen
         this view (propagation reaches only the views registered on the
         mutating handle), leaving the materialization behind the base.
-        Same self-healing as _load_view, applied at read time."""
+        Same self-healing as View._load, applied at read time."""
         if getattr(self, "_lock_depth", 0):
             return  # in-mutation read: the pinned snapshot is the point
         super()._sync_latest()
@@ -4597,7 +4491,6 @@ class View(Table):
                 # re-check under the lock: a racer may have caught up
                 if self._loaded_base_version < base.version:
                     self._full_refresh()
-                    self._save_view_meta()
 
     # views read their own materialized storage
     def df(self, version: Optional[int] = None) -> DataFrame:
@@ -4702,49 +4595,9 @@ class Rollup(View):
     def _spec_dict(self) -> dict:
         return {"group_cols": self.group_cols, "aggs": self.aggs}
 
-    @classmethod
-    def _create_rollup(cls, catalog: Catalog, name: str, path: str,
-                       base: Table, group_cols: Sequence[str],
-                       aggs: dict, n_buckets: Optional[int] = None,
-                       bucket_chunk: Optional[int] = None) -> "Rollup":
-        r = cls(catalog, name, path)
-        r.base = base
-        r.group_cols = list(group_cols)
-        r.aggs = {k: (fn, col) for k, (fn, col) in aggs.items()}
-        if n_buckets is not None:
-            r.n_buckets = int(n_buckets)
-        if bucket_chunk is not None:
-            r.bucket_chunk = max(1, int(bucket_chunk))
-        os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        r._full_refresh()
-        r._save_view_meta()
-        return r
-
-    @classmethod
-    def _load_rollup(cls, catalog: Catalog, name: str,
-                     path: str) -> "Rollup":
-        from pyspark import cloudpickle
-        r = cls(catalog, name, path)
-        with open(os.path.join(path, "meta.json")) as f:
-            meta = json.load(f)
-        with open(os.path.join(path, "view.pkl"), "rb") as f:
-            spec = cloudpickle.load(f)
-        r.base = catalog.get_table(meta["base"])
-        r.version = meta["version"]
-        stamp = r._manifest_version_stamp()
-        if stamp is not None and stamp > r.version:
-            r.version = stamp
-        r._version_floor = meta.get("version_floor", meta["version"])
-        r._loaded_base_version = meta.get("loaded_base_version", -1)
-        r.n_buckets = meta.get("n_buckets", 16)
-        r.bucket_chunk = meta.get("bucket_chunk", 1)
-        r.group_cols = list(spec["group_cols"])
-        r.aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
-        r.base._views.append(r)
-        if r._loaded_base_version < r.base.version:
-            r._full_refresh()
-            r._save_view_meta()
-        return r
+    def _apply_spec(self, spec: dict) -> None:
+        self.group_cols = list(spec["group_cols"])
+        self.aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
 
     def _group_rowid(self) -> Column:
         if self.group_cols == [_ROWID]:
@@ -4801,13 +4654,17 @@ class Rollup(View):
         the semi-join, at the session's confs.
 
         A NULL group key is a group like any other: both paths match it
-        null-safely, so its rollup row is refreshed like the rest."""
+        null-safely, so its rollup row is refreshed like the rest. An
+        empty delta (`delta_rows == []`) writes nothing."""
+        new_v = self.version + 1
+        if delta_rows == []:
+            self._commit_version(new_v, propagate=self._propagate_changes)
+            return
         raw = self._read_current_raw()
         if raw is None or _VVMIN not in raw.columns:
             self._full_refresh()
             self._propagate_refresh()
             return
-        new_v = self.version + 1
         key_rows = (_literal_keys(delta_rows, self.group_cols)
                     if len(delta_rows) <= _DELTA_LITERAL_MAX else None)
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
@@ -4822,8 +4679,7 @@ class Rollup(View):
                                     (g, "<=", builtins.max(vals))]
             except TypeError:
                 pass  # unorderable group values: no band pruning
-        if key_rows is not None and (len(self.group_cols) == 1
-                                     or not key_rows):
+        if key_rows is not None and len(self.group_cols) == 1:
             pred = _key_pred(self.group_cols[0], [k[0] for k in key_rows])
 
             def prepare(df):
@@ -4849,11 +4705,8 @@ class Rollup(View):
             def affected(df):
                 return df.join(k, on=on, how="left_semi")
 
-        sub = None
-        matched_files: list[str] = []
-        if key_rows != []:
-            sub, matched_files, _n, _pk = self._mutation_subset(
-                prepare, ranges, live_col=_VVMAX)
+        sub, matched_files, _n, _pk = self._mutation_subset(
+            prepare, ranges, live_col=_VVMAX)
         if base_ranges and not isinstance(self.base, View):
             bv = self.base.version
             base_live = self.base._store_df(
@@ -4863,31 +4716,21 @@ class Rollup(View):
             base_live = self.base.df()
         # the base rows re-aggregated are the action's volume (one rollup
         # row per group is far less); a delta over the bound keeps the
-        # session's confs
-        width = (self.base._bucket_width(base_live.inputFiles())
-                 if key_rows is not None else None)
-        out = (self._view_plan(affected(base_live))
-               .withColumn(_VVMIN, F.lit(new_v))
-               .withColumn(_VVMAX, F.lit(MAXV)))
-        self._pending_version = new_v
-        if sub is not None:
-            expired = self._with_bkt(sub.withColumn(
-                _VVMAX, F.when(F.col("__m"), F.lit(new_v))
-                         .otherwise(_ccol(_VVMAX))).drop("__m"))
-            new_files = self._replace_files(
-                expired.unionByName(self._with_bkt(out)), matched_files,
-                width=width)
+        # session's confs, except for the rewrite of matched rollup files
+        if key_rows is not None:
+            width = self.base._bucket_width(base_live.inputFiles())
         else:
-            # no existing rollup rows for these groups: pure append
-            # (brand-new groups); an empty key set still bumps the
-            # version (a no-op propagation is a commit, view parity)
-            new_files = self._append(out, width=width)
-        self._loaded_base_version = self.base.version
-        self.version = new_v
-        self._carry_schema_cache()
-        self._save_view_meta()
+            width = self._bucket_width(matched_files) if matched_files \
+                else None
+        # with no existing rollup rows for these groups (sub None), the
+        # fresh rows are a pure append (brand-new groups)
+        written = self._write_snapshot_files(
+            self._new_row_versions(new_v, sub,
+                                   self._view_plan(affected(base_live))),
+            width=width)
         # dependents are keyed by this rollup's group-hash rowids
-        self._propagate_changes(new_files)
+        self._commit_version(new_v, written, matched_files,
+                             propagate=self._propagate_changes)
 
     # an insert's delta holds only born rows: the same step
     _load_increment = _apply_base_update

@@ -4,7 +4,8 @@ A base table with a computed column, a filtered view and a count/sum
 rollup, at the default bucket count. A 1,000-row list insert, a ~1%
 predicate update and a point delete each commit the base AND maintain
 both dependents; each must stay within its job and task budget, as
-must a ~1% update once a child view sits on the filtered view. Job
+must a ~1% update once a child view sits on the filtered view. An
+update that matches nothing commits every level without a job. Job
 counts are machine-independent, so a plan-shape regression (a commit
 action back under AQE, a broadcast join back in view or rollup
 maintenance, a multi-job take) fails here on any machine.
@@ -123,6 +124,24 @@ def test_delete_budget(spark, world):
     assert int(n) == 1
     assert jobs <= 8, jobs
     assert tasks <= 50, tasks
+    _check_dependents(world)
+
+
+def test_zero_row_update_budget(spark, world):
+    """An update that matches nothing is still a version: the base and
+    both dependents each publish their unchanged file list under a new
+    version (one CURRENT move each), and the empty delta writes nothing,
+    so the whole commit runs no Spark job."""
+    t, view, roll = world["t"], world["view"], world["roll"]
+    before = [(x.version, x._current_token()) for x in (t, view, roll)]
+    where = t.ref().part == N_PARTS              # parts are 0..N_PARTS-1
+    n, jobs, _tasks = _cost(spark, lambda: t.update({"q": 1.0},
+                                                    where=where))
+    assert int(n) == 0
+    assert jobs == 0, jobs
+    for x, (v, token) in zip((t, view, roll), before):
+        assert x.version == v + 1, x.name
+        assert x._current_token() != token, x.name
     _check_dependents(world)
 
 

@@ -208,9 +208,9 @@ class TestOptimisticSemantics:
         attempts = []
         orig_commit = t._commit_files
 
-        def counting_commit(files):
+        def counting_commit(files, **stamp):
             attempts.append(1)
-            return orig_commit(files)
+            return orig_commit(files, **stamp)
 
         monkeypatch.setattr(t, "_commit_files", counting_commit)
         with pytest.raises(ConcurrencyError, match="CURRENT moved"):
@@ -289,9 +289,7 @@ def test_inflight_writer_files_survive_concurrent_vacuum(spark, tmp_path,
     ta = pxt.Catalog(spark, wh, commit_store=store).get_table("t")
     assert ta.version == 2
     cur = ta._current_files()                      # records the token
-    ta._pending_version = 3
-    ta._pending_next_rowid = 1003
-    ta._commit_files(list(cur) + a_files)
+    ta._commit_files(list(cur) + a_files, version=3, next_rowid=1003)
     ta.version = 3
     ta.next_rowid = 1003
     ta._save_meta()
@@ -346,12 +344,12 @@ def test_schema_change_conflicts_with_optimistic_racer(spark, tmp_path,
     fired = {}
     orig = t._commit_files
 
-    def racing(files):
+    def racing(files, **stamp):
         if not fired:
             fired["x"] = 1
             other = _cat(spark, wh, "object-store").get_table("t")
             other.insert([{"k": 700, "v": 7.0}])   # racer lands v2
-        return orig(files)
+        return orig(files, **stamp)
 
     monkeypatch.setattr(t, "_commit_files", racing)
     t.rename_column("v", "val")                    # retries, lands v3
@@ -367,3 +365,62 @@ def test_schema_change_conflicts_with_optimistic_racer(spark, tmp_path,
         == ["k", "v"]
     assert [f.name for f in fresh.user_df(version=3).schema.fields] \
         == ["k", "val"]
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_zero_row_mutation_holds_its_own_version(spark, tmp_path,
+                                                 monkeypatch, op):
+    """A mutation that matches nothing still bumps the version, so it
+    commits through the same CAS as any other. Handle A's zero-row op
+    lands between handle B's rebase and B's commit: B's insert then
+    conflicts, retries and lands on the next version, and the history
+    holds both ops at distinct versions."""
+    wh = str(tmp_path / "wh")
+    _mk(_cat(spark, wh, "object-store"))           # v1
+    a = _cat(spark, wh, "object-store").get_table("t")
+    b = _cat(spark, wh, "object-store").get_table("t")
+    k = ColumnRef("k", a.schema["k"])
+    zero_row = {"delete": lambda: a.delete(where=k == 999),
+                "update": lambda: a.update({"v": -1.0}, where=k == 999)}
+    done: list = []
+    orig = b._commit_files
+
+    def racing(files, **stamp):
+        if not done:
+            done.append(zero_row[op]())
+        return orig(files, **stamp)
+
+    monkeypatch.setattr(b, "_commit_files", racing)
+    b.insert([{"k": 100, "v": 1.0}])
+    assert int(done[0]) == 0
+    fresh = _cat(spark, wh, "object-store").get_table("t")
+    hist = [(h["version"], h["op"]) for h in fresh._history]
+    assert hist == [(0, "create"), (1, "insert"), (2, op), (3, "insert")]
+    assert fresh.version == 3 and fresh.count() == 11
+
+
+def test_racer_after_rebase_never_shares_a_version(spark, tmp_path,
+                                                   monkeypatch):
+    """Handle A commits right after handle B's rebase read the table. B's
+    conflict token is the one its state was loaded from, so B's insert
+    conflicts, retries and lands on the next version; the two inserts
+    never share one."""
+    wh = str(tmp_path / "wh")
+    _mk(_cat(spark, wh, "object-store"))           # v1
+    a = _cat(spark, wh, "object-store").get_table("t")
+    b = _cat(spark, wh, "object-store").get_table("t")
+    orig = b._refresh_from_disk
+    done: list = []
+
+    def rebase_then_race():
+        orig()
+        if not done:
+            done.append(a.insert([{"k": 100, "v": 1.0}]))
+
+    monkeypatch.setattr(b, "_refresh_from_disk", rebase_then_race)
+    b.insert([{"k": 200, "v": 2.0}])
+    fresh = _cat(spark, wh, "object-store").get_table("t")
+    hist = [(h["version"], h["op"]) for h in fresh._history]
+    assert hist == [(0, "create"), (1, "insert"), (2, "insert"),
+                    (3, "insert")]
+    assert fresh.version == 3 and fresh.count() == 12

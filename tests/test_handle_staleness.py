@@ -3,7 +3,10 @@ a handle whose table/view was mutated through OTHER handles must answer
 from the latest committed snapshot, never from a superseded one.
 Before this, a stale VIEW handle after a racer's refresh filtered
 everything out and silently returned 0 rows."""
+import pytest
+
 import pixeltable_spark as pxt
+from pixeltable_spark.exprs import ColumnRef
 
 
 def _mk(spark, tmp_path):
@@ -28,6 +31,30 @@ def test_stale_table_handle_sees_racer_schema_change(spark, tmp_path):
     t2.update({"z": 1}, where=t2.ref().k == 0)
     vals = {r["k"]: r.get("z") for r in t.collect()}
     assert vals[0] == 1 and vals[1] is None
+
+
+def test_metadata_read_does_not_mark_stale_handle_current(spark,
+                                                          tmp_path):
+    """A read outside a mutation (stats) on a stale handle must not pass
+    for a reload: the next read still sees the racer's commit."""
+    cat, t = _mk(spark, tmp_path)
+    t2 = pxt.Catalog(spark, str(tmp_path / "wh")).get_table("t")
+    t2.insert([{"k": 10, "x": 10}])
+    t.stats()
+    assert t.count() == 5
+    assert t.version == t2.version
+
+
+def test_failed_schema_change_is_dropped_from_the_handle(spark, tmp_path):
+    """A schema change whose backfill fails never commits; the handle
+    drops the change it applied in memory before its next mutation."""
+    cat, t = _mk(spark, tmp_path)
+    boom = ColumnRef("x", t.schema["x"]).apply(lambda x: 1 // 0, pxt.Int())
+    with pytest.raises(Exception):
+        t.add_computed_column("bad", boom)
+    t.insert([{"k": 10, "x": 10}])
+    assert "bad" not in t.columns()
+    assert t.count() == 5 and t.version == 2
 
 
 def test_stale_view_handle_catches_up_on_base_movement(spark, tmp_path):

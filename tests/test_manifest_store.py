@@ -62,7 +62,7 @@ class TestManifestCommit:
         rows_before = {r["k"]: r["v"] for r in t.collect()}
 
         # simulate a crash between writing data files and the CURRENT swap
-        def boom(files):
+        def boom(files, **stamp):
             raise RuntimeError("simulated crash before commit")
 
         monkeypatch.setattr(t, "_commit_files", boom)

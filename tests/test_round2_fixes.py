@@ -78,16 +78,14 @@ class TestBatchUpdateSinglePass:
         t = cat.create_table("bu", {"k": pxt.Int(False), "v": pxt.Float(True),
                                     "s": pxt.String(True)}, primary_key=["k"])
         t.insert([{"k": i, "v": float(i), "s": f"s{i}"} for i in range(10)])
-        # batch_update persists via the file-granular swap (_replace_files);
-        # count writes across both mechanisms and assert exactly one pass.
+        # every commit writes its files through _write_snapshot_files;
+        # count the writes and assert exactly one pass.
         calls = []
-        orig_full = type(t)._rewrite
-        orig_rep = type(t)._replace_files
-        monkeypatch.setattr(type(t), "_rewrite",
-                            lambda self, df: calls.append(1) or orig_full(self, df))
+        orig_write = type(t)._write_snapshot_files
         monkeypatch.setattr(
-            type(t), "_replace_files",
-            lambda self, df, matched: calls.append(1) or orig_rep(self, df, matched))
+            type(t), "_write_snapshot_files",
+            lambda self, df, **kw: calls.append(1) or orig_write(self, df,
+                                                                 **kw))
         n = t.batch_update([{"k": 1, "v": 100.0},
                             {"k": 3, "s": "updated"},          # different col set
                             {"k": 5, "v": 500.0, "s": "both"},

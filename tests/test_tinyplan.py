@@ -237,15 +237,15 @@ def test_shuffled_source_rowids_survive_foreign_scope(spark, tmp_path,
     cat = pxt.Catalog(spark, str(tmp_path))
     t = cat.create_table("t", {"k": pxt.Int(False), "v": pxt.Float(True)})
     t.insert([{"k": -1, "v": 0.0}])
-    orig = Table._append
+    orig = Table._write_snapshot_files
 
-    def foreign_scope_append(self, *a, **k):
+    def foreign_scope_write(self, *a, **k):
         with tinyplan.tiny_plan(spark, 3):
             return orig(self, *a, **k)
 
-    monkeypatch.setattr(Table, "_append", foreign_scope_append)
+    monkeypatch.setattr(Table, "_write_snapshot_files", foreign_scope_write)
     t.insert(_shuffled_source(spark, 300))
-    monkeypatch.setattr(Table, "_append", orig)
+    monkeypatch.setattr(Table, "_write_snapshot_files", orig)
     assert t.df().count() == 301
     _assert_rowids_contiguous(t, 0, 301)
 
