@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import telemetry, tinyplan
-from .commit_store import resolve_commit_store
+from .commit_store import _current_manifest, resolve_commit_store
 from .exceptions import (AlreadyExistsError, ConcurrencyError,
                          Error, NotFoundError)
 from .table_metadata import (ColumnMetadata, IndexMetadata, TableMetadata,
@@ -690,7 +690,7 @@ def _locked_mutation(fn):
                 with self._write_lock():
                     return fn(self, *args, **kwargs)
             except ConcurrencyError:
-                if getattr(self, "_lock_depth", 0):
+                if self._lock_depth:
                     raise  # nested mutation: let the outermost retry
                 attempt += 1
                 if attempt > retries:
@@ -749,6 +749,13 @@ class Table:
         # arms the stamp around its insert; the next commit carries it.
         self.stream_batches: dict[str, int] = {}
         self._pending_stream_stamp: Optional[tuple[str, int]] = None
+        # the CURRENT token this handle's state reflects (pinned for a
+        # mutation by _write_lock), the mutation nesting depth, and
+        # _resolve_manifest's (token, snapshot) memo + segment counter
+        self._manifest_at_read: Optional[str] = None
+        self._lock_depth = 0
+        self._resolve_cache: Optional[tuple[str, dict]] = None
+        self._segment_reads = 0
         # versioned schema: one snapshot per schema-changing version, so
         # time travel and revert see the columns AS OF that version
         # (reference: schema_version in catalog metadata,
@@ -914,7 +921,7 @@ class Table:
             # only while CURRENT still points here; when CURRENT has
             # moved past it (a crash between commit and meta save), the
             # manifest's own version/next_rowid stamp wins
-            "manifest": getattr(self, "_manifest_at_read", None),
+            "manifest": self._manifest_at_read,
         }
         # atomic (tmp + fsync + rename): a concurrent reader must never
         # see a truncated meta.json / computed.pkl
@@ -1074,9 +1081,8 @@ class Table:
 
     @contextmanager
     def _write_lock(self):
-        depth = getattr(self, "_lock_depth", 0)
-        if depth:  # reentrant: a mutation invoked from inside a mutation
-            self._lock_depth = depth + 1
+        if self._lock_depth:  # reentrant: a mutation inside a mutation
+            self._lock_depth += 1
             try:
                 yield
             finally:
@@ -1112,13 +1118,7 @@ class Table:
     def _current_token(self) -> str:
         """Commit conflict token: CURRENT's manifest relpath, or "" when
         the table has no CURRENT yet."""
-        if os.path.exists(self._current_path):
-            try:
-                with open(self._current_path) as f:
-                    return json.load(f)["manifest"]
-            except (OSError, KeyError, json.JSONDecodeError):
-                return ""
-        return ""
+        return _current_manifest(self._current_path) or ""
 
     def _refresh_from_disk(self) -> None:
         """Rebase this handle on the latest committed state (another
@@ -1133,7 +1133,7 @@ class Table:
         whether the handle is behind. The handle then takes the token
         read BEFORE the reload, as _write_lock does."""
         token = self._current_token()
-        if token == getattr(self, "_manifest_at_read", None):
+        if token == self._manifest_at_read:
             return
         if os.path.exists(os.path.join(self.path, "meta.json")):
             self._load_meta()
@@ -1199,7 +1199,8 @@ class Table:
                                                self.path))
         return sorted(out)
 
-    def _resolve_manifest(self, relpath: str) -> dict:
+    def _resolve_manifest(self, relpath: str,
+                          ranges: Sequence[tuple] = ()) -> dict:
         """Materialize a manifest into {"files": [...], "stats": {...},
         "segments": [...]?, "version"?, "next_rowid"?}. A v3 segmented
         manifest is replayed: each segment's `remove` list drops files,
@@ -1207,19 +1208,35 @@ class Table:
         later segments win, so a re-add with refreshed stats (bloom
         backfill) supersedes the old entry. v1/v2 manifests carry
         files/stats inline and pass through. Memoized per manifest
-        relpath (manifests and segments are immutable once written)."""
-        cache = getattr(self, "_resolve_cache", None)
+        relpath (manifests and segments are immutable once written).
+
+        `ranges` (FILE-column conjuncts) prune a replay the memo does
+        not hold: a segment without removes whose v4 summary refutes
+        them (_prune_files, reading the summary's lo/hi as one file's
+        min/max) is never opened, so a selective scan of a 10^6-file
+        table reads a bounded subset of segments and never builds the
+        full map (the Iceberg manifest-list pruning design). Segments
+        with removes always replay: their removes must apply. A replay
+        that skipped a segment still holds every file that can match;
+        it is not memoized."""
+        cache = self._resolve_cache
         if cache is not None and cache[0] == relpath:
             return cache[1]
         m = self._load_manifest(relpath)
         if "segments" in m:
             stats: dict[str, dict] = {}
+            partial = False
             for entry in m["segments"]:
+                if ranges and not entry.get("r") and "lo" in entry:
+                    summary = {c: [lo, entry["hi"][c]]
+                               for c, lo in entry["lo"].items()}
+                    if not self._prune_files([""], {"": summary}, ranges):
+                        partial = True
+                        continue
                 with open(os.path.join(self.path,
                                        _seg_path(entry))) as f:
                     seg = json.load(f)
-                self._segment_reads = \
-                    getattr(self, "_segment_reads", 0) + 1
+                self._segment_reads += 1
                 for r in seg.get("remove", ()):
                     stats.pop(r, None)
                 stats.update(seg.get("add", {}))
@@ -1228,126 +1245,52 @@ class Table:
             for k in ("version", "next_rowid"):
                 if k in m:
                     out[k] = m[k]
+            if partial:
+                return out
         else:
             out = m
+            out.setdefault("stats", {})
         self._resolve_cache = (relpath, out)
         return out
 
-    @staticmethod
-    def _seg_admits(entry: dict, ranges: Sequence[tuple]) -> bool:
-        """Can ANY file in this segment's add map satisfy all `ranges`
-        conjuncts, judging only by the segment summary? Columns absent
-        from the summary are unknowable (admit); in/isnull/notnull
-        conjuncts are not summarized (admit) — per-file stats refine
-        later."""
-        lo, hi = entry.get("lo") or {}, entry.get("hi") or {}
-        for col, op, val in ranges:
-            if col not in lo:
-                continue
-            l_, h_ = lo[col], hi[col]
-            try:
-                if op == "==" and not (l_ <= val <= h_):
-                    return False
-                if op in ("<", "<=") and not (l_ <= val if op == "<="
-                                              else l_ < val):
-                    return False
-                if op in (">", ">=") and not (val <= h_ if op == ">="
-                                              else val < h_):
-                    return False
-            except TypeError:  # cross-type comparison: unknowable
-                continue
-        return True
+    def _snapshot(self, ranges: Sequence[tuple] = ()) -> dict:
+        """The snapshot this handle reads, as _resolve_manifest returns
+        it; every read, probe and commit takes its files and stats from
+        one call. Inside a mutation it is the token _write_lock pinned,
+        so the whole mutation sees one snapshot even if an optimistic
+        racer commits mid-flight (the stale pin then fails the CAS and
+        the mutation retries); outside, it is CURRENT. A token whose
+        manifest a racing commit already vacuumed falls back to
+        CURRENT.
 
-    def _current_manifest_rel(self) -> Optional[str]:
-        """The manifest relpath reads should resolve right now (the pin
-        inside mutations, CURRENT outside — as _current_files), or None
-        when the table has no manifest (legacy/new)."""
-        depth = getattr(self, "_lock_depth", 0)
-        if depth:
-            pinned = getattr(self, "_manifest_at_read", None)
-            if pinned:
-                return pinned
-            return None  # "" = no CURRENT at rebase -> legacy scan
-        return self._current_token() or None
-
-    def _pruned_files(self, ranges: Sequence[tuple]) -> Optional[list]:
-        """Candidate files for `ranges` (FILE column names), replaying
-        only the segments whose v4 summary admits a match — a selective
-        scan of a 10^6-file table opens a bounded subset of segments and
-        never materializes the full file->stats map in driver memory
-        (VERDICT r9 #4; the Iceberg manifest-list pruning design).
-        Segments with removes are always opened (their remove list must
-        apply even if their adds can't match). Returns None when the
-        layout doesn't support it (legacy / v1-v2 inline manifests) —
-        callers fall back to the full-map path."""
-        try:
-            relpath = self._current_manifest_rel()
-        except OSError:
-            return None
-        if not relpath:
-            return None
-        cache = getattr(self, "_resolve_cache", None)
-        if cache is not None and cache[0] == relpath:
-            full = cache[1]  # already materialized: prune in memory
-            return self._prune_files(full["files"], full.get("stats", {}),
-                                     ranges)
-        try:
-            m = self._load_manifest(relpath)
-        except OSError:
-            return None
-        if "segments" not in m:
-            return None
-        out: dict[str, dict] = {}
-        for entry in m["segments"]:
-            if isinstance(entry, dict) and not entry.get("r") \
-                    and "lo" in entry \
-                    and not self._seg_admits(entry, ranges):
-                continue
+        Without CURRENT a table has committed nothing: at version 0 the
+        snapshot is empty (a new table, also one whose first commit
+        crashed or lost a race — the files in its data dir are not
+        committed). A table at a later version without CURRENT was
+        written before manifests: its data dir is its snapshot, and its
+        next commit upgrades it. `ranges`: see _resolve_manifest."""
+        token = self._manifest_at_read if self._lock_depth else None
+        if token is None:
+            token = self._current_token()
+        while token:
             try:
-                with open(os.path.join(self.path,
-                                       _seg_path(entry))) as f:
-                    seg = json.load(f)
+                return self._resolve_manifest(token, ranges)
             except OSError:
-                return None  # racing vacuum: let the caller's full
-                # path re-resolve and record the conflict properly
-            self._segment_reads = getattr(self, "_segment_reads", 0) + 1
-            for r in seg.get("remove", ()):
-                out.pop(r, None)
-            for f_, st in seg.get("add", {}).items():
-                if self._prune_files([f_], {f_: st}, ranges):
-                    out[f_] = st
-                else:
-                    out.pop(f_, None)  # stats-refreshed override that
-                    # no longer admits a match
-        return sorted(out)
+                now = self._current_token()
+                if now == token:
+                    raise
+                token = now
+        if self.version == 0 or not os.path.isdir(self._data_dir):
+            return {"files": [], "stats": {}}
+        return {"files": self._scan_parquet(self._data_dir), "stats": {}}
 
     def _current_files(self) -> list[str]:
-        """The current snapshot's file list; legacy (pre-manifest) tables
-        fall back to a directory scan and upgrade on their next commit.
-        INSIDE a mutation, reads resolve the manifest pinned at rebase
-        (see _write_lock) so the whole mutation sees one consistent
-        snapshot even if an optimistic racer commits mid-flight — the
-        stale pin then fails this mutation's conditional swap and it
-        retries. Outside mutations, reads resolve CURRENT."""
-        depth = getattr(self, "_lock_depth", 0)
-        if depth:
-            pinned = getattr(self, "_manifest_at_read", None)
-            if pinned:
-                try:
-                    return self._resolve_manifest(pinned)["files"]
-                except OSError:
-                    pass  # racing commit vacuumed the pinned snapshot:
-                    # fall through to CURRENT; the stale pin will fail
-                    # the CAS at commit and the mutation retries
-            elif pinned == "":  # no CURRENT at rebase (new/legacy table)
-                return (self._scan_parquet(self._data_dir)
-                        if os.path.isdir(self._data_dir) else [])
-        cur = self._current_token()
-        if cur:
-            return self._resolve_manifest(cur)["files"]
-        if os.path.isdir(self._data_dir):
-            return self._scan_parquet(self._data_dir)
-        return []
+        """The file list of this handle's snapshot (see _snapshot)."""
+        return self._snapshot()["files"]
+
+    def _current_stats(self) -> dict:
+        """The per-file stats of this handle's snapshot (see _snapshot)."""
+        return self._snapshot()["stats"]
 
     @staticmethod
     def _bucket_of(relpath: str) -> Optional[int]:
@@ -1560,22 +1503,6 @@ class Table:
             results = [_one(r) for r in relpaths]
         return {rel: entry for rel, entry in results if entry is not None}
 
-    def _current_stats(self) -> dict:
-        """File stats of the current manifest ({} for legacy manifests).
-        In-mutation reads use the snapshot pinned at rebase, mirroring
-        _current_files."""
-        if getattr(self, "_lock_depth", 0):
-            pinned = getattr(self, "_manifest_at_read", None)
-            if pinned:
-                try:
-                    return self._resolve_manifest(pinned).get("stats", {})
-                except OSError:
-                    pass
-            elif pinned == "":
-                return {}
-        cur = self._current_token()
-        return self._resolve_manifest(cur).get("stats", {}) if cur else {}
-
     @staticmethod
     def _prune_files(files: Sequence[str], stats: dict,
                      ranges: Sequence[tuple]) -> list[str]:
@@ -1660,8 +1587,7 @@ class Table:
     # accumulates this many delta segments: replay cost stays bounded
     # while commit cost stays O(files changed), amortized — the Delta
     # checkpoint-every-N-commits design
-    _CHECKPOINT_SEGMENTS = int(os.environ.get(
-        "PXT_SPARK_MANIFEST_CHECKPOINT", "24"))
+    _CHECKPOINT_SEGMENTS = 24
 
     def _commit_files(self, files: Sequence[str], *,
                       version: Optional[int] = None,
@@ -1695,21 +1621,18 @@ class Table:
         # this mutation read its base snapshot, abort cheaply before the
         # stats collection; the AUTHORITATIVE check is the commit store's
         # conditional swap below (atomic with the publish)
-        expected = getattr(self, "_manifest_at_read", None)
+        expected = self._manifest_at_read
         now = self._current_token()
-        if now:
-            # expected == "" means this mutation rebased on a table with
-            # NO CURRENT — one appearing since is a racer's first commit
-            if expected is not None and now != expected:
-                raise ConcurrencyError(
-                    f"concurrent modification of table {self.name!r}: "
-                    f"CURRENT moved from {expected or '<none>'} to {now} "
-                    "during this mutation; re-read and retry")
-            prev = self._resolve_manifest(now)
-        else:
-            prev = {"files": [], "stats": {}}
+        # expected == "" means this mutation rebased on a table with NO
+        # CURRENT — one appearing since is a racer's first commit
+        if now and expected is not None and now != expected:
+            raise ConcurrencyError(
+                f"concurrent modification of table {self.name!r}: "
+                f"CURRENT moved from {expected or '<none>'} to {now} "
+                "during this mutation; re-read and retry")
+        prev = self._snapshot()
         prev_files = set(prev["files"])
-        prev_stats = prev.get("stats", {})
+        prev_stats = prev["stats"]
         prev_segments = prev.get("segments")
 
         def _fresh(f: str) -> bool:
@@ -1922,30 +1845,18 @@ class Table:
         `ranges` = (col, op, literal) conjuncts for manifest-stats file
         skipping; pruning everything still returns an empty-but-typed
         scan over one file so the schema survives."""
-        if ranges:
-            tr = self._translate_ranges(ranges)
-            # segment-range pruning first: a selective scan replays only
-            # the manifest segments whose summary admits a match, never
-            # materializing the full file map (manifest v4)
-            pruned = self._pruned_files(tr)
-            if pruned is None:  # legacy layout: full-map path
-                files = self._current_files()
-                if not files:
-                    return None
-                pruned = self._prune_files(files, self._current_stats(),
-                                           tr)
-            if not pruned:
-                files = self._current_files()
-                if not files:
-                    return None
-                # keep one file for schema; no row can match, but the
-                # caller still applies the row-level predicate
-                return self._read_files(files[:1]).limit(0)
-            files = pruned
-        else:
-            files = self._current_files()
+        tr = self._translate_ranges(ranges) if ranges else ()
+        snap = self._snapshot(tr)
+        files = (self._prune_files(snap["files"], snap["stats"], tr)
+                 if tr else snap["files"])
+        if not files:
+            # no row can match, but the caller still applies the
+            # row-level predicate: one file keeps the schema (a replay
+            # that skipped every segment holds none — resolve in full)
+            files = snap["files"] or (self._current_files() if tr else [])
             if not files:
                 return None
+            return self._read_files(files[:1]).limit(0)
         inferred = self._reader_schema() is None
         out = self._read_files(files)
         if inferred:
@@ -2011,7 +1922,7 @@ class Table:
         under the new version, so every bump moves CURRENT exactly
         once. Returns the files the commit added."""
         written = list(written)
-        # a table without CURRENT lists its data dir, which already
+        # a pre-manifest table's snapshot is its data dir, which already
         # holds the written files
         drop = set(replaced) | set(written)
         keep = [f for f in self._current_files() if f not in drop]
@@ -2099,13 +2010,14 @@ class Table:
         from urllib.parse import unquote, urlparse
 
         spark = self.catalog.spark
-        files = self._current_files()
+        snap = self._snapshot()
+        files = snap["files"]
         if not files:
             return None, [], 0, set()
         legacy = any(self._bucket_of(f) is None for f in files)
         floor = self.version if live_floor is None else live_floor
         cand = self._prune_files(
-            files, self._current_stats(),
+            files, snap["stats"],
             self._translate_ranges([(live_col, ">", floor), *ranges]))
         if not cand:
             return None, [], 0, set()
@@ -2224,8 +2136,8 @@ class Table:
                 f"no NDV sketch registered for {col!r} — call "
                 f"add_ndv_stats({col!r}) first")
         fcol = self.phys_map.get(col, col)
-        stats = self._current_stats()
-        files = self._current_files()
+        snap = self._snapshot()
+        files, stats = snap["files"], snap["stats"]
         if not files:
             return 0
         sketches = []
@@ -2475,7 +2387,7 @@ class Table:
         silently returns 0 rows). Pinned-version reads and in-mutation
         reads (write lock held) never sync — their snapshot is the
         point."""
-        if not getattr(self, "_lock_depth", 0):
+        if not self._lock_depth:
             self._refresh_from_disk()
 
     def df(self, version: Optional[int] = None) -> DataFrame:
@@ -3112,6 +3024,13 @@ class Table:
         self._commit_schema_change("rename_column", old=old, new=new)
 
     # -- mutations ---------------------------------------------------------
+    def _enforce_pk(self) -> bool:
+        """Whether inserts check primary-key uniqueness: on for a keyed
+        table unless PXT_SPARK_ENFORCE_PK=0 (bulk loads that guarantee
+        uniqueness upstream)."""
+        return bool(self.primary_key) and \
+            os.environ.get("PXT_SPARK_ENFORCE_PK", "1") != "0"
+
     def _insert_precheck(self, src: DataFrame) -> tuple[dict, list]:
         """ONE Spark job over the incoming batch, grouped by partition id,
         computing everything insert needs from the batch itself:
@@ -3133,9 +3052,7 @@ class Table:
         check = [c for c, ct in self.schema.items()
                  if not ct.nullable and src_fields[c].nullable]
         pk = list(self.primary_key or [])
-        enforce_pk = bool(pk) and \
-            os.environ.get("PXT_SPARK_ENFORCE_PK", "1") != "0"
-        rng_col = pk[0] if enforce_pk and len(pk) == 1 else None
+        rng_col = pk[0] if self._enforce_pk() and len(pk) == 1 else None
         aggs = [F.count(F.lit(1)).alias("__cnt")]
         aggs += [F.sum(F.col(c).isNull().cast("long")).alias(f"__null_{i}")
                  for i, c in enumerate(check)]
@@ -3171,9 +3088,7 @@ class Table:
         range could mask a PK collision; too-loose is merely slower)."""
         counts = {0: len(rows)}
         pk = list(self.primary_key or [])
-        enforce_pk = bool(pk) and \
-            os.environ.get("PXT_SPARK_ENFORCE_PK", "1") != "0"
-        if not (enforce_pk and len(pk) == 1):
+        if not (self._enforce_pk() and len(pk) == 1):
             return counts, []
         c = pk[0]
         st = self.schema[c].spark_type()
@@ -3206,8 +3121,7 @@ class Table:
         stats-pruned to the batch's key range from _insert_precheck —
         and pull one offending key of each kind out of a single agg.
         The same work a store-side unique index does, paid at insert;
-        PXT_SPARK_ENFORCE_PK=0 disables it for bulk loads that guarantee
-        uniqueness upstream (callers gate on that before calling)."""
+        callers gate on _enforce_pk before calling."""
         pk = list(self.primary_key or [])
         keys = src.groupBy(*pk).agg(F.count(F.lit(1)).alias("__n"))
         if self._has_data():
@@ -3325,8 +3239,7 @@ class Table:
         if counts is None:
             with _commit_scope(spark, width):
                 counts, pk_ranges = self._insert_precheck(src)
-        if self.primary_key and \
-                os.environ.get("PXT_SPARK_ENFORCE_PK", "1") != "0":
+        if self._enforce_pk():
             # the collision probe also reads the table's live keys:
             # sized by the buckets the table holds, not the batch's
             with _commit_scope(spark, width and self._bucket_width(
@@ -3960,8 +3873,8 @@ class Table:
         the approximate distinct count. Pure driver-side metadata
         fold over the per-file footer stats already in the manifest;
         O(live files), no Spark job, at any table size."""
-        files = self._current_files()
-        fstats = self._current_stats()
+        snap = self._snapshot()
+        files, fstats = snap["files"], snap["stats"]
         total_bytes = 0
         for f in files:
             try:
@@ -4248,40 +4161,36 @@ class View(Table):
         self._carry_schema_cache()
         self._save_view_meta()
 
-    def _manifest_version_stamp(self) -> Optional[int]:
-        """The version stamped into the CURRENT manifest, or None. Pre-
-        round-9 view manifests were stamped with the PRE-mutation version,
-        so callers must treat the stamp as a lower bound (take max with
-        meta) rather than the unconditional truth."""
-        cur_manifest = self._current_token()
-        if not cur_manifest:
-            return None
+    def _take_meta(self, meta: dict, token: str) -> None:
+        """Take the view-version fields from `meta` (view meta has no
+        next_rowid: rows are keyed by the base's _rowid). The version
+        stamped into the manifest `token` names wins when it is AHEAD
+        (a writer that crashed between the CURRENT swap and the meta
+        save), so a reloaded handle never reuses a committed version
+        number. Pre-round-9 view manifests were stamped with the PRE-
+        mutation version, so the stamp is a lower bound, not the
+        truth."""
+        self.version = meta["version"]
         try:
-            return self._load_manifest(cur_manifest).get("version")
+            stamp = self._load_manifest(token).get("version") \
+                if token else None
         except (OSError, KeyError, json.JSONDecodeError):
-            return None
+            stamp = None
+        if stamp is not None and stamp > self.version:
+            self.version = stamp
+        self._version_floor = meta.get("version_floor", meta["version"])
+        self._loaded_base_version = meta.get("loaded_base_version", -1)
 
     def _refresh_from_disk(self) -> None:
-        """View meta has no next_rowid (rows are keyed by the base's
-        _rowid) — rebase the view-version fields directly instead of the
-        Table loader. The committed manifest's version stamp wins over
-        meta.json when it is AHEAD (a writer that crashed between the
-        CURRENT swap and the meta save), so a reloaded handle never
-        reuses a committed version number for its next mutation. The
-        token rule is Table._refresh_from_disk's."""
+        """Rebase the view-version fields (_take_meta) instead of running
+        the Table loader. The token rule is Table._refresh_from_disk's."""
         token = self._current_token()
-        if token == getattr(self, "_manifest_at_read", None):
+        if token == self._manifest_at_read:
             return
         mpath = os.path.join(self.path, "meta.json")
         if os.path.exists(mpath):
             with open(mpath) as f:
-                meta = json.load(f)
-            self.version = meta.get("version", self.version)
-            stamp = self._manifest_version_stamp()
-            if stamp is not None and stamp > self.version:
-                self.version = stamp
-            self._version_floor = meta.get("version_floor", self.version)
-            self._loaded_base_version = meta.get("loaded_base_version", -1)
+                self._take_meta(json.load(f), token)
         self._manifest_at_read = token
 
     @classmethod
@@ -4294,15 +4203,7 @@ class View(Table):
         with open(os.path.join(path, "view.pkl"), "rb") as f:
             spec = cloudpickle.load(f)
         v.base = catalog.get_table(meta["base"])
-        v.version = meta["version"]
-        # reconcile against the committed manifest stamp: a crash between
-        # the CURRENT swap and the meta save must not let this handle
-        # reuse the committed version (same contract as Table._load_meta)
-        stamp = v._manifest_version_stamp()
-        if stamp is not None and stamp > v.version:
-            v.version = stamp
-        v._version_floor = meta.get("version_floor", meta["version"])
-        v._loaded_base_version = meta.get("loaded_base_version", -1)
+        v._take_meta(meta, v._current_token())
         v.n_buckets = meta.get("n_buckets", 16)
         # views persisted before the chunked-bucket formula laid out
         # their files with the pure-mod assignment: keep chunk=1 so the
@@ -4478,7 +4379,7 @@ class View(Table):
         this view (propagation reaches only the views registered on the
         mutating handle), leaving the materialization behind the base.
         Same self-healing as View._load, applied at read time."""
-        if getattr(self, "_lock_depth", 0):
+        if self._lock_depth:
             return  # in-mutation read: the pinned snapshot is the point
         super()._sync_latest()
         base = self.base

@@ -180,7 +180,7 @@ class TestLegacyMigration:
 
 class TestSegmentRangePruning:
     """Manifest v4 segment summaries (catalog.py _seg_entry /
-    _pruned_files): a selective scan replays only the segments whose
+    _resolve_manifest): a selective scan replays only the segments whose
     per-column min/max summary admits a match — at 10^6-10^7 files the
     driver never materializes the full file->stats map just to plan a
     point lookup (Iceberg manifest-list pruning design)."""
@@ -289,14 +289,18 @@ class TestSegmentPruningAtScale:
                        "version": 1, "next_rowid": 100000}, f)
         with open(t._current_path, "w") as f:
             json.dump({"format_version": 4, "manifest": mrel}, f)
+        def pruned(ranges):
+            snap = t._snapshot(ranges)
+            return t._prune_files(snap["files"], snap["stats"], ranges)
+
         t._resolve_cache = None
         t._segment_reads = 0
-        got = t._pruned_files([("k", "==", 123456),
-                               ("_v_min", "<=", 1), ("_v_max", ">", 1)])
+        got = pruned([("k", "==", 123456),
+                      ("_v_min", "<=", 1), ("_v_max", ">", 1)])
         assert t._segment_reads == 1                  # ONE segment JSON
         assert got == ["data/_bkt=0/fake-0123-0228.parquet"]
         # range over 3 segments
         t._segment_reads = 0
-        got = t._pruned_files([("k", ">=", 50_000), ("k", "<", 52_500)])
+        got = pruned([("k", ">=", 50_000), ("k", "<", 52_500)])
         assert t._segment_reads == 3
         assert len(got) == 500 + 500 + 250
