@@ -35,7 +35,6 @@ incremental loads are plain filtered scans.
 from __future__ import annotations
 
 import builtins
-import contextlib
 import datetime
 import decimal
 import functools
@@ -122,22 +121,14 @@ def _key_pred(col: str, keys: Sequence) -> Column:
     return pred | c.isNull() if len(vals) < len(keys) else pred
 
 
-def _collect_bounded(spark, df: DataFrame, width: int) -> list:
+def _collect_bounded(df: DataFrame, width: int) -> list:
     """`df`'s distinct rows, at most _DELTA_LITERAL_MAX + 1 of them (the
     extra row says the delta is over the literal bound), in ONE job at
     `width`. coalesce(1) before the limit keeps the take to one task —
     a bare limit().collect() rescans 1, then 4, then 11 partitions, a
     job each."""
-    with tinyplan.tiny_plan(spark, width):
-        return (df.distinct().coalesce(1)
-                .limit(_DELTA_LITERAL_MAX + 1).collect())
-
-
-def _commit_scope(spark, width: Optional[int]):
-    """A commit action's tinyplan scope at `width`; None keeps the
-    session's confs (a user's DataFrame source query plans under AQE)."""
-    return (tinyplan.tiny_plan(spark, width) if width
-            else contextlib.nullcontext())
+    return (tinyplan.narrow(df, width).distinct().coalesce(1)
+            .limit(_DELTA_LITERAL_MAX + 1).collect())
 
 
 def _literal_keys(rows, cols: Sequence[str]) -> Optional[list[tuple]]:
@@ -157,9 +148,8 @@ def _literal_keys(rows, cols: Sequence[str]) -> Optional[list[tuple]]:
 def _has_exchange(df: DataFrame) -> bool:
     """True when `df`'s physical plan shuffles. Such a plan's output
     partitioning is decided per action: AQE coalesces each shuffle read
-    by its map outputs' byte sizes (which column pruning changes from
-    one consumer to the next), and another thread's tinyplan scope can
-    set the width while an unscoped action plans."""
+    by its map outputs' byte sizes, which column pruning changes from
+    one consumer to the next."""
     try:
         return "Exchange" in df._jdf.queryExecution().executedPlan() \
             .toString()
@@ -1343,30 +1333,30 @@ class Table:
         each paying a footer-stats read at commit and a scan split
         forever after). `width` is the commit action's execution width
         from the caller (see _bucket_width: the buckets the commit
-        touches): the repartition and every other shuffle of `df`'s plan
-        run inside a tinyplan scope at that width — AQE off, one job,
-        one task per touched bucket. The width cannot change the files
-        written (a task holding several buckets still writes one file
-        per bucket dir); it only sizes the stages, so a small commit on
-        a table that sits in one bucket schedules single-task stages
-        instead of n_buckets or defaultParallelism no-op tasks, while a
-        commit touching hundreds of buckets gets that many tasks (and,
-        past the skew guard, AQE). width=None keeps the session's
-        confs: whole-table rewrites and a user's DataFrame source query
-        plan under AQE. optimize(zorder_by=...) passes
+        touches): `df` is narrowed to that width (tinyplan.narrow), so
+        the repartition and every other shuffle of its plan run with AQE
+        off, in one job, one task per touched bucket. The width cannot
+        change the files written (a task holding several buckets still
+        writes one file per bucket dir); it only sizes the stages, so a
+        small commit on a table that sits in one bucket schedules
+        single-task stages instead of n_buckets or defaultParallelism
+        no-op tasks, while a commit touching hundreds of buckets gets
+        that many tasks (and, past the skew guard, AQE). width=None plans in the main
+        session: whole-table rewrites and a user's DataFrame source
+        query plan under AQE. optimize(zorder_by=...) passes
         preserve_partitioning=True — its range-partition-on-z layout IS
         the point and must reach the writer untouched."""
         df = self._to_file_cols(self._with_bkt(df))
         tmp = os.path.join(self._data_dir, ".tmp-" + _uuid.uuid4().hex[:8])
         partitioned = _BKT in df.columns
+        df = tinyplan.narrow(df, width)
         if partitioned and not preserve_partitioning \
                 and not skip_repartition:
             df = df.repartition(_ccol(_BKT))
         w = df.write.mode("overwrite")
         if partitioned:
             w = w.partitionBy(_BKT)
-        with _commit_scope(self.catalog.spark, width):
-            w.parquet(tmp)
+        w.parquet(tmp)
         snap = _uuid.uuid4().hex[:12]
         moved: list[str] = []
         i = 0
@@ -2009,7 +1999,6 @@ class Table:
         bucketed layout in one pass (previous behavior)."""
         from urllib.parse import unquote, urlparse
 
-        spark = self.catalog.spark
         snap = self._snapshot()
         files = snap["files"]
         if not files:
@@ -2029,9 +2018,9 @@ class Table:
             # (bounded by the batch size) instead of a second job over
             # the matched files
             aggs.append(F.collect_set(F.struct(*probe_keys)).alias("__ks"))
-        with tinyplan.tiny_plan(spark, self._bucket_width(cand)):
-            probe_rows = (probe.filter(F.col("__m"))
-                          .groupBy("__file").agg(*aggs).collect())
+        probe_rows = (tinyplan.narrow(probe, self._bucket_width(cand))
+                      .filter(F.col("__m")).groupBy("__file").agg(*aggs)
+                      .collect())
         per_file = {r["__file"]: r["__n"] for r in probe_rows}
         keys: set = set()
         if probe_keys:
@@ -3201,7 +3190,7 @@ class Table:
         # a driver-held row list is commit-path work end to end: its
         # precheck and store write run at the width of the buckets its
         # rowid range spans. A DataFrame/TableRef/file source is the
-        # user's query — it keeps the session's confs (AQE).
+        # user's query — it plans in the main session (AQE).
         width = None
         if isinstance(rows, TableRef):
             src = rows.df()
@@ -3227,7 +3216,11 @@ class Table:
                 raise ValueError(f"missing required column {c!r}")
             src = src.withColumn(c, F.lit(None).cast(self.schema[c].spark_type()))
         src = src.select(*[F.col(c).cast(self.schema[c].spark_type()) for c in self.schema])
-        if width is None and _has_exchange(src):
+        if width is not None:
+            # narrowed before the write's error Observation attaches:
+            # an Observation reports only from the session that runs it
+            src = tinyplan.narrow(src, width)
+        elif _has_exchange(src):
             # the precheck counts rows per source partition and the write
             # hands out _rowid offsets from those counts, in two jobs:
             # both must read the same partitions, so a shuffled source
@@ -3237,14 +3230,12 @@ class Table:
         if lit_1p:
             counts, pk_ranges = self._precheck_local(rows)
         if counts is None:
-            with _commit_scope(spark, width):
-                counts, pk_ranges = self._insert_precheck(src)
+            counts, pk_ranges = self._insert_precheck(src)
         if self._enforce_pk():
             # the collision probe also reads the table's live keys:
             # sized by the buckets the table holds, not the batch's
-            with _commit_scope(spark, width and self._bucket_width(
-                    self._current_files())):
-                self._enforce_pk_unique(src, pk_ranges)
+            self._enforce_pk_unique(tinyplan.narrow(src, width and (
+                self._bucket_width(self._current_files()))), pk_ranges)
 
         new_version = self.version + 1
         t0 = time.time()
@@ -4035,8 +4026,7 @@ class Table:
                     cols.append(c)
         if not cols:
             return None
-        return _collect_bounded(self.catalog.spark, delta.select(*cols),
-                                self._bucket_width(files))
+        return _collect_bounded(delta.select(*cols), self._bucket_width(files))
 
     def _bounds_from_stats(self, files: Sequence[str]) -> Optional[tuple]:
         """(min, max) `_rowid` across `files` from the manifest's footer
@@ -4228,9 +4218,6 @@ class View(Table):
             df = self.iterator(df)  # must add _pos and may explode rows
         for name, (expr, _ct) in self.extra.items():
             df = df.withColumn(name, expr.compile())
-        return df
-
-    def _materialized_schema(self, df: DataFrame) -> DataFrame:
         return df
 
     @_locked_mutation

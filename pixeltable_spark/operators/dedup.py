@@ -540,8 +540,9 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
              .union(e.select(F.col("v").alias("id")))
              .distinct())
 
-    # The star rounds run in tiny-plan mode: AQE OFF plus a shuffle
-    # width taken from the checkpointed edge set itself. With AQE on,
+    # The star rounds plan in a narrowed session (tinyplan.narrow): AQE
+    # OFF plus a shuffle width taken from the checkpointed edge set
+    # itself; `nodes` keeps the result in this session. With AQE on,
     # every round's single action fans out into one Spark JOB PER
     # SHUFFLE STAGE (~7/round) plus a driver replanning gap between them
     # — measured ~0.65 s/round of pure driver overhead on edge sets
@@ -551,46 +552,46 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     # real pair volume (1 at bench scale, hundreds+ on a 100 TB dup
     # graph). Partitioning cannot change results (the loop is
     # groupBy/join/distinct on exact keys).
-    from ..tinyplan import materialized_width, tiny_plan
-    with tiny_plan(e.sparkSession, materialized_width(e)):
-        prev_sig = None
-        for _ in range(max_iter):
-            # large-star: group neighbors of each node (both directions),
-            # connect strictly-larger neighbors to min(neighborhood ∪ self)
-            nbrs = e.select("u", "v").union(e.select(F.col("v").alias("u"),
-                                                     F.col("u").alias("v")))
-            m = nbrs.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m"))
-            large = (nbrs.join(m, "u")
-                     .where(F.col("v") > F.col("u"))
-                     .select(F.col("v").alias("u"), F.col("m").alias("v")))
-            e = (large.where(F.col("u") != F.col("v"))
-                 .select(F.least("u", "v").alias("u"),
-                         F.greatest("u", "v").alias("v"))
-                 .distinct())
-            # small-star: for edges u>=v (here canonical u<v: group by the
-            # larger endpoint), point all smaller neighbors + self at the min
-            m2 = e.groupBy("v").agg(F.min("u").alias("m"))
-            small = (e.join(m2, "v")
-                     .select(F.col("u"), F.col("m").alias("w"))
-                     .union(m2.select(F.col("v").alias("u"),
-                                      F.col("m").alias("w"))))
-            e = (small.where(F.col("u") != F.col("w"))
-                 .select(F.least("u", "w").alias("u"),
-                         F.greatest("u", "w").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=False))
-            # fixpoint: the edge set is stable when (count, sum(u), sum(v))
-            # stops changing. The global agg computes EVERY partition of e,
-            # so this one action also materializes the lazy checkpoint — one
-            # job per round instead of an eager-checkpoint job plus an agg
-            # job (the next round reads e twice, so it must be materialized
-            # here); with AQE off it really is ONE job, not one per stage
-            sig = tuple(e.agg(F.count(F.lit(1)), F.sum("u"),
-                              F.sum("v")).first())
-            if sig == prev_sig:
-                break
-            prev_sig = sig
+    from ..tinyplan import materialized_width, narrow
+    e = narrow(e, materialized_width(e))
+    prev_sig = None
+    for _ in range(max_iter):
+        # large-star: group neighbors of each node (both directions),
+        # connect strictly-larger neighbors to min(neighborhood ∪ self)
+        nbrs = e.select("u", "v").union(e.select(F.col("v").alias("u"),
+                                                 F.col("u").alias("v")))
+        m = nbrs.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m"))
+        large = (nbrs.join(m, "u")
+                 .where(F.col("v") > F.col("u"))
+                 .select(F.col("v").alias("u"), F.col("m").alias("v")))
+        e = (large.where(F.col("u") != F.col("v"))
+             .select(F.least("u", "v").alias("u"),
+                     F.greatest("u", "v").alias("v"))
+             .distinct())
+        # small-star: for edges u>=v (here canonical u<v: group by the
+        # larger endpoint), point all smaller neighbors + self at the min
+        m2 = e.groupBy("v").agg(F.min("u").alias("m"))
+        small = (e.join(m2, "v")
+                 .select(F.col("u"), F.col("m").alias("w"))
+                 .union(m2.select(F.col("v").alias("u"),
+                                  F.col("m").alias("w"))))
+        e = (small.where(F.col("u") != F.col("w"))
+             .select(F.least("u", "w").alias("u"),
+                     F.greatest("u", "w").alias("v"))
+             .distinct()
+             .localCheckpoint(eager=False))
+        # fixpoint: the edge set is stable when (count, sum(u), sum(v))
+        # stops changing. The global agg computes EVERY partition of e,
+        # so this one action also materializes the lazy checkpoint — one
+        # job per round instead of an eager-checkpoint job plus an agg
+        # job (the next round reads e twice, so it must be materialized
+        # here); with AQE off it really is ONE job, not one per stage
+        sig = tuple(e.agg(F.count(F.lit(1)), F.sum("u"),
+                          F.sum("v")).first())
+        if sig == prev_sig:
+            break
+        prev_sig = sig
 
     # after convergence every edge is (member, root): component = min
     # endpoint; isolated nodes are their own component

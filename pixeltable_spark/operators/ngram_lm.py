@@ -136,22 +136,23 @@ def train_kn_bigram(train_df: DataFrame, text_col: str = "text",
         if vocab_rows else spark.createDataFrame([], "tok string")
     # <unk>-mapped bigram counts: re-aggregate the COUNTS table under
     # the mapping — O(raw bigram types), zero corpus work. The vocab
-    # collect above materialized raw_counts, so everything below
-    # reduces a bounded, already-checkpointed types table: run it in
-    # tiny-plan mode (AQE off + raw_counts' own materialized width) —
+    # collect above materialized raw_counts, so the checkpoint and its
+    # count reduce a bounded, already-checkpointed types table: they
+    # plan narrowed (AQE off + raw_counts' own materialized width) —
     # with AQE on, these few-row aggregations cost ~10 stage-jobs plus
-    # driver replanning gaps per training call.
-    from ..tinyplan import materialized_width, tiny_plan
-    with tiny_plan(spark, materialized_width(raw_counts)):
-        mapped = _map_unk(_map_unk(raw_counts, "w1", vocab), "w2", vocab)
-        bigrams = (mapped.groupBy("w1", "w2")
-                   .agg(F.sum("c").alias("c"))
-                   # lazy: n_types = bigrams.count() below materializes it
-                   .localCheckpoint(eager=False))
-        contexts = bigrams.groupBy("w1").agg(
-            F.sum("c").alias("ctx"), F.count(F.lit(1)).alias("nfollow"))
-        # continuation counts + add-one over the predictable types
-        n_types = bigrams.count()
+    # driver replanning gaps per training call. The model's tables go
+    # back to this session: later user queries read them under AQE.
+    from ..tinyplan import materialized_width, narrow
+    counts = narrow(raw_counts, materialized_width(raw_counts))
+    bigrams = (_map_unk(_map_unk(counts, "w1", vocab), "w2", vocab)
+               .groupBy("w1", "w2").agg(F.sum("c").alias("c"))
+               # lazy: n_types = bigrams.count() below materializes it
+               .localCheckpoint(eager=False))
+    # continuation counts + add-one over the predictable types
+    n_types = bigrams.count()
+    bigrams = narrow(bigrams, None)
+    contexts = bigrams.groupBy("w1").agg(
+        F.sum("c").alias("ctx"), F.count(F.lit(1)).alias("nfollow"))
     v_pred = len(vocab_rows) + 1  # vocab ∪ {<unk>}
     pcont_counts = (bigrams.groupBy("w2")
                     .agg(F.count(F.lit(1)).alias("n1")))

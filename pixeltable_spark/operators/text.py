@@ -449,7 +449,7 @@ def dsir_score(df: DataFrame, model: DataFrame, text_col: str = "text",
 # set as one operator — the shape users actually run)
 # ---------------------------------------------------------------------------
 
-GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
+GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
 @lru_cache(maxsize=16)

@@ -195,9 +195,6 @@ class ResultSet(list):
                     raise ValueError(str(err)) from err
         return gen()
 
-    def _reverse(self) -> None:
-        self.reverse()
-
     def __repr__(self) -> str:
         try:
             return self.to_pandas().__repr__()
