@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import builtins
 import datetime
-import decimal
 import functools
 import json
 import os
@@ -57,6 +56,7 @@ from .exceptions import (AlreadyExistsError, ConcurrencyError,
 from .table_metadata import (ColumnMetadata, IndexMetadata, TableMetadata,
                              UpdateStatus, VersionMetadata, version_metadata)
 from .exprs import Expr
+from .localframe import _NoLiteral, _esc, _value_sql, local_df as _local_df
 from .plans.query import TableRef
 from .type_system import ColumnType, schema_to_struct
 
@@ -76,11 +76,14 @@ SYSTEM_COLS = {_ROWID, _VMIN, _VMAX, _POS, _VVMIN, _VVMAX, _BKT}
 # per-file driver cost stays O(1))
 _IN_PRUNE_MAX = 64
 # a commit delta of at most this many distinct tuples (affected rowids
-# for views, group keys for rollups) reaches its dependents as literal
-# predicates; a larger delta takes the join path. Measured on one
-# update's maintenance (local Spark, 4 cores, 12k- and 120k-row bases):
-# the literal IN beats the join by 5-19% up to 384 keys and is level or
-# slower from 512 (the driver builds one literal per key)
+# for views, group keys for rollups) reaches its dependents as one
+# rendered literal predicate (_delta_pred); a larger delta takes the
+# null-safe join. The bound was measured when the predicate cost one
+# py4j literal per key (Column.isin): the literal IN beat the join by
+# 5-19% up to 384 keys and was level or slower from 512 (one update's
+# maintenance, local Spark, 4 cores, 12k- and 120k-row bases). A
+# rendered string builds in ~1-3 ms at any of these sizes, so the
+# crossover wants re-measuring; until then the bound stays
 _DELTA_LITERAL_MAX = 256
 
 
@@ -111,16 +114,6 @@ def _bkt_col(chunk: int, n_buckets: int) -> Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def _key_pred(col: str, keys: Sequence) -> Column:
-    """Null-safe membership of `col` in the literal `keys`: a NULL key
-    matches NULL (group-by semantics), which a plain equi-join or IN
-    never does."""
-    c = F.col(col)
-    vals = [k for k in keys if k is not None]
-    pred = c.isin(vals) if vals else F.lit(False)
-    return pred | c.isNull() if len(vals) < len(keys) else pred
-
-
 def _collect_bounded(df: DataFrame, width: int) -> list:
     """`df`'s distinct rows, at most _DELTA_LITERAL_MAX + 1 of them (the
     extra row says the delta is over the literal bound), in ONE job at
@@ -131,18 +124,61 @@ def _collect_bounded(df: DataFrame, width: int) -> list:
             .limit(_DELTA_LITERAL_MAX + 1).collect())
 
 
-def _literal_keys(rows, cols: Sequence[str]) -> Optional[list[tuple]]:
-    """Distinct `cols` tuples of collected delta rows, or None when a
-    value cannot be a plain SQL literal: nested types, and timestamps,
-    which collect as naive local-time datetimes that do not round-trip
-    to the same instant across a DST fold. Those keep the join."""
-    ok = (int, float, str, bool, bytes, datetime.date, decimal.Decimal)
-    tuples = [tuple(r[c] for c in cols) for r in rows]
-    if all(v is None or (isinstance(v, ok)
-                         and not isinstance(v, datetime.datetime))
-           for k in tuples for v in k):
-        return list(dict.fromkeys(tuples))
-    return None
+def _delta_pred(spark: SparkSession, fields: Sequence[T.StructField],
+                keys: Sequence[tuple]) -> Optional[Column]:
+    """Null-safe membership of the `fields` columns in the literal key
+    tuples `keys`, rendered as ONE SQL string: one py4j call at any key
+    count, where Column.isin ships one literal per key. One column is
+    `c IN (...)`, plus `OR c IS NULL` for a NULL key: the plain IN that
+    parquet pushdown reads. Several are `named_struct(...) IN
+    (named_struct(...), ...)`: struct equality matches a NULL field to
+    NULL, so NULL group keys match (group-by semantics). Each literal
+    is cast to its column's type, as localframe._sql_plan does.
+
+    None when a value is not a provably exact literal, and the caller
+    joins instead: nested values and anything else _value_sql declines;
+    datetimes, collected as naive local time, which does not
+    round-trip across a DST fold; NaN and float zeros, which GROUP BY
+    folds (-0.0 with 0.0) but a pushed-down parquet filter tells apart;
+    strings under escapedStringLiterals."""
+    rendered: dict[tuple, None] = {}
+    has_str = False
+    try:
+        for key in keys:
+            lits = []
+            for f, v in zip(fields, key):
+                if isinstance(v, datetime.datetime) or (
+                        isinstance(v, float) and (v != v or v == 0)):
+                    return None
+                has_str = has_str or isinstance(v, str)
+                lits.append("CAST(%s AS %s)" % (
+                    _value_sql(v), f.dataType.simpleString()))
+            rendered[tuple(lits)] = None
+    except _NoLiteral:
+        return None
+    if has_str and spark.conf.get(
+            "spark.sql.parser.escapedStringLiterals", "false") == "true":
+        return None  # the escapes assume the default lexer mode
+    cols = ["`" + f.name.replace("`", "``") + "`" for f in fields]
+    if len(cols) == 1:
+        null = "CAST(NULL AS %s)" % fields[0].dataType.simpleString()
+        vals = [k[0] for k in rendered if k[0] != null]
+        terms = ["%s IN (%s)" % (cols[0], ", ".join(vals))] if vals else []
+        if len(vals) < len(rendered):
+            terms.append(cols[0] + " IS NULL")
+        return F.expr(" OR ".join(terms) or "FALSE")
+
+    def struct(xs: Sequence[str]) -> str:
+        return "named_struct(%s)" % ", ".join(
+            _esc(f.name) + ", " + x for f, x in zip(fields, xs))
+    return F.expr("%s IN (%s)" % (struct(cols), ", ".join(
+        struct(k) for k in rendered)))
+
+
+def _band_ranges(bands: dict) -> list[tuple]:
+    """Pruning conjuncts of per-column (min, max) bands."""
+    return [(c, op, v) for c, (lo, hi) in bands.items()
+            for op, v in ((">=", lo), ("<=", hi))]
 
 
 def _has_exchange(df: DataFrame) -> bool:
@@ -659,9 +695,6 @@ class Catalog:
         return r
 
 
-from .localframe import local_df as _local_df  # noqa: E402
-
-
 def _locked_mutation(fn):
     """Run a Table mutation inside the commit-store's mutation guard
     (see Table._write_lock): the posix backend serializes racing
@@ -726,6 +759,8 @@ class Table:
         # col -> HLL precision for manifest-resident NDV sketches
         # (approx_count_distinct from metadata — ndv.py)
         self.ndv_cols: dict[str, int] = {}
+        # name -> EmbeddingIndex (index.py), persisted in computed.pkl
+        self._indexes: dict = {}
         # earliest version still reconstructible: optimize(purge_before=v)
         # physically drops row-versions expired at/before v, so time travel
         # below v would silently miss rows — raise instead (see
@@ -736,9 +771,8 @@ class Table:
         # (Delta's txnAppId/txnVersion design) so foreachBatch replays
         # after a crash are detected even when the crash landed between
         # the commit swap and the meta save. insert_stream's callback
-        # arms the stamp around its insert; the next commit carries it.
+        # passes its (stream_id, batch_id) down to that commit.
         self.stream_batches: dict[str, int] = {}
-        self._pending_stream_stamp: Optional[tuple[str, int]] = None
         # the CURRENT token this handle's state reflects (pinned for a
         # mutation by _write_lock), the mutation nesting depth, and
         # _resolve_manifest's (token, snapshot) memo + segment counter
@@ -931,7 +965,7 @@ class Table:
                    "pq_m": ix.pq_m, "pq_k": ix.pq_k,
                    "pq_rerank": ix.pq_rerank, "metric": ix.metric,
                    "embed_fn": ix.embed_fn}
-            for name, ix in getattr(self, "_indexes", {}).items()}
+            for name, ix in self._indexes.items()}
         with open(tmp, "wb") as f:
             cloudpickle.dump({"__live__": self.computed,
                               "__retired__": self.computed_retired,
@@ -1302,7 +1336,7 @@ class Table:
         a job. Legacy flat files count as the whole table; the flat
         schema-bearing marker of an empty snapshot holds no rows."""
         n = max(1, int(self.n_buckets))
-        chunk = max(1, int(getattr(self, "bucket_chunk", 1)))
+        chunk = max(1, int(self.bucket_chunk))
         bkts = {self._bucket_of(f) for f in files
                 if not f.endswith("-empty.parquet")}
         if None in bkts:
@@ -1582,7 +1616,9 @@ class Table:
     def _commit_files(self, files: Sequence[str], *,
                       version: Optional[int] = None,
                       next_rowid: Optional[int] = None,
-                      schema_state: Optional[dict] = None) -> None:
+                      schema_state: Optional[dict] = None,
+                      stream_stamp: Optional[tuple[str, int]] = None
+                      ) -> None:
         """The commit point, log-structured: write ONE immutable segment
         holding only this commit's delta (files added with their footer
         stats + files removed), write a small manifest that lists the
@@ -1602,10 +1638,11 @@ class Table:
 
         The keyword arguments are the commit's stamp: the POST-commit
         `version`, `next_rowid` and, for a schema change, the complete
-        `schema_state` (see _schema_stamp). Left out, the commit is
-        storage-only (optimize, add_bloom_filter): it stamps the
-        handle's unchanged version and next_rowid. Version bumps come
-        through _commit_version."""
+        `schema_state` (see _schema_stamp), and for a streamed batch the
+        `stream_stamp` (stream_id, batch_id) its ledger records. Left
+        out, the commit is storage-only (optimize, add_bloom_filter): it
+        stamps the handle's unchanged version and next_rowid. Version
+        bumps come through _commit_version."""
         os.makedirs(os.path.join(self.path, "manifests"), exist_ok=True)
         # optimistic concurrency pre-check: if CURRENT already moved since
         # this mutation read its base snapshot, abort cheaply before the
@@ -1671,10 +1708,9 @@ class Table:
                                    else next_rowid)}
         # streaming-ingest ledger: durable WITH the data commit, so a
         # foreachBatch replay after any crash sees the batch as done
-        pending_s = getattr(self, "_pending_stream_stamp", None)
-        stream_map = dict(getattr(self, "stream_batches", {}) or {})
-        if pending_s is not None:
-            sid, bid = pending_s
+        stream_map = dict(self.stream_batches)
+        if stream_stamp is not None:
+            sid, bid = stream_stamp
             stream_map[sid] = max(int(bid), stream_map.get(sid, -1))
         if stream_map:
             manifest["stream_batches"] = stream_map
@@ -1682,9 +1718,9 @@ class Table:
             # physical-rename durability: the retired map + snapshots
             # that match the files THIS commit writes travel WITH it
             manifest["schema_state"] = schema_state
-        # NOTE: the pending stream stamp and in-memory ledger advance
-        # only after the swap succeeds (below) — a failed conditional
-        # swap must leave the stamp armed for the mutation retry
+        # NOTE: the in-memory ledger advances only after the swap
+        # succeeds (below) — a failed conditional swap leaves it as it
+        # was, and the retried mutation passes the stamp again
         # segments before the manifest, manifest before the swap: every
         # referenced object is durable by the time CURRENT can reach it
         self._atomic_write(os.path.join(self.path, srel),
@@ -1703,7 +1739,6 @@ class Table:
         self.version = manifest["version"]
         self.next_rowid = manifest["next_rowid"]
         self.stream_batches = stream_map
-        self._pending_stream_stamp = None
         # prime the resolver cache with the state just committed
         stats = {f: prev_stats[f] for f in files if _fresh(f)}
         stats.update(new_stats)
@@ -1869,7 +1904,7 @@ class Table:
         propagation prune by base rowid."""
         if _BKT in df.columns or _ROWID not in df.columns:
             return df
-        chunk = max(1, int(getattr(self, "bucket_chunk", 1)))
+        chunk = max(1, int(self.bucket_chunk))
         return df.withColumn(_BKT, _bkt_col(chunk, self.n_buckets))
 
     def _store_df(self, ranges: Optional[Sequence[tuple]] = None) -> DataFrame:
@@ -1898,6 +1933,7 @@ class Table:
                         replaced: Sequence[str] = (), *,
                         next_rowid: Optional[int] = None,
                         schema_state: Optional[dict] = None,
+                        stream_stamp: Optional[tuple[str, int]] = None,
                         propagate: Optional[Callable] = None,
                         op: Optional[str] = None, **log_kw: Any
                         ) -> list[str]:
@@ -1929,7 +1965,8 @@ class Table:
                 pass
             written = []
         self._commit_files(keep + written, version=new_v,
-                           next_rowid=next_rowid, schema_state=schema_state)
+                           next_rowid=next_rowid, schema_state=schema_state,
+                           stream_stamp=stream_stamp)
         self._persist(op, **log_kw)
         if propagate is not None:
             propagate(written)
@@ -2277,13 +2314,24 @@ class Table:
         Returns {"compacted_buckets": n, "files_before": a, "files_after": b}.
         """
         cur = self._current_files()
+        if zorder_by and not cur:
+            return {"compacted_buckets": 0, "files_before": 0,
+                    "files_after": 0}
+        by_bucket: dict[Optional[int], list[str]] = {}
+        for f in cur:
+            by_bucket.setdefault(self._bucket_of(f), []).append(f)
+        crowded = [b for b, fs in by_bucket.items()
+                   if b is not None and len(fs) > 1]
+        if not (zorder_by or None in by_bucket or crowded
+                or purge_before is not None):
+            return {"compacted_buckets": 0, "files_before": len(cur),
+                    "files_after": len(cur)}
+        store = self._store_df()
+        if purge_before is not None:
+            store = store.filter(_ccol(_VMAX) > purge_before)
+        keep: list[str] = []
+        extra = {"zorder_by": list(zorder_by)} if zorder_by else {}
         if zorder_by:
-            if not cur:
-                return {"compacted_buckets": 0, "files_before": 0,
-                        "files_after": 0}
-            store = self._store_df()
-            if purge_before is not None:
-                store = store.filter(_ccol(_VMAX) > purge_before)
             spark = self.catalog.spark
             n_out = int(target_files or spark.sparkContext.defaultParallelism)
             staged = self._zorder_expr(store, list(zorder_by))
@@ -2297,50 +2345,31 @@ class Table:
             # occupied buckets — size target_files so file ~ 128 MB.
             staged = (staged.repartitionByRange(max(n_out, 1), F.col("__z"))
                       .sortWithinPartitions(_BKT, "__z").drop("__z"))
-            self._commit_files(self._write_snapshot_files(
-                staged, preserve_partitioning=True))
-            after = self._current_files()
-            self._log("optimize", zorder_by=list(zorder_by),
-                      files_before=len(cur), files_after=len(after))
-            self._record_optimize(purge_before)
-            return {"compacted_buckets": self.n_buckets,
-                    "zorder_by": list(zorder_by),
-                    "files_before": len(cur), "files_after": len(after)}
-        by_bucket: dict[Optional[int], list[str]] = {}
-        for f in cur:
-            by_bucket.setdefault(self._bucket_of(f), []).append(f)
-        crowded = [b for b, fs in by_bucket.items()
-                   if b is not None and len(fs) > 1]
-        legacy_flat = by_bucket.get(None, [])
-        if legacy_flat:
+            written = self._write_snapshot_files(
+                staged, preserve_partitioning=True)
+            compacted = self.n_buckets
+        elif None in by_bucket:
             # legacy files have no bucket identity: a full rewrite migrates
             # to the bucketed layout and compacts in one pass
-            store = self._store_df()
-            if purge_before is not None:
-                store = store.filter(_ccol(_VMAX) > purge_before)
-            self._commit_files(self._write_snapshot_files(store))
-            after = self._current_files()
-            self._log("optimize", files_before=len(cur), files_after=len(after))
-            self._record_optimize(purge_before)
-            return {"compacted_buckets": len(by_bucket),
-                    "files_before": len(cur), "files_after": len(after)}
-        if not crowded and purge_before is None:
-            return {"compacted_buckets": 0, "files_before": len(cur),
-                    "files_after": len(cur)}
-        targets = crowded if purge_before is None else [
-            b for b in by_bucket if b is not None]
-        sub = self._store_df().filter(_ccol(_BKT).isin([int(b) for b in targets]))
-        if purge_before is not None:
-            sub = sub.filter(_ccol(_VMAX) > purge_before)
-        # one shuffle task per bucket -> exactly one output file per bucket
-        sub = sub.repartition(max(len(targets), 1), _ccol(_BKT))
-        keep = [f for f in cur if self._bucket_of(f) not in set(targets)]
-        new = self._write_snapshot_files(sub)
-        self._commit_files(keep + new)
+            written = self._write_snapshot_files(store)
+            compacted = len(by_bucket)
+        else:
+            targets = crowded if purge_before is None else [
+                b for b in by_bucket if b is not None]
+            sub = store.filter(_delta_pred(
+                self.catalog.spark, [T.StructField(_BKT, T.IntegerType())],
+                [(b,) for b in targets]))
+            # one shuffle task per bucket -> exactly one output file per bucket
+            sub = sub.repartition(max(len(targets), 1), _ccol(_BKT))
+            keep = [f for f in cur if self._bucket_of(f) not in set(targets)]
+            written = self._write_snapshot_files(sub)
+            compacted = len(targets)
+        self._commit_files(keep + written)
         after = self._current_files()
-        self._log("optimize", files_before=len(cur), files_after=len(after))
+        self._log("optimize", **extra, files_before=len(cur),
+                  files_after=len(after))
         self._record_optimize(purge_before)
-        return {"compacted_buckets": len(targets),
+        return {"compacted_buckets": compacted, **extra,
                 "files_before": len(cur), "files_after": len(after)}
 
     # -- read path ---------------------------------------------------------
@@ -2913,7 +2942,7 @@ class Table:
         self.bloom_cols.pop(name, None)
         self.ndv_cols.pop(name, None)
         # indexes over the dropped column (or backed by it) die with it
-        for iname in [k for k, ix in getattr(self, "_indexes", {}).items()
+        for iname in [k for k, ix in self._indexes.items()
                       if ix.column == name or ix.embed_col == name]:
             del self._indexes[iname]
         self._commit_schema_change("drop_column", column=name)
@@ -3005,7 +3034,7 @@ class Table:
         if old in (self.primary_key or []):
             self.primary_key = [new if c == old else c
                                 for c in self.primary_key]
-        for ix in getattr(self, "_indexes", {}).values():
+        for ix in self._indexes.values():
             if ix.column == old:
                 ix.column = new
             if ix.embed_col == old:
@@ -3136,8 +3165,6 @@ class Table:
                 f"primary key {key!r} already exists in table "
                 f"{self.name!r}")
 
-    @telemetry.traced("table.insert", attrs_fn=lambda self, *a, **k: {"table": self.name, "version": self.version})
-    @_locked_mutation
     def insert(self, rows: "list[dict] | DataFrame | TableRef | str | None" = None,
                *, source_format: Optional[str] = None,
                schema_overrides: Optional[dict] = None,
@@ -3156,9 +3183,6 @@ class Table:
         aborting the batch; the returned status carries `num_excs`.
         `return_rows=True` reads the committed slice back into
         UpdateStatus.rows (driver-bound — use only for small batches)."""
-        if on_error not in ("abort", "ignore"):
-            raise ValueError("on_error must be 'abort' or 'ignore'")
-        spark = self.catalog.spark
         if rows is None:
             if not kwargs:
                 raise ValueError(
@@ -3167,6 +3191,26 @@ class Table:
         elif kwargs:
             raise ValueError(
                 "insert: pass EITHER a source OR column kwargs, not both")
+        return self._insert(rows, source_format=source_format,
+                            schema_overrides=schema_overrides,
+                            on_error=on_error, print_stats=print_stats,
+                            return_rows=return_rows)
+
+    @telemetry.traced("table.insert", attrs_fn=lambda self, *a, **k: {"table": self.name, "version": self.version})
+    @_locked_mutation
+    def _insert(self, rows: "list[dict] | DataFrame | TableRef | str", *,
+                source_format: Optional[str] = None,
+                schema_overrides: Optional[dict] = None,
+                on_error: str = "abort", print_stats: bool = False,
+                return_rows: bool = False,
+                stream_stamp: Optional[tuple[str, int]] = None) -> int:
+        """insert()'s body, under the insert span and the mutation guard
+        (a retried attempt passes `stream_stamp` again): `stream_stamp`,
+        insert_stream's (stream_id, batch_id), is recorded by the same
+        commit as the batch's rows."""
+        if on_error not in ("abort", "ignore"):
+            raise ValueError("on_error must be 'abort' or 'ignore'")
+        spark = self.catalog.spark
         if isinstance(rows, str):
             from .sources import io as _io
             fmt = (source_format
@@ -3278,7 +3322,8 @@ class Table:
             num_excs = int(sum(v or 0 for v in obs.get.values()))
         new_files = self._commit_version(
             new_version, new_files, next_rowid=self.next_rowid + n,
-            propagate=self._propagate_insert, op="insert", rows=n)
+            stream_stamp=stream_stamp, propagate=self._propagate_insert,
+            op="insert", rows=n)
         out_rows = None
         if return_rows and new_files:
             nf = self._read_files(new_files)
@@ -3319,11 +3364,7 @@ class Table:
         def _ingest(batch_df, batch_id: int) -> None:
             if self.stream_batch_done(sid, batch_id):
                 return  # replayed batch: already durable in a manifest
-            self._pending_stream_stamp = (sid, int(batch_id))
-            try:
-                self.insert(batch_df)
-            finally:
-                self._pending_stream_stamp = None
+            self._insert(batch_df, stream_stamp=(sid, int(batch_id)))
 
         w = (source.writeStream
              .foreachBatch(_ingest)
@@ -3921,7 +3962,7 @@ class Table:
                 version_added=0, is_stored=True, is_primary_key=False,
                 is_computed=True, computed_with=repr(cc.expr), comment=None)
         indices: dict[str, IndexMetadata] = {}
-        for iname, ix in getattr(self, "_indexes", {}).items():
+        for iname, ix in self._indexes.items():
             indices[iname] = IndexMetadata(
                 name=iname, columns=[ix.column], index_type="embedding",
                 parameters={"metric": getattr(ix, "metric", "cosine"),
@@ -4266,29 +4307,28 @@ class View(Table):
     @_locked_mutation
     def _apply_base_update(self, delta_src: DataFrame, delta_rows: list,
                            bounds: Optional[tuple] = None) -> None:
-        """Incremental update/delete propagation: expire live view rows for
-        the affected base ``_rowid``s, re-run the view plan over ONLY those
-        base rows (as they now stand), append the results — unaffected rows
-        are never rescanned by the plan (reference plan.py:717-760
+        """The one maintenance step of views and rollups: expire the live
+        rows the base commit's delta names, append their fresh rows at
+        the new version (see _maintenance_rows), and commit. Unaffected
+        rows are never rescanned (reference plan.py:717-760
         create_view_update_plan).
 
         `delta_src` (the base commit's rows born or expired at the new
-        base version bv) names the affected rowids AND supplies their
-        replacement rows: the base commit re-derived every live row of
-        each rowid it touched, so those rowids' current live rows are
-        exactly the delta's born-at-bv live rows (update replacements,
-        upsert inserts; carried-over rewrites keep their old version and
-        are excluded). That holds for a table base and for a view or
-        rollup base alike — no base re-scan, no semi-join. `bounds`
-        (min/max affected `_rowid`, from the delta files' footer stats)
-        skips the bounds aggregation job.
-
-        `delta_rows` (the base's collected delta, see
-        Table._collect_delta) names the affected rowids as literals: the
-        view-file probe and the COW rewrite then filter on
-        `_rowid IN (...)` — no join, no broadcast job. A delta above the
-        literal bound joins the affected-rowid frame instead. An empty
-        delta (`delta_rows == []`) writes nothing."""
+        base version) names the affected keys (_delta_key_cols: a view's
+        `_rowid`s, a rollup's groups): born rows carry the POST-mutation
+        keys, expired row-versions the PRE-mutation keys of moved and
+        deleted rows. `delta_rows`, the base's collected delta (see
+        Table._collect_delta), holds them as literals: up to
+        _DELTA_LITERAL_MAX tuples they match through one rendered
+        predicate (_delta_pred) and prune this dependent's file probe
+        per value (a long list by its band); the rollup's base re-scan
+        prunes by the keys' min/max bands. A larger delta, or one with
+        a value no literal renders exactly, joins the distinct key frame
+        null-safely instead; keyed on `_rowid`, it still prunes by the
+        delta files' footer-stats `bounds` (an aggregation job serves
+        files without stats). Either way a NULL key matches NULL, so a
+        NULL rollup group is refreshed like the rest. An empty delta
+        (`delta_rows == []`) writes nothing."""
         new_v = self.version + 1
         if delta_rows == []:
             self._commit_version(new_v, propagate=self._propagate_changes)
@@ -4300,54 +4340,84 @@ class View(Table):
             self._full_refresh()
             self._propagate_refresh()
             return
-        # file-granular: probe which VIEW files actually hold live rows
-        # for the affected base rowids; only those files are rewritten.
-        # A one-row base update touches the one or two view files whose
-        # _rowid stats admit it, not a bucket, not the whole view.
+        cols = self._delta_key_cols(False)
+        keys = [tuple(r[c] for c in cols) for r in delta_rows]
+        hit = (_delta_pred(delta_src.sparkSession,
+                           [delta_src.schema[c] for c in cols], keys)
+               if len(keys) <= _DELTA_LITERAL_MAX else None)
         live = _vis_pred(self.version, _VVMIN, _VVMAX)
-        if len(delta_rows) <= _DELTA_LITERAL_MAX:
-            rowids = sorted({r[_ROWID] for r in delta_rows})
-            hit = _ccol(_ROWID).isin(rowids)
-
+        bands: dict[str, tuple] = {}
+        if hit is not None:
             def prepare(df):
                 return df.withColumn("__m", live & hit)
 
-            # prunes per rowid, or by the exact min/max band when long
-            ranges = [(_ROWID, "in", rowids)]
-            bounds = (rowids[0], rowids[-1])
+            def affected(df):
+                return df.filter(hit)
+
+            ranges = []
+            for i, c in enumerate(cols):
+                vals = list(dict.fromkeys(k[i] for k in keys))
+                ranges.append((c, "in", vals))
+                try:
+                    if None not in vals:
+                        bands[c] = (builtins.min(vals), builtins.max(vals))
+                except TypeError:
+                    pass  # unorderable values: no band
         else:
-            affected = delta_src.select(_ROWID).distinct()
-            aff = affected.withColumn("__aff", F.lit(True))
+            k = delta_src.select(*[F.col(c).alias(f"__k{i}")
+                                   for i, c in enumerate(cols)]).distinct()
+            on = functools.reduce(Column.__and__, [
+                F.col(c).eqNullSafe(F.col(f"__k{i}"))
+                for i, c in enumerate(cols)])
+            aff = k.withColumn("__aff", F.lit(True))
 
             def prepare(df):
-                return (df.join(aff, on=_ROWID, how="left")
+                return (df.join(aff, on=on, how="left")
                         .withColumn("__m", live & F.coalesce(
                             F.col("__aff"), F.lit(False)))
-                        .drop("__aff"))
+                        .drop("__aff", *k.columns))
 
-            # the aggregation serves delta files without footer stats
-            if bounds is None:
-                b = affected.agg(F.min(_ROWID), F.max(_ROWID)).first()
-                bounds = (int(b[0]), int(b[1]))
-            ranges = [(_ROWID, ">=", bounds[0]), (_ROWID, "<=", bounds[1])]
-        # the rowid ranges prune the view-file probe: chunked bucket
-        # assignment makes per-file _rowid ranges near-disjoint, so a
-        # narrow base change opens only the view files that can hold
-        # those rowids
+            def affected(df):
+                return df.join(k, on=on, how="left_semi")
+
+            if cols == [_ROWID]:
+                if bounds is None:
+                    b = k.agg(F.min("__k0"), F.max("__k0")).first()
+                    bounds = (int(b[0]), int(b[1]))
+                bands[_ROWID] = bounds
+            ranges = _band_ranges(bands)
+        # file-granular: the probe opens only the files whose stats admit
+        # an affected key (chunked bucket assignment keeps per-file
+        # _rowid ranges near-disjoint), and only the files holding live
+        # rows for those keys are rewritten
         sub, matched_files, _n, _pk = self._mutation_subset(
             prepare, ranges, live_col=_VVMAX)
-        # deleted base rows simply produce no replacement view rows; with
-        # no existing view rows to expire (sub None), affected base rows
-        # may still newly satisfy the view predicate
-        lo, hi = self.base._interval
-        bv = self.base.version
-        base_rows = delta_src.filter((_ccol(lo) == bv) & (_ccol(hi) > bv))
+        # with no existing rows for the affected keys (sub None), the
+        # fresh rows are a pure append
+        rows, width = self._maintenance_rows(delta_src, affected, bands,
+                                             matched_files, hit is not None)
         written = self._write_snapshot_files(
-            self._new_row_versions(new_v, sub, self._view_plan(base_rows)),
-            width=self._bucket_width(matched_files, bounds))
-        # this view's commit is the base commit of its children
+            self._new_row_versions(new_v, sub, rows), width=width)
+        # this dependent's commit is the base commit of its children
         self._commit_version(new_v, written, matched_files,
                              propagate=self._propagate_changes)
+
+    def _maintenance_rows(self, delta_src: DataFrame, affected: Callable,
+                          bands: dict, matched: Sequence[str],
+                          literal: bool) -> tuple[DataFrame, Optional[int]]:
+        """The rows _apply_base_update appends, and its write width. A
+        view's are the view plan over the delta's born-live rows: the
+        base commit re-derived every live row of each rowid it touched,
+        so those are exactly the affected rowids' current rows (carried-
+        over rewrites keep their old version and are excluded), for a
+        table, view or rollup base alike — no base re-scan. They are
+        written at the width of the matched files and the affected
+        rowid band."""
+        lo, hi = self.base._interval
+        bv = self.base.version
+        born = delta_src.filter((_ccol(lo) == bv) & (_ccol(hi) > bv))
+        return (self._view_plan(born),
+                self._bucket_width(matched, bands.get(_ROWID)))
 
     def _component_identity_cols(self) -> list[str]:
         """Base identity + one ordinal per iterator level along the view
@@ -4511,117 +4581,31 @@ class Rollup(View):
     def _delta_key_cols(self, insert: bool) -> list[str]:
         return list(self.group_cols)
 
-    @_locked_mutation
-    def _apply_base_update(self, delta_src: DataFrame, delta_rows: list,
-                           bounds: Optional[tuple] = None) -> None:
-        """The one maintenance step, for insert, update and delete alike:
-        the affected groups are the keys of the base commit's delta
-        (`delta_src`, its rows born or expired at the new base version:
-        born rows carry the POST-mutation keys, expired row-versions the
-        PRE-mutation keys of moved and deleted rows). Expire those
-        groups' live rollup rows (file-granular COW via the same
-        two-pass probe as table mutations), re-aggregate exactly those
-        groups from the base's live rows, append the fresh rows at the
-        new version.
-
-        Scale shape: a small delta (≤ _DELTA_LITERAL_MAX affected groups
-        — the common point/range mutation) is read as literal keys from
-        `delta_rows`, the base's collected delta. The keys prune both
-        sides: the rollup-file probe by per-group in-list admission, the
-        base re-scan by the keys' min/max band (effective when the group
+    def _maintenance_rows(self, delta_src: DataFrame, affected: Callable,
+                          bands: dict, matched: Sequence[str],
+                          literal: bool) -> tuple[DataFrame, Optional[int]]:
+        """A rollup re-aggregates the affected groups from the base's live
+        rows, read through the keys' bands (effective when a group
         column correlates with insert order, e.g. time buckets; the
-        stats can only admit more, never lie). A single group column
-        then matches on a null-safe IN — no join, no broadcast job.
-        Several group columns keep the null-safe join of the keys frame:
-        an OR of per-key conjunctions costs every base row one
-        comparison per key, and measured slower than the join from 64
-        keys up. The rewrite and write run at the width of the base
-        files re-aggregated. Wider deltas take the join path with no
-        pruning: the probe's column-pruned scan of the rollup
-        (O(groups), not O(base)) and a full base live-scan filtered by
-        the semi-join, at the session's confs.
-
-        A NULL group key is a group like any other: both paths match it
-        null-safely, so its rollup row is refreshed like the rest. An
-        empty delta (`delta_rows == []`) writes nothing."""
-        new_v = self.version + 1
-        if delta_rows == []:
-            self._commit_version(new_v, propagate=self._propagate_changes)
-            return
-        raw = self._read_current_raw()
-        if raw is None or _VVMIN not in raw.columns:
-            self._full_refresh()
-            self._propagate_refresh()
-            return
-        key_rows = (_literal_keys(delta_rows, self.group_cols)
-                    if len(delta_rows) <= _DELTA_LITERAL_MAX else None)
-        live = _vis_pred(self.version, _VVMIN, _VVMAX)
-        ranges: list[tuple] = []
-        base_ranges: list[tuple] = []
-        for i, g in enumerate(self.group_cols if key_rows else ()):
-            vals = list(dict.fromkeys(k[i] for k in key_rows))
-            ranges.append((g, "in", vals))
-            try:
-                if None not in vals:
-                    base_ranges += [(g, ">=", builtins.min(vals)),
-                                    (g, "<=", builtins.max(vals))]
-            except TypeError:
-                pass  # unorderable group values: no band pruning
-        if key_rows is not None and len(self.group_cols) == 1:
-            pred = _key_pred(self.group_cols[0], [k[0] for k in key_rows])
-
-            def prepare(df):
-                return df.withColumn("__m", live & pred)
-
-            def affected(df):
-                return df.filter(pred)
-        else:
-            k = delta_src.select(*[F.col(g).alias(f"__k{i}")
-                                   for i, g in enumerate(self.group_cols)]
-                                 ).distinct()
-            on = functools.reduce(Column.__and__, [
-                F.col(g).eqNullSafe(F.col(f"__k{i}"))
-                for i, g in enumerate(self.group_cols)])
-            aff = k.withColumn("__aff", F.lit(True))
-
-            def prepare(df):
-                return (df.join(aff, on=on, how="left")
-                        .withColumn("__m", live & F.coalesce(
-                            F.col("__aff"), F.lit(False)))
-                        .drop("__aff", *k.columns))
-
-            def affected(df):
-                return df.join(k, on=on, how="left_semi")
-
-        sub, matched_files, _n, _pk = self._mutation_subset(
-            prepare, ranges, live_col=_VVMAX)
-        if base_ranges and not isinstance(self.base, View):
+        stats can only admit more, never lie). Literal keys write at
+        the width of the base files re-aggregated, the action's volume;
+        a joined delta keeps the session's confs, except for the
+        rewrite of matched rollup files."""
+        if bands and not isinstance(self.base, View):
             bv = self.base.version
             base_live = self.base._store_df(
-                [(_VMIN, "<=", bv), (_VMAX, ">", bv)] + base_ranges
+                [(_VMIN, "<=", bv), (_VMAX, ">", bv)] + _band_ranges(bands)
             ).filter(_vis_pred(bv))
         else:
             base_live = self.base.df()
-        # the base rows re-aggregated are the action's volume (one rollup
-        # row per group is far less); a delta over the bound keeps the
-        # session's confs, except for the rewrite of matched rollup files
-        if key_rows is not None:
+        if literal:
             width = self.base._bucket_width(base_live.inputFiles())
         else:
-            width = self._bucket_width(matched_files) if matched_files \
-                else None
-        # with no existing rollup rows for these groups (sub None), the
-        # fresh rows are a pure append (brand-new groups)
-        written = self._write_snapshot_files(
-            self._new_row_versions(new_v, sub,
-                                   self._view_plan(affected(base_live))),
-            width=width)
-        # dependents are keyed by this rollup's group-hash rowids
-        self._commit_version(new_v, written, matched_files,
-                             propagate=self._propagate_changes)
+            width = self._bucket_width(matched) if matched else None
+        return self._view_plan(affected(base_live)), width
 
     # an insert's delta holds only born rows: the same step
-    _load_increment = _apply_base_update
+    _load_increment = View._apply_base_update
 
 
 class Snapshot:

@@ -309,7 +309,7 @@ class ColumnRef(Expr):
             raise ValueError(
                 "similarity() requires a column of a catalog table with "
                 "an embedding index (see Table.add_embedding_index)")
-        cands = [ix for ix in getattr(cat_tbl, "_indexes", {}).values()
+        cands = [ix for ix in cat_tbl._indexes.values()
                  if ix.column == self.name]
         if idx is not None:
             cands = [ix for ix in cands if getattr(ix, "name", None) == idx]

@@ -152,8 +152,6 @@ def add_embedding_index(table: Table, column: str,
     embed_col = embedding_col or f"{column}_embedding"
     if column not in table.schema and column not in table.computed:
         raise ValueError(f"table {table.name!r} has no column {column!r}")
-    if "_indexes" not in table.__dict__:
-        table._indexes = {}
     name = idx_name or f"idx{len(table._indexes)}"
     existing = next((ix for ix in table._indexes.values()
                      if ix.name == name), None)
@@ -216,7 +214,7 @@ def drop_embedding_index(table: Table, column: Optional[str] = None,
     if (column is None) == (idx_name is None):
         raise ValueError(
             "exactly one of column= or idx_name= must be given")
-    indexes = getattr(table, "_indexes", {})
+    indexes = table._indexes
     if idx_name is not None:
         matches = [(k, ix) for k, ix in indexes.items()
                    if ix.name == idx_name]

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import calendar
 import datetime as _dt
+import decimal
 import time
 
 from pyspark.sql import functions as F
@@ -106,6 +107,13 @@ def _value_sql(v) -> str:
         return "DATE '" + v.isoformat() + "'"
     if isinstance(v, (bytes, bytearray)):
         return "X'" + bytes(v).hex().upper() + "'"
+    if isinstance(v, decimal.Decimal):
+        # a BD literal parses to the BigDecimal of its digits: the same
+        # value, precision and scale as F.lit's. A positive exponent
+        # (negative scale) never comes out of a Spark decimal column
+        if not v.is_finite() or v.as_tuple().exponent > 0:
+            raise _NoLiteral
+        return format(v, "f") + "BD"
     raise _NoLiteral
 
 

@@ -344,9 +344,9 @@ class TestNullGroupKeys:
         assert self._state(r) == self._scratch(t)
 
     def test_multi_column_null_groups(self, cat):
-        """Several group columns match the literal keys through the
-        null-safe join (pruned by the keys' in-lists); a NULL in either
-        column is a group of its own."""
+        """Several group columns match the literal keys through one
+        rendered struct IN (the probe pruned by the keys' in-lists); a
+        NULL in either column is a group of its own."""
         t = cat.create_table("tm", {"g": pxt.String(True),
                                     "h": pxt.Int(True),
                                     "v": pxt.Float(True)}, n_buckets=4)
@@ -378,6 +378,58 @@ class TestNullGroupKeys:
         assert state() == scratch()
         t.delete(t.ref().v < 12.0)
         assert state() == scratch()
+
+    @pytest.mark.parametrize("literal_max", [None, 1])
+    def test_two_column_null_groups_time_travel(self, cat, monkeypatch,
+                                                literal_max):
+        """Two group columns with a NULL in either, both or neither: the
+        rendered struct IN (default bound) and the null-safe join (bound
+        1) each keep every rollup version equal to the from-scratch
+        aggregation of the base at the matching version."""
+        from pixeltable_spark import catalog as catmod
+        rendered = []
+        orig = catmod._delta_pred
+
+        def spy(*a, **k):
+            rendered.append(orig(*a, **k))
+            return rendered[-1]
+        monkeypatch.setattr(catmod, "_delta_pred", spy)
+        if literal_max is not None:
+            monkeypatch.setattr(catmod, "_DELTA_LITERAL_MAX", literal_max)
+        t = cat.create_table("t2", {"g": pxt.String(True),
+                                    "h": pxt.Int(True),
+                                    "v": pxt.Float(True)}, n_buckets=4)
+        t.insert([{"g": None if i % 4 == 0 else f"g{i % 3}",
+                   "h": None if i % 5 == 0 else i % 2, "v": float(i)}
+                  for i in range(20)])
+        r = cat.create_rollup("r2", t, ["g", "h"], {"n": ("count", None),
+                                                    "s": ("sum", "v")})
+
+        def scratch(version):
+            return sorted((tuple(row) for row in t.df(version).groupBy(
+                "g", "h").agg(F.count(F.lit(1)), F.sum("v")).collect()),
+                key=_nulls_last)
+
+        def state(version):
+            return sorted(((row["g"], row["h"], row["n"], row["s"])
+                           for row in r.df(version).collect()),
+                          key=_nulls_last)
+
+        versions = [(t.version, r.version)]
+        for step in (
+                lambda: t.insert([{"g": None, "h": None, "v": 100.0},
+                                  {"g": "g1", "h": None, "v": 1.0},
+                                  {"g": None, "h": 1, "v": 2.0}]),
+                lambda: t.update({"h": None}, where=t.ref().v == 7.0),
+                lambda: t.update({"g": None}, where=t.ref().g == "g2"),
+                lambda: t.delete(t.ref().v < 6.0)):
+            step()
+            versions.append((t.version, r.version))
+        for tv, rv in versions:
+            assert state(rv) == scratch(tv), (tv, rv)
+        if literal_max is None:   # every delta matched by its literals
+            assert len(rendered) == 4
+            assert all(p is not None for p in rendered)
 
     def test_timestamp_and_null_groups(self, cat):
         """Timestamp keys are not literal-safe (naive local-time

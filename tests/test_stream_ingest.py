@@ -116,9 +116,9 @@ class TestStreamIngest:
             raise RuntimeError("simulated crash before meta save")
 
         monkeypatch.setattr(type(t), "_save_meta", crashing)
-        t._pending_stream_stamp = ("x", 3)
+        # the stamp insert_stream's foreachBatch callback passes
         with pytest.raises(RuntimeError, match="simulated crash"):
-            t.insert([{"k": 2}])
+            t._insert([{"k": 2}], stream_stamp=("x", 3))
         monkeypatch.setattr(type(t), "_save_meta", orig)
         assert calls["n"] == 1
         # fresh handles reconcile the ledger from the committed manifest

@@ -2,8 +2,9 @@
 its base's commit delta. After every base commit, the leaf equals a
 from-scratch evaluation of the chain's view plans over the base at that
 version, with deltas on both sides of the literal bound
-(catalog._DELTA_LITERAL_MAX): a literal IN for small deltas, the join of
-the affected-rowid frame for large ones."""
+(catalog._DELTA_LITERAL_MAX): one rendered `_rowid IN (...)` predicate
+for small deltas (catalog._delta_pred), the join of the affected-rowid
+frame for large ones."""
 
 import pytest
 
