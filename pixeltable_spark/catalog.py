@@ -3965,7 +3965,7 @@ class Table:
         for iname, ix in self._indexes.items():
             indices[iname] = IndexMetadata(
                 name=iname, columns=[ix.column], index_type="embedding",
-                parameters={"metric": getattr(ix, "metric", "cosine"),
+                parameters={"metric": ix.metric,
                             "method": ix.method})
         kind = ("view" if isinstance(self, View)
                 else "snapshot" if isinstance(self, Snapshot) else "table")

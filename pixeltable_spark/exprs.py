@@ -312,7 +312,7 @@ class ColumnRef(Expr):
         cands = [ix for ix in cat_tbl._indexes.values()
                  if ix.column == self.name]
         if idx is not None:
-            cands = [ix for ix in cands if getattr(ix, "name", None) == idx]
+            cands = [ix for ix in cands if ix.name == idx]
         if not cands:
             raise ValueError(
                 f"column {self.name!r} has no embedding index"
@@ -334,18 +334,18 @@ class ColumnRef(Expr):
             qvec = [float(x) for x in
                     (q.tolist() if hasattr(q, "tolist") else q)]
         else:
-            embed = getattr(ix, "embed_fn", None)
+            embed = ix.embed_fn
             if embed is None:
                 raise ValueError(
                     f"index on {self.name!r} has no embedding function; "
                     "pass vector= instead")
             qvec = [float(x) for x in embed(q)]
-        cc = getattr(cat_tbl, "computed", {}).get(ix.embed_col)
+        cc = cat_tbl.computed.get(ix.embed_col)
         embed_type = cc.col_type if cc is not None \
             else ArrayType(ColumnType.float_())
         embed_ref = ColumnRef(ix.embed_col, embed_type, tbl=tbl)
         return SimilarityExpr(embed_ref, qvec,
-                              metric=getattr(ix, "metric", "cosine"))
+                              metric=ix.metric)
 
     def __repr__(self):
         return f"ColumnRef({self.name})"

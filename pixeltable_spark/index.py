@@ -5,13 +5,17 @@ index/embedding_index.py:24,268-297; catalog/table.py:461
 add_embedding_index): an index is a computed embedding column kept in
 sync by the normal incremental-computation machinery, plus a search API.
 
-Spark disposition (SURVEY §2.6): pgvector's ANN scan becomes
-* exact: brute-force cosine top-k -> TakeOrderedAndProject (partition-
-  local top-k, no full sort) — correct and scan-bound, the right default
-  up to ~10^8 vectors on a cluster;
-* approximate: LSH hyperplane bucketing (operators/similarity.py) with
-  the bucket id as a partition-prunable column — probing 1/2^planes of
-  the data.
+Spark disposition (SURVEY §2.6): pgvector's ANN scan becomes one Spark
+job over one resolved snapshot of the table. Each method only narrows
+the candidates:
+* exact: every live row — correct and scan-bound, the right default up
+  to ~10^8 vectors on a cluster;
+* lsh: the query's hyperplane bucket (operators/similarity.py), a
+  partition-prunable column — probing 1/2^planes of the data;
+* pq: the ADC shortlist over product-quantization codes.
+The candidates are then scored, ranked and projected in one
+TakeOrderedAndProject: each partition keeps its k best rows of just the
+user columns, the driver merges them. No join back, no full sort.
 
 The B-tree index of the reference (index/btree.py:18-31) needs no
 counterpart: batch-update lookups compile to broadcast semi-joins, which
@@ -27,7 +31,9 @@ from pyspark.sql import functions as F
 
 from .catalog import Table
 from .exceptions import AlreadyExistsError, NotFoundError
-from .operators.similarity import ann_topk_cosine, hyperplane_bucket, topk_cosine
+from .operators.similarity import (cosine_to_query, ip_to_query,
+                                  l2_to_query, lsh_candidates, pq_candidates,
+                                  pq_encode, pq_train)
 from .type_system import TypeKind
 
 
@@ -51,81 +57,58 @@ class EmbeddingIndex:
         self.embed_fn = embed_fn  # query-side embedder (None = vector-only)
         self._pq_books = None
 
-    def _vectors(self) -> DataFrame:
-        return (self.table.df()
-                .select(F.col("_rowid").alias("vec_id"),
-                        F.col(self.embed_col).alias("embedding")))
-
-    def _pq_state(self):
+    def _pq_candidates(self, live: DataFrame, query_vec: Sequence[float],
+                       k: int) -> DataFrame:
         """Lazy PQ build: codebooks trained once per index instance, codes
-        recomputed per search (at scale, persist the codes as a computed
-        column; here they derive from the live snapshot so mutations are
-        always reflected)."""
-        from .operators.similarity import pq_encode, pq_train
-        vecs = self._vectors()
+        recomputed per search from `live` (at scale, persist the codes as
+        a computed column; here they derive from the searched snapshot so
+        mutations are always reflected)."""
         if self._pq_books is None:
-            self._pq_books = pq_train(vecs, m=self.pq_m, k=self.pq_k)
-        return self._pq_books, pq_encode(vecs, self._pq_books)
+            self._pq_books = pq_train(live, vec_col=self.embed_col,
+                                      id_col="_rowid", m=self.pq_m,
+                                      k=self.pq_k)
+        codes = pq_encode(live, self._pq_books, vec_col=self.embed_col,
+                          id_col="_rowid")
+        return pq_candidates(live, codes, self._pq_books, query_vec,
+                             rerank=max(self.pq_rerank, k), id_col="_rowid")
 
     def search(self, query_vec: Sequence[float], k: int = 10,
                approximate: Optional[bool] = None) -> DataFrame:
-        """Top-k rows by cosine similarity of the indexed column.
-        Returns the full user rows with a `_similarity` column. Method:
-        'exact' = TakeOrderedAndProject brute force; 'lsh' = hyperplane
-        bucket probe; 'pq' = product-quantization ADC shortlist + exact
-        rerank; 'auto' picks lsh when n_planes>0 else exact (the
-        reference's pgvector scan analog)."""
+        """Top-k rows by the index's metric over one snapshot of the
+        table: the user columns plus `_similarity`, best first, ties by
+        rowid. Method: 'exact' = every live row; 'lsh' = hyperplane
+        bucket probe; 'pq' = product-quantization ADC shortlist; 'auto'
+        picks lsh when n_planes>0 else exact (the reference's pgvector
+        scan analog). ip and l2 always score every row: the LSH
+        hyperplanes and the PQ ADC table are cosine-calibrated, and a
+        correct answer beats a fast wrong one."""
         method = self.method
-        if method == "auto":
+        if self.metric != "cosine":
+            method = "exact"
+        elif method == "auto":
             use_ann = self.n_planes > 0 if approximate is None else approximate
             method = "lsh" if use_ann and self.n_planes > 0 else "exact"
-        vecs = self._vectors()
-        if self.metric != "cosine":
-            # ip / l2: exact TakeOrderedAndProject on the metric's score
-            # (LSH hyperplanes and the PQ ADC table are cosine-calibrated;
-            # a correct answer beats a fast wrong one for other metrics)
-            q = F.array(*[F.lit(float(x)) for x in query_vec])
-            a = F.col("embedding")
-            if self.metric == "ip":
-                score = F.aggregate(F.zip_with(a, q, lambda x, y: x * y),
-                                    F.lit(0.0), lambda acc, v: acc + v)
-                order_desc = True
-            else:  # l2 distance: nearest = smallest
-                score = F.sqrt(F.aggregate(
-                    F.zip_with(a, q, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0), lambda acc, v: acc + v))
-                order_desc = False
-            scored = vecs.select("vec_id", score.alias("_similarity"))
-            hits = scored.orderBy(
-                F.col("_similarity").desc() if order_desc
-                else F.col("_similarity").asc()).limit(k)
-            cols = self.table.column_names()
-            out = (self.table.df().join(F.broadcast(hits), on="_rowid")
-                   if "_rowid" in hits.columns else
-                   self.table.df().join(
-                       F.broadcast(hits.withColumnRenamed(
-                           "vec_id", "_rowid")), on="_rowid"))
-            return out.select(*cols, "_similarity").orderBy(
-                F.col("_similarity").desc() if order_desc
-                else F.col("_similarity").asc())
+        live = self.table.df()
         if method == "pq":
-            from .operators.similarity import pq_topk_rerank
-            books, codes = self._pq_state()
-            hits = pq_topk_rerank(vecs, codes, books, query_vec, k=k,
-                                  rerank=max(self.pq_rerank, k))
+            live = self._pq_candidates(live, query_vec, k)
         elif method == "lsh":
-            hits = ann_topk_cosine(vecs, query_vec, k=k,
-                                   n_planes=self.n_planes or 8)
+            live = lsh_candidates(live, query_vec, self.embed_col,
+                                  self.n_planes or 8)
+        if self.metric == "cosine":
+            score = F.round(cosine_to_query(self.embed_col, query_vec), 6)
+        elif self.metric == "ip":
+            score = ip_to_query(self.embed_col, query_vec)
         else:
-            hits = topk_cosine(vecs, query_vec, k=k)
-        hits = (hits.withColumnRenamed("cos", "_similarity")
-                .withColumnRenamed("vec_id", "_rowid"))
-        cols = self.table.column_names()
-        return (
-            self.table.df().join(F.broadcast(hits), on="_rowid")
-            .select(*cols, "_similarity")
-            .orderBy(F.col("_similarity").desc())
-        )
+            score = l2_to_query(self.embed_col, query_vec)
+        sim = F.col("_similarity")
+        # the tie-break `_rowid` is outside the projection: the analyzer
+        # carries it below the sort and drops it above (one DataFrame op
+        # and its analysis fewer than a trailing select)
+        return (live.select(*self.table.column_names(),
+                            score.alias("_similarity"))
+                .orderBy(sim.asc() if self.metric == "l2" else sim.desc(),
+                         F.col("_rowid"))
+                .limit(k))
 
 
 def add_embedding_index(table: Table, column: str,
@@ -231,7 +214,7 @@ def drop_embedding_index(table: Table, column: Optional[str] = None,
             "drop by idx_name=")
     key, ix = matches[0]
     del indexes[key]
-    if ix.embed_col in getattr(table, "computed", {}):
+    if ix.embed_col in table.computed:
         table.drop_column(ix.embed_col)
     table._log("drop_embedding_index", name=ix.name)
     table._save_meta()

@@ -4,10 +4,12 @@ The analog of the reference's embedding-index top-k
 (reference index/embedding_index.py:24,268-297 — pgvector ANN behind
 order_by(similarity).limit(k)), re-expressed for Spark:
 
-* brute-force top-k: cosine via zip_with+aggregate (pure JVM) then
-  orderBy desc + limit — Catalyst plans TakeOrderedAndProject: each
-  partition keeps only its local top-k, the driver merges k*partitions
-  rows. No full sort, no collect; scales linearly at 100 TB.
+* brute-force top-k: the score is one SQL expression over the vector
+  column (zip_with+aggregate, pure JVM) with the query and its norm
+  rendered as literals; orderBy + limit then plans as
+  TakeOrderedAndProject: each partition keeps only its local top-k, the
+  driver merges k*partitions rows. No full sort, no collect; scales
+  linearly at 100 TB.
 * LSH-bucketed ANN: deterministic md5-derived random-hyperplane signs
   bucket vectors; a query probes only its bucket — candidate set shrinks
   ~2^planes-fold before exact re-scoring.
@@ -18,18 +20,57 @@ order_by(similarity).limit(k)), re-expressed for Spark:
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.array import cosine_col, dot_col, norm_col
+from ..functions.array import cosine_col
+from ..localframe import _value_sql
+
+_X, _Y = "CAST(x AS DOUBLE)", "CAST(y AS DOUBLE)"
 
 
-def cosine_to_query(vec: Column, query: Sequence[float]) -> Column:
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return cosine_col(vec, q)
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _pairwise_sum(vec_col: str, query: Sequence[float], term: str) -> str:
+    """SQL for sum over i of `term`, with x = vec_col[i], y = query[i]:
+    the zip_with + aggregate of functions/array.py, as one string."""
+    q = ", ".join(_value_sql(float(v)) for v in query)
+    return (f"aggregate(zip_with({_ident(vec_col)}, array({q}), (x, y) ->"
+            f" {term}), 0D, (acc, x) -> acc + x)")
+
+
+def cosine_to_query(vec_col: str, query: Sequence[float]) -> Column:
+    """Cosine similarity of the array column `vec_col` to a constant
+    query; NULL when either vector has zero norm (functions/array.py
+    cosine_col). Built as one SQL string, one py4j call instead of ~100
+    lit/lambda calls. The query's norm is folded in as a literal: the
+    same IEEE operations, in the same order, as the per-row aggregate
+    over the query array, so the scores are bit-identical."""
+    acc = 0.0
+    for v in query:  # sum() compensates float sums from Python 3.12 on
+        acc += float(v) * float(v)
+    denom = (f"sqrt(aggregate({_ident(vec_col)}, 0D, (acc, x) ->"
+             f" acc + {_X} * {_X})) * {_value_sql(math.sqrt(acc))}")
+    dot = _pairwise_sum(vec_col, query, f"{_X} * {_Y}")
+    return F.expr(f"CASE WHEN {denom} > 0 THEN {dot} / ({denom}) END")
+
+
+def ip_to_query(vec_col: str, query: Sequence[float]) -> Column:
+    """Inner product of the array column `vec_col` with a constant query."""
+    return F.expr(_pairwise_sum(vec_col, query, f"{_X} * {_Y}"))
+
+
+def l2_to_query(vec_col: str, query: Sequence[float]) -> Column:
+    """Euclidean distance of the array column `vec_col` to a constant
+    query (smaller is nearer)."""
+    return F.expr("sqrt(" + _pairwise_sum(
+        vec_col, query, f"({_X} - {_Y}) * ({_X} - {_Y})") + ")")
 
 
 def topk_cosine(df: DataFrame, query: Sequence[float], k: int = 10,
@@ -37,7 +78,7 @@ def topk_cosine(df: DataFrame, query: Sequence[float], k: int = 10,
     """Exact top-k by cosine similarity to a query vector.
     orderBy+limit => TakeOrderedAndProject (partition-local top-k)."""
     return (
-        df.select(F.col(id_col), F.round(cosine_to_query(F.col(vec_col), query), 6).alias("cos"))
+        df.select(F.col(id_col), F.round(cosine_to_query(vec_col, query), 6).alias("cos"))
         .orderBy(F.col("cos").desc(), F.col(id_col))
         .limit(k)
     )
@@ -123,13 +164,11 @@ def hyperplane_bucket(vec: Column, n_planes: int = 8,
     return bucket
 
 
-def ann_topk_cosine(df: DataFrame, query: Sequence[float], k: int = 10,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    n_planes: int = 4) -> DataFrame:
-    """Approximate top-k: probe only the query's LSH bucket, then exact
-    re-score. At 1000 executors this turns a full scan into ~1/2^planes of
-    the data (bucket column is precomputable + partition-prunable when the
-    table is written partitioned by bucket)."""
+def lsh_candidates(df: DataFrame, query: Sequence[float],
+                   vec_col: str = "embedding", n_planes: int = 4) -> DataFrame:
+    """The rows of `df` in the query's LSH bucket — ~1/2^planes of the
+    data (the bucket is precomputable + partition-prunable when the table
+    is written partitioned by bucket)."""
     # compute the query's bucket driver-side with the same weights
     qb = 0
     for p in range(n_planes):
@@ -137,11 +176,18 @@ def ann_topk_cosine(df: DataFrame, query: Sequence[float], k: int = 10,
         proj = sum(float(x) * w for x, w in zip(query, ws))
         if proj > 0:
             qb |= 1 << p
-    cand = df.withColumn(
-        "__bkt",
-        hyperplane_bucket(F.col(vec_col), n_planes, dim=len(query)),
-    ).filter(F.col("__bkt") == qb)
-    return topk_cosine(cand, query, k, vec_col, id_col)
+    return df.filter(
+        hyperplane_bucket(F.col(vec_col), n_planes, dim=len(query)) == qb)
+
+
+def ann_topk_cosine(df: DataFrame, query: Sequence[float], k: int = 10,
+                    vec_col: str = "embedding", id_col: str = "vec_id",
+                    n_planes: int = 4) -> DataFrame:
+    """Approximate top-k: probe only the query's LSH bucket, then exact
+    re-score. At 1000 executors this turns a full scan into ~1/2^planes of
+    the data."""
+    return topk_cosine(lsh_candidates(df, query, vec_col, n_planes),
+                       query, k, vec_col, id_col)
 
 
 def knn_join(left: DataFrame, right: DataFrame, k: int = 5,
@@ -337,22 +383,25 @@ def pq_topk(codes_df: DataFrame, codebooks, query, k: int = 10,
             .limit(k))
 
 
+def pq_candidates(df: DataFrame, codes_df: DataFrame, codebooks, query,
+                  rerank: int = 100, id_col: str = "vec_id") -> DataFrame:
+    """The rows of `df` in the ADC shortlist of `rerank` candidates
+    (table lookups over compressed codes — the only full pass), fetched
+    by a broadcast semi-join."""
+    short = pq_topk(codes_df, codebooks, query, k=rerank, id_col=id_col)
+    return df.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
+
+
 def pq_topk_rerank(df: DataFrame, codes_df: DataFrame, codebooks, query,
                    k: int = 10, rerank: int = 100,
                    vec_col: str = "embedding",
                    id_col: str = "vec_id") -> DataFrame:
-    """The production PQ pattern: ADC shortlist of `rerank` candidates
-    (table lookups over compressed codes — the only full pass), then
-    exact re-scoring of just those candidates against their original
-    vectors (semi-join fetch, tiny). Recall approaches exact search as
-    `rerank`/`k` grows while the full-scan cost stays at M bytes/vector."""
-    short = pq_topk(codes_df, codebooks, query, k=rerank, id_col=id_col)
-    cand = df.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
-    return (cand.select(id_col,
-                        F.round(cosine_to_query(F.col(vec_col), query), 6)
-                        .alias("cos"))
-            .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-            .limit(k))
+    """The production PQ pattern: ADC shortlist, then exact re-scoring of
+    just those candidates against their original vectors. Recall
+    approaches exact search as `rerank`/`k` grows while the full-scan
+    cost stays at M bytes/vector."""
+    return topk_cosine(pq_candidates(df, codes_df, codebooks, query, rerank,
+                                     id_col), query, k, vec_col, id_col)
 
 
 def pq_encode_bucketed(df: DataFrame, codebooks,

@@ -116,7 +116,7 @@ class TestIvfPq:
         cand = df.join(short.select("vec_id"), "vec_id", "left_semi")
         from pyspark.sql import functions as F
         best = (cand.select("vec_id",
-                            S.cosine_to_query(F.col("embedding"), q)
+                            S.cosine_to_query("embedding", q)
                             .alias("cos"))
                 .orderBy(F.col("cos").desc()).first())
         assert best["vec_id"] == qi
