@@ -40,8 +40,10 @@ import functools
 import json
 import os
 import shutil
+import threading
 import time
 import uuid as _uuid
+from collections import OrderedDict
 from contextlib import contextmanager
 from typing import Any, Callable, Optional, Sequence
 
@@ -85,6 +87,10 @@ _IN_PRUNE_MAX = 64
 # rendered string builds in ~1-3 ms at any of these sizes, so the
 # crossover wants re-measuring; until then the bound stays
 _DELTA_LITERAL_MAX = 256
+# read frames a handle keeps (Table._frames), least recently used out
+# first: the live snapshot, its pruned scans and a few time-travel reads
+_FRAMES_MAX = 8
+_FRAMES_LOCK = threading.Lock()
 
 
 @functools.lru_cache(maxsize=None)
@@ -112,6 +118,13 @@ def _bkt_col(chunk: int, n_buckets: int) -> Column:
     for every store read of every commit."""
     return F.pmod(F.floor(_ccol(_ROWID) / F.lit(chunk)),
                   F.lit(n_buckets)).cast("int")
+
+
+def _stage(entry: dict, part, build: Callable[[], DataFrame]) -> DataFrame:
+    """`entry[part]` of a read-frame memo entry (Table._frames), built on
+    first use; of two racing builds the first stored wins."""
+    df = entry.get(part)
+    return df if df is not None else entry.setdefault(part, build())
 
 
 def _collect_bounded(df: DataFrame, width: int) -> list:
@@ -398,6 +411,19 @@ class Catalog:
         os.makedirs(root, exist_ok=True)
         self._tables: dict[str, Table] = {}
         self._gc_tombstones()
+
+    @property
+    def spark(self) -> SparkSession:
+        """The catalog's session; once it is stopped, the active one, so
+        a restarted application keeps its catalog and table handles."""
+        s = self._spark
+        if s._sc._jsc is None:
+            s = self._spark = SparkSession.getActiveSession() or s
+        return s
+
+    @spark.setter
+    def spark(self, s: SparkSession) -> None:
+        self._spark = s
 
     def _gc_tombstones(self) -> None:
         """Reap half-deleted namespace trees. drop_dir/drop_table commit
@@ -780,6 +806,8 @@ class Table:
         self._lock_depth = 0
         self._resolve_cache: Optional[tuple[str, dict]] = None
         self._segment_reads = 0
+        # memoized read frames, keyed per resolved file set (_frames)
+        self._frame_memo: OrderedDict = OrderedDict()
         # versioned schema: one snapshot per schema-changing version, so
         # time travel and revert see the columns AS OF that version
         # (reference: schema_version in catalog metadata,
@@ -1863,32 +1891,51 @@ class Table:
         return self._waist_rename(
             rd.parquet(*[os.path.join(self.path, f) for f in files]))
 
-    def _read_current_raw(self, ranges: Optional[Sequence[tuple]] = None
-                          ) -> Optional[DataFrame]:
-        """The current snapshot as a raw DataFrame (system + user columns,
-        no visibility filter), or None when the table has no files yet.
-        `ranges` = (col, op, literal) conjuncts for manifest-stats file
-        skipping; pruning everything still returns an empty-but-typed
-        scan over one file so the schema survives."""
+    def _frames(self, ranges: Optional[Sequence[tuple]] = None) -> dict:
+        """The memo entry of this handle's snapshot read, its files
+        pruned by `ranges` ((col, op, literal) conjuncts for manifest-
+        stats file skipping). The key is everything the frames depend
+        on: session, table path, resolved files (names are content-
+        unique), reader schema, phys_map and bucket formula, so no
+        frame of a superseded snapshot, schema or session is served.
+        "raw" is the files through the read waist, without visibility
+        filter (None without files; `limit(0)` over one file when
+        pruning refutes every file, so the schema survives); _stage
+        builds the rest on first use."""
         tr = self._translate_ranges(ranges) if ranges else ()
         snap = self._snapshot(tr)
         files = (self._prune_files(snap["files"], snap["stats"], tr)
                  if tr else snap["files"])
-        if not files:
+        pruned_all = not files
+        if pruned_all:
             # no row can match, but the caller still applies the
             # row-level predicate: one file keeps the schema (a replay
             # that skipped every segment holds none — resolve in full)
-            files = snap["files"] or (self._current_files() if tr else [])
-            if not files:
-                return None
-            return self._read_files(files[:1]).limit(0)
-        inferred = self._reader_schema() is None
-        out = self._read_files(files)
-        if inferred:
+            files = (snap["files"] or (self._current_files() if tr
+                                       else []))[:1]
+        rs = self._reader_schema()
+        key = (self.catalog.spark, self.path, tuple(files), pruned_all,
+               rs and rs.json(), tuple(sorted(self.phys_map.items())),
+               self.bucket_chunk, self.n_buckets)
+        memo = self._frame_memo
+        with _FRAMES_LOCK:
+            entry = memo.get(key)
+            if entry is not None:
+                memo.move_to_end(key)
+                return entry
+        raw = self._read_files(files) if files else None
+        if pruned_all and raw is not None:
+            raw = raw.limit(0)
+        elif rs is None and raw is not None:
             # only views infer, and a view's columns are never renamed:
             # the read schema is the file schema
-            self._note_file_schema(out.schema)
-        return out
+            self._note_file_schema(raw.schema)
+        with _FRAMES_LOCK:
+            entry = memo.setdefault(key, {"raw": raw})
+            memo.move_to_end(key)
+            while len(memo) > _FRAMES_MAX:
+                memo.popitem(last=False)
+        return entry
 
     def _has_data(self) -> bool:
         return bool(self._current_files())
@@ -1907,14 +1954,21 @@ class Table:
         chunk = max(1, int(self.bucket_chunk))
         return df.withColumn(_BKT, _bkt_col(chunk, self.n_buckets))
 
-    def _store_df(self, ranges: Optional[Sequence[tuple]] = None) -> DataFrame:
-        """All row-versions, including expired ones (+ `_bkt`)."""
-        raw = self._read_current_raw(ranges)
-        if raw is None:
-            spark = self.catalog.spark
-            return self._with_bkt(
-                spark.createDataFrame([], self._store_schema()))
-        return self._with_bkt(raw)
+    def _store_df(self, ranges: Optional[Sequence[tuple]] = None,
+                  entry: Optional[dict] = None) -> DataFrame:
+        """All row-versions, including expired ones (+ `_bkt`), of the
+        memo `entry` (default: this snapshot's, pruned by `ranges`)."""
+        e = self._frames(ranges) if entry is None else entry
+        return _stage(e, "store", lambda: self._with_bkt(
+            e["raw"] if e["raw"] is not None else self.catalog.spark
+            .createDataFrame([], self._store_schema())))
+
+    def _live(self, v: int, ranges: Sequence[tuple] = ()) -> tuple:
+        """(memo entry, rows live at v) over the files whose stats admit
+        v and `ranges`: time travel opens only files that existed at v."""
+        e = self._frames([(_VMIN, "<=", v), (_VMAX, ">", v), *ranges])
+        return e, _stage(e, ("live", v), lambda: self._store_df(
+            entry=e).filter(_vis_pred(v)))
 
     def _store_schema(self) -> T.StructType:
         fields = [
@@ -2410,16 +2464,12 @@ class Table:
 
     def df(self, version: Optional[int] = None) -> DataFrame:
         """Live rows at a version (default: current) — the version-interval
-        visibility predicate (reference store.py:39-42)."""
+        visibility predicate (reference store.py:39-42). Until the
+        snapshot, schema or version moves, every call returns the same
+        memoized DataFrame (_frames)."""
         if version is None:
             self._sync_latest()
-        v = self._validate_version(version)
-        # manifest-stats skipping: a file whose every row was created
-        # after v (or expired at/before v) never opens — time travel on a
-        # 100 TB table reads only the files that existed at v
-        ranges = [(_VMIN, "<=", v), (_VMAX, ">", v)]
-        return self._store_df(ranges).filter(
-            _vis_pred(v))
+        return self._live(self._validate_version(version))[1]
 
     def user_df(self, version: Optional[int] = None) -> DataFrame:
         if version is None:
@@ -2452,41 +2502,9 @@ class Table:
     def ref(self, version: Optional[int] = None) -> TableRef:
         """Bind as a queryable TableRef (system cols hidden, _rowid kept as
         the insertion-order key for head/tail/sample). A pinned version
-        binds the schema AS OF that version (snapshot projection)."""
-        if version is not None:
-            v = self._validate_version(version)
-            snap = self._schema_at(v)
-            if snap is not None:
-                proj = [_ccol(_ROWID)] + [
-                    F.col(phys).alias(logical)
-                    for logical, phys, _t, _c in snap["cols"]]
-                schema_v = {_ROWID: ColumnType.int_(False)}
-                schema_v.update({logical: ColumnType.from_dict(tdict)
-                                 for logical, _p, tdict, _c in snap["cols"]})
-                tr = TableRef(self.df(v).select(*proj), self.name,
-                              schema_v, rowid_cols=[_ROWID])
-                tr._catalog_tbl = self
-                tr._pinned_version = version
-                return tr
-        df = self.df(version)
-        schema = dict(self.schema)
-        for cc in self.computed.values():
-            schema[cc.name] = cc.col_type
-        keep = [_ROWID] + list(schema)
-        schema_with_rowid = {_ROWID: ColumnType.int_(False), **schema}
-        for cc in self.computed.values():
-            if cc.on_error == "ignore":
-                md = _cellmd_col(cc.name)
-                keep.append(md)
-                schema_with_rowid[md] = ColumnType.json()
-        tr = TableRef(df.select(*keep), self.name, schema_with_rowid,
-                      rowid_cols=[_ROWID])
-        # backpointer for query-handle mutations (Query.update/delete/
-        # recompute_columns, reference _query.py:1800-1875); a pinned
-        # version marks the handle immutable (snapshot semantics)
-        tr._catalog_tbl = self
-        tr._pinned_version = version
-        return tr
+        binds the schema AS OF that version (snapshot projection).
+        Memoized with df()'s frame."""
+        return self.scan(version=version)
 
     @staticmethod
     def _extract_ranges(pred) -> list[tuple]:
@@ -2540,23 +2558,37 @@ class Table:
         """Pruned read: drops data files via manifest min/max stats for
         the simple conjuncts of `where` BEFORE Spark ever lists them,
         then applies the full predicate row-level. Returns a Query
-        (TableRef when where is None). On a 100 TB table a selective
-        scan opens only the files whose stats admit matches — the
-        Delta/Iceberg data-skipping read path."""
+        (`scan()` is `ref()`). On a 100 TB table a selective scan opens
+        only the files whose stats admit matches — the Delta/Iceberg
+        data-skipping read path. The projected frame is memoized per
+        pruned file set (_frames)."""
+        if version is None:
+            self._sync_latest()
         v = self._validate_version(version)
-        ranges = [(_VMIN, "<=", v), (_VMAX, ">", v)]
-        if where is not None:
-            ranges += self._extract_ranges(where)
-        df = self._store_df(ranges).filter(
-            _vis_pred(v))
-        schema = dict(self.schema)
-        for cc in self.computed.values():
-            schema[cc.name] = cc.col_type
-        keep = [_ROWID] + list(schema)
-        schema_with_rowid = {_ROWID: ColumnType.int_(False), **schema}
-        ref = TableRef(df.select(*keep), self.name, schema_with_rowid,
-                       rowid_cols=[_ROWID])
-        return ref.where(where) if where is not None else ref
+        snap = self._schema_at(v) if version is not None else None
+        schema = {_ROWID: ColumnType.int_(False)}
+        if snap is not None:
+            proj = [(_ROWID, _ROWID)] + [(phys, logical) for logical, phys,
+                                         _t, _c in snap["cols"]]
+            schema.update({logical: ColumnType.from_dict(tdict)
+                           for logical, _p, tdict, _c in snap["cols"]})
+        else:
+            schema.update(self.schema)
+            schema.update({c.name: c.col_type for c in self.computed.values()})
+            schema.update({_cellmd_col(c.name): ColumnType.json() for c in
+                           self.computed.values() if c.on_error == "ignore"})
+            proj = [(c, c) for c in schema]
+        ranges = self._extract_ranges(where) if where is not None else ()
+        e, live = self._live(v, ranges)
+        df = _stage(e, ("ref", v, tuple(proj)), lambda: live.select(
+            *[p if p == a else F.col(p).alias(a) for p, a in proj]))
+        tr = TableRef(df, self.name, schema, rowid_cols=[_ROWID])
+        # backpointer for query-handle mutations (Query.update/delete/
+        # recompute_columns, reference _query.py:1800-1875); a pinned
+        # version marks the handle immutable (snapshot semantics)
+        tr._catalog_tbl = self
+        tr._pinned_version = version
+        return tr.where(where) if where is not None else tr
 
     def column_names(self) -> list[str]:
         return list(self.schema) + list(self.computed)
@@ -4333,7 +4365,7 @@ class View(Table):
         if delta_rows == []:
             self._commit_version(new_v, propagate=self._propagate_changes)
             return
-        raw = self._read_current_raw()
+        raw = self._frames()["raw"]
         if raw is None or _VVMIN not in raw.columns:
             # legacy pre-versioning storage: no interval columns to expire —
             # a full refresh rebuilds (and migrates the layout in one pass)
@@ -4458,11 +4490,10 @@ class View(Table):
         catalog/view.py:43-45)."""
         if version is None:
             self._sync_latest()
-        raw = self._read_current_raw()
+        e = self._frames()
+        raw = e["raw"]
         if raw is None:
             raise ValueError(f"view {self.name!r} has no materialized data")
-        if _BKT in raw.columns:  # storage detail, recomputable from _rowid
-            raw = raw.drop(_BKT)
         v = self.version if version is None else version
         if version is not None and (version > self.version or version < 0):
             raise NotFoundError(
@@ -4473,9 +4504,14 @@ class View(Table):
                 f"view {self.name!r} version {version} predates the last "
                 f"full refresh (floor={self._version_floor}) and is no "
                 "longer reconstructible")
-        if _VVMIN in raw.columns:
-            return raw.filter(_vis_pred(v, _VVMIN, _VVMAX))
-        return raw  # pre-versioning storage (legacy)
+
+        def build() -> DataFrame:
+            # _bkt is a storage detail, recomputable from _rowid
+            df = raw.drop(_BKT) if _BKT in raw.columns else raw
+            if _VVMIN in df.columns:
+                return df.filter(_vis_pred(v, _VVMIN, _VVMAX))
+            return df  # pre-versioning storage (legacy)
+        return _stage(e, ("view", v), build)
 
     def ref(self, version: Optional[int] = None) -> TableRef:
         tr = TableRef.from_df(self.df(version), self.name,

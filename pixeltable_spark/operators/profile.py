@@ -26,12 +26,32 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 NUMERIC_PREFIXES = ("int", "bigint", "smallint", "tinyint", "float",
                     "double", "decimal")
+# exact mean: each double rounds to 18 decimal places (a per-value
+# rounding, so the sum no longer depends on the order partitions merge
+# in); |sum| < 1e20 fits
+_MEAN_DEC = T.DecimalType(38, 18)
+
+
+def _exact_mean(x: Column) -> Column:
+    """Mean of double `x` that does not depend on partitioning: the
+    decimal sum is exact, and rounding it once to a double before the
+    division gives the value a correctly rounded (fsum) double sum
+    gives. A float `avg` sums in merge order, so a mean on a rounding
+    boundary (q87: 0.0499185) flipped its 6th decimal between runs.
+    NaN, infinities and values or sums outside the decimal range fall
+    back to `avg`."""
+    dec = x.try_cast(_MEAN_DEC)
+    total = F.try_sum(dec)
+    exact = (F.count(dec) == F.count(x)) & total.isNotNull()
+    return F.when(exact, total.cast("double") / F.count(x)).otherwise(
+        F.avg(x)).cast("double")
 
 
 def profile_table(df: DataFrame, cols: Sequence[str] | None = None,
@@ -85,7 +105,7 @@ def profile_table(df: DataFrame, cols: Sequence[str] | None = None,
             .cast("double").alias("n_null"),
             F.min("value").cast("double").alias("min"),
             F.max("value").cast("double").alias("max"),
-            F.avg("value").cast("double").alias("mean"),
+            _exact_mean(F.col("value")).alias("mean"),
             F.percentile(F.col("value"), pcts).alias("__pcts"))
         dist = df.agg(*[F.count_distinct(F.col(c)).cast("double")
                         .alias(f"__d{i}") for i, c in enumerate(cols)])

@@ -25,6 +25,20 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def parquet_reads(monkeypatch):
+    """Counts DataFrameReader.parquet calls: one per read frame built."""
+    from pyspark.sql.readwriter import DataFrameReader
+    calls = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        calls.append(paths)
+        return real(self, *paths, **kw)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def test_tbl(spark):
     """100-row workhorse table mirroring the reference fixture

@@ -176,3 +176,41 @@ def test_chain_update_budget(spark, world):
     b = view.df().filter(F.col("half") >= 600.0).select("k", "half")
     c = child.df().select("k", "half")
     assert c.exceptAll(b).count() == 0 and b.exceptAll(c).count() == 0
+
+
+def test_repeated_reads_build_no_read(spark, world, parquet_reads):
+    """On an unchanged snapshot, a repeated ref(), df(), pruned scan and
+    time travel reuse the memoized frame: no read is planned again."""
+    t = world["t"]
+
+    def reads():
+        t.ref()
+        t.df()
+        t.scan(where=t.ref().k == 77)
+        t.df(version=t.version - 1)
+    reads()
+    parquet_reads.clear()
+    reads()
+    assert parquet_reads == []
+
+
+def test_read_job_budget(spark, world, parquet_reads):
+    """Jobs per lookup, range count and time-travel count, as the
+    benchmark runs them, when repeated on an unchanged snapshot: one
+    job per lookup, at most two per count, and no read built again."""
+    t = world["t"]
+    v = t.version - 1
+    ops = {
+        "lookup": (lambda: t.scan(where=t.ref().k == 77).df()
+                   .select("k", "q").collect(), 1),
+        "range": (lambda: t.scan(where=(t.ref().k >= 100)
+                                 & (t.ref().k < 300)).df().count(), 2),
+        "timetravel": (lambda: t.df(version=v).count(), 2),
+    }
+    for name, (fn, budget) in ops.items():
+        first, _, _ = _cost(spark, fn)
+        parquet_reads.clear()
+        again, jobs, _ = _cost(spark, fn)
+        assert again == first, name
+        assert jobs <= budget, (name, jobs)
+        assert parquet_reads == [], name

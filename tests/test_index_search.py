@@ -121,6 +121,18 @@ def test_search_is_one_job(spark, world, name):
     assert jobs == 1, jobs
 
 
+def test_repeated_search_builds_no_read(spark, world, parquet_reads):
+    """A repeated search on an unchanged snapshot scores the memoized
+    live frame (Table.df): one job and no read planned again."""
+    ix = world["idx"]["cosine"]
+    first = ix.search(QUERY, k=10).collect()
+    parquet_reads.clear()
+    rows, jobs, _ = _cost(spark, lambda: ix.search(QUERY, k=10).collect())
+    assert rows == first
+    assert jobs == 1, jobs
+    assert parquet_reads == []
+
+
 def test_pq_search_jobs(spark, world):
     ix = world["idx"]["pq"]
     # the first search trains the codebooks (one collect), later ones not

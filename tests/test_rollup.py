@@ -63,7 +63,7 @@ class TestRollupMaintenance:
         t, r = _mk(cat, n=100, groups=5)
         v_before = r.version
         t.update({"v": 12345.0}, where=t.ref().g == "g0")
-        raw = r._read_current_raw()
+        raw = r._frames()["raw"]
         live = raw.filter(F.col("_vv_max") > r.version) \
                   .select("g", "_vv_min").collect()
         vmin = {row["g"]: row["_vv_min"] for row in live}

@@ -93,6 +93,33 @@ class TestProfile:
         assert math.isclose(out[("x", "p50")], float(np.percentile(xs, 50)))
         assert math.isclose(out[("x", "p25")], float(np.percentile(xs, 25)))
 
+    def test_exact_mean_independent_of_partitioning(self, spark):
+        """Cent-valued doubles, as in q87's l_discount, whose mean sits
+        on a 6-decimal rounding boundary: a float sum's last bits follow
+        the order partitions merge in. The exact mean is the same at
+        every input partitioning and shuffle width, and equals the
+        correctly rounded double sum over the count."""
+        from pixeltable_spark import tinyplan
+        rng = np.random.RandomState(3)
+        xs = [float(v) / 100 for v in rng.randint(0, 11, 6000)]
+        assert sum(xs) != sum(reversed(xs))   # the data is order-sensitive
+        df = spark.createDataFrame([(x,) for x in xs], "x double")
+
+        def mean(parts: int, width: int) -> float:
+            prof = profile_table(df.repartition(parts), ["x"])
+            return {r.stat: r.value for r in tinyplan.narrow(
+                prof, width).collect()}["mean"]
+        got = {mean(p, w) for p, w in ((1, 1), (3, 2), (8, 5), (13, 7))}
+        assert got == {math.fsum(xs) / len(xs)}
+
+    def test_exact_mean_falls_back_outside_decimal_range(self, spark):
+        df = spark.createDataFrame([(1e300,), (3e300,), (None,)], "x double")
+        out = {r.stat: r.value for r in profile_table(df, ["x"]).collect()}
+        assert out["mean"] == 2e300
+        df = spark.createDataFrame([(1.0,), (float("nan"),)], "x double")
+        out = {r.stat: r.value for r in profile_table(df, ["x"]).collect()}
+        assert math.isnan(out["mean"])
+
     def test_no_numeric_cols_returns_empty(self, spark):
         df = spark.createDataFrame([("a",), ("b",)], "s string")
         out = profile_table(df)  # no numeric columns -> empty, not py4j err
